@@ -111,7 +111,7 @@ def drain(n_urls: int | None = None) -> None:
                             "image_id": pdf["image_id"],
                             "w": [16] * n, "h": [16] * n,
                             "fmt": ["png"] * n, "caption": ["c"] * n,
-                            "phash": [0] * n, "fetch_ok": [True] * n,
+                            "fetch_ok": [True] * n,
                             "pixels_ok": [True] * n, "caption_ok": [True] * n,
                             "psnr_db": [99.0] * n, "valid": [True] * n,
                         })

@@ -36,6 +36,9 @@ from pyspark.sql import DataFrame, SparkSession
 
 OVERWRITE = "overwrite"
 APPEND = "append"
+# manifest keys naming a seen-filter sidecar file under ``_bloom/``
+# (plans/round.save_bloom_sidecar / save_cuckoo_sidecar)
+SIDECAR_KEYS = ("bloom", "cuckoo")
 
 
 class IncrementalReadError(RuntimeError):
@@ -453,11 +456,11 @@ class SnapshotCatalog:
                 "round": base["round"],
                 "tables": tables,
                 # durable properties ride through, same as commit();
-                # bloom stays valid — it is a SUPERSET guarantee and
-                # deleting rows only shrinks the true set
+                # the filter sidecars stay valid — they are a SUPERSET
+                # guarantee and deleting rows only shrinks the true set
                 **{
                     k: base[k]
-                    for k in ("stream_batches", "bloom")
+                    for k in ("stream_batches", *SIDECAR_KEYS)
                     if k in base
                 },
             }
@@ -610,11 +613,11 @@ class SnapshotCatalog:
             ).sortWithinPartitions(*sort_by)
         else:
             df = df.coalesce(int(n_files))
-        # carry the Bloom sidecar reference forward: compaction changes
-        # layout, not keys, so the bitmap's superset invariant holds —
-        # dropping the reference would silently cost resumes the sidecar
-        # (cold rebuild fallback) and let vacuum prune a live bitmap
-        extra = {"bloom": m["bloom"]} if "bloom" in m else None
+        # carry the filter sidecar references forward: compaction changes
+        # layout, not keys, so the filters' superset invariant holds —
+        # dropping a reference would silently cost resumes the sidecar
+        # (cold rebuild fallback) and let vacuum prune a live filter
+        extra = {k: m[k] for k in SIDECAR_KEYS if k in m} or None
         return self.commit(
             m["round"], {table: (df, OVERWRITE)}, extra=extra
         )
@@ -650,13 +653,13 @@ class SnapshotCatalog:
                     deleted.append(str(vdir))
         bloom_dir = self.root / "_bloom"
         if bloom_dir.is_dir():
-            keep_blooms = set()
+            keep_sidecars = set()
             for v in range(max(1, current - keep_versions + 1), current + 1):
-                entry = self.manifest(v).get("bloom")
-                if entry:
-                    keep_blooms.add(entry["file"])
+                m = self.manifest(v)
+                keep_sidecars.update(m[k]["file"] for k in SIDECAR_KEYS
+                                     if m.get(k))
             for f in bloom_dir.iterdir():
-                if f.name not in keep_blooms:
+                if f.name not in keep_sidecars:
                     f.unlink()
                     deleted.append(str(f))
         return deleted

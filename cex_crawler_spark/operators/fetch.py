@@ -3,14 +3,16 @@
 The reference fetches one URL at a time inside a Playwright browser with
 2-5 s sleeps (/root/reference/exchange/base_scraper.py:78-164).  The
 engine's fetch is a ``mapInPandas`` stage over the scheduled batch:
-each Arrow batch of frontier rows yields payload rows (bytes + metadata
-+ caption).  In production this function body would issue concurrent
-HTTP requests per batch; in the sandbox it calls the deterministic
-payload synthesizer (payload.payload_for) — same plumbing, no network.
+each Arrow batch of frontier rows yields one verdict row per URL
+(metadata + caption + validation verdict; the bytes stay in the
+worker).  In production this function body would issue concurrent HTTP
+requests per batch; in the sandbox it calls the deterministic page
+synthesizer (payload.page_for) — same plumbing, no network.
 
 Scale notes:
-- the batch is ``repartition(url_hash)``-spread so no executor fetches
-  one hot host's whole budget alone;
+- the batch is ``repartition(image_id)``-spread so no executor fetches
+  one hot host's whole budget alone, and every row of one resource
+  lands in one task (see :func:`fetch_and_validate`);
 - Arrow batch size is capped in session config so wide binary rows
   don't blow worker memory;
 - fetch errors surface as a ``fetch_ok`` column, never as task failures
@@ -27,77 +29,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 from pyspark.sql import functions as F
 
-FETCH_RESULT_SCHEMA = T.StructType(
-    [
-        T.StructField("url_hash", T.LongType()),
-        T.StructField("image_id", T.StringType()),
-        T.StructField("bytes", T.BinaryType()),
-        T.StructField("w", T.IntegerType()),
-        T.StructField("h", T.IntegerType()),
-        T.StructField("fmt", T.StringType()),
-        T.StructField("caption", T.StringType()),
-        T.StructField("phash", T.LongType()),
-        T.StructField("fetch_ok", T.BooleanType()),
-    ]
-)
-
-
-def fetch_batch(scheduled: DataFrame, parallelism: int | None = None) -> DataFrame:
-    """Fetch payloads for scheduled rows → (url_hash, payload…, fetch_ok).
-
-    The input arrives partitioned BY HOST (the politeness window's
-    partitioning) — a hot host would serialize its whole budget through
-    one Python worker.  Repartition on image_id: work still spreads over
-    every core (hash-distributed), and all rows sharing a payload land in
-    ONE task, so the per-task memo below fetches each distinct resource
-    exactly once instead of once per referencing URL (guide §8: decide /
-    compute on the distinct key, attach to the heavy row set once).  With
-    unique-per-URL resources this degrades to exactly the old behaviour.
-    """
-    src = scheduled.select("url_hash", "image_id")
-    if parallelism is None:
-        parallelism = scheduled.sparkSession.sparkContext.defaultParallelism
-    src = src.repartition(parallelism, F.col("image_id"))
-
-    def run(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from ..payload import payload_for
-
-        _FAIL = {
-            "bytes": None, "w": None, "h": None, "fmt": None,
-            "caption": None, "phash": None, "fetch_ok": False,
-        }
-        memo: dict[str, dict] = {}
-
-        def fetch_one(image_id: str) -> dict:
-            p = memo.get(image_id)
-            if p is None:
-                try:
-                    p = payload_for(image_id)
-                    p["fetch_ok"] = True
-                except Exception:
-                    p = dict(_FAIL, image_id=image_id)
-                memo[image_id] = p
-            return p
-
-        cols = [f.name for f in FETCH_RESULT_SCHEMA]
-        for pdf in it:
-            payloads = [fetch_one(i) for i in pdf["image_id"]]
-            out = pd.DataFrame(
-                {
-                    "url_hash": pdf["url_hash"].astype("int64"),
-                    **{
-                        c: [p[c] for p in payloads]
-                        for c in cols
-                        if c != "url_hash"
-                    },
-                },
-                columns=cols,
-            )
-            yield out
-
-    return src.mapInPandas(run, schema=FETCH_RESULT_SCHEMA)
-
-
 FETCH_VERDICT_SCHEMA = T.StructType(
     [
         T.StructField("url_hash", T.LongType()),
@@ -106,7 +37,6 @@ FETCH_VERDICT_SCHEMA = T.StructType(
         T.StructField("h", T.IntegerType()),
         T.StructField("fmt", T.StringType()),
         T.StructField("caption", T.StringType()),
-        T.StructField("phash", T.LongType()),
         T.StructField("fetch_ok", T.BooleanType()),
         T.StructField("pixels_ok", T.BooleanType()),
         T.StructField("caption_ok", T.BooleanType()),
@@ -147,6 +77,12 @@ def fetch_and_validate(
     Splitting fetch and validate into two stages would ship every
     payload across Arrow twice — measured 2× slower at 1M URLs.
 
+    The fetch is :func:`payload.page_for` — what a GET returns — and the
+    stage computes nothing the round does not store: the payload
+    table's perceptual hash is never derived here (a Python UDF's
+    outputs cannot be pruned by Spark, so an unused column costs its
+    full per-row compute).
+
     ``fault_latch``: path for :func:`_trip_fault_latch` — when set, the
     first task attempt to finish a batch crashes AFTER yielding its
     output, exercising Spark's discard-and-retry of partial task output.
@@ -172,17 +108,17 @@ def fetch_and_validate(
         import numpy as np
 
         from ..functions.imaging import decode_image, psnr
-        from ..payload import caption_for, payload_for, reference_decode
+        from ..payload import caption_for, page_for, reference_decode
         from .validate import PSNR_THRESHOLD_DB
 
-        _FAIL = (None, None, None, None, None, False, False, False, 0.0, False)
+        _FAIL = (None, None, None, None, False, False, False, 0.0, False)
         memo: dict[str, tuple] = {}
 
         def verdict_for(image_id: str) -> tuple:
             v = memo.get(image_id)
             if v is None:
                 try:
-                    p = payload_for(image_id)
+                    p = page_for(image_id)
                     decoded = decode_image(p["bytes"], p["fmt"])
                     ref = reference_decode(image_id)
                     p_db = min(psnr(decoded, ref), 1e9)
@@ -192,8 +128,8 @@ def fetch_and_validate(
                     )
                     caption_ok = p["caption"] == caption_for(image_id)
                     v = (
-                        p["w"], p["h"], p["fmt"], p["caption"], p["phash"],
-                        True, pixels_ok, caption_ok, float(p_db),
+                        p["w"], p["h"], p["fmt"], p["caption"], True,
+                        pixels_ok, caption_ok, float(p_db),
                         pixels_ok and caption_ok,
                     )
                 except Exception:
@@ -208,9 +144,9 @@ def fetch_and_validate(
             # replaces the old dict-per-row DataFrame build (~10× less
             # Python-side work per row even without memo hits).
             # use_na_sentinel=False keeps a null image_id as its own
-            # "unique" (verdict_for then yields the fetch-failed row,
-            # matching the per-row path) instead of code −1, which
-            # np.take would silently alias to the LAST unique's verdict
+            # "unique" (verdict_for then yields the fetch-failed row)
+            # instead of code −1, which np.take would silently alias to
+            # the LAST unique's verdict
             codes, uniques = pd.factorize(
                 pdf["image_id"], use_na_sentinel=False
             )

@@ -1,71 +1,27 @@
-"""Payload validation — the per-row invariant from BASELINE input_hint.
+"""Payload validation threshold and post-round audits.
 
-For every fetched payload: decode the ``bytes`` column, compare against
-the reference decode (recomputed from the image_id seed — no golden
-files), and assert
+The per-row payload invariant from BASELINE input_hint — decode the
+fetched bytes, compare against the reference decode (recomputed from
+the image_id seed — no golden files), and require
 
-- decoded-pixel allclose: exact for png, PSNR ≥ 40 dB for lossy formats;
-- caption equality vs the reference caption.
+- decoded-pixel allclose: exact for png, PSNR ≥ ``PSNR_THRESHOLD_DB``
+  for lossy formats;
+- caption equality vs the reference caption
 
-Vectorized: one pandas UDF over Arrow batches (numpy decode + PSNR per
-image inside the batch loop), no per-row Python UDFs.  The reference has
-no analog — it trusts fetches blindly (SURVEY §2.11 U5).
+— is checked inside the fused fetch stage
+(:func:`operators.fetch.fetch_and_validate`), so payload bytes never
+cross Arrow.  The reference has no analog — it trusts fetches blindly
+(SURVEY §2.11 U5).  This module keeps the threshold plus the audits
+run over an executed round: politeness compliance and allocation
+fairness.
 """
 
 from __future__ import annotations
 
-import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 PSNR_THRESHOLD_DB = 40.0
-
-_VAL_SCHEMA = T.StructType(
-    [
-        T.StructField("pixels_ok", T.BooleanType()),
-        T.StructField("caption_ok", T.BooleanType()),
-        T.StructField("psnr_db", T.DoubleType()),
-    ]
-)
-
-
-@F.pandas_udf(_VAL_SCHEMA)
-def _validate_udf(
-    image_id: pd.Series, byts: pd.Series, fmt: pd.Series, caption: pd.Series
-) -> pd.DataFrame:
-    from ..functions.imaging import decode_image, psnr
-    from ..payload import caption_for, reference_decode
-
-    px_ok, cap_ok, psnrs = [], [], []
-    for iid, b, f_, cap in zip(image_id, byts, fmt, caption):
-        try:
-            decoded = decode_image(bytes(b), f_)
-            ref = reference_decode(iid)
-            p = psnr(decoded, ref)
-            px_ok.append(bool(p >= PSNR_THRESHOLD_DB) and decoded.shape == ref.shape)
-        except Exception:
-            p = 0.0
-            px_ok.append(False)
-        psnrs.append(np.float64(min(p, 1e9)))  # inf → capped for parquet friendliness
-        cap_ok.append(cap == caption_for(iid))
-    return pd.DataFrame({"pixels_ok": px_ok, "caption_ok": cap_ok, "psnr_db": psnrs})
-
-
-def validate_payloads(fetched: DataFrame) -> DataFrame:
-    """Append pixels_ok / caption_ok / psnr_db / valid columns."""
-    v = _validate_udf(
-        F.col("image_id"), F.col("bytes"), F.col("fmt"), F.col("caption")
-    )
-    return (
-        fetched.withColumn("__v", v)
-        .withColumn("pixels_ok", F.col("__v.pixels_ok"))
-        .withColumn("caption_ok", F.col("__v.caption_ok"))
-        .withColumn("psnr_db", F.col("__v.psnr_db"))
-        .withColumn("valid", F.col("pixels_ok") & F.col("caption_ok"))
-        .drop("__v")
-    )
 
 
 def politeness_audit(

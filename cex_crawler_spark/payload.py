@@ -1,20 +1,22 @@
 """Deterministic payload synthesis — the sandbox stand-in for the network.
 
-``payload_for(image_id)`` is a pure function mapping an image_id to the
+``page_for(image_id)`` is a pure function mapping an image_id to the
 exact page body a fetch of that URL yields: encoded image bytes + typed
-metadata + caption.  It is the single source of truth used by
+metadata + caption.  It is the fetch simulator's network stand-in
+(operators/fetch.py, via mapInPandas) — the analog of the reference's
+browser fetch (exchange/base_scraper.py:78-143), which in this sandbox
+must be deterministic and network-free.
 
-- the payload-table generator (synth.gen_payloads, via mapInPandas),
-- the fetch simulator (operators/fetch.py, via mapInPandas) — the
-  analog of the reference's browser fetch
-  (/root/reference/exchange/base_scraper.py:78-143), which in this
-  sandbox must be deterministic and network-free,
-- the validator (recomputes the reference decode for the PSNR check),
-- the single-node replayer oracle.
+``payload_for(image_id)`` is that page plus the perceptual hash of its
+pixels — the full payload-table row, used by the payload-table
+generator (synth.gen_payloads, via mapInPandas) and the image queries.
+A crawl round stores no hash, so the fetch stage never computes one.
 
-Because all four call the same function, the per-row invariant
-(decoded-pixel PSNR ≥ 40 dB + caption equality, BASELINE input_hint)
-is checkable without golden files.
+The validator recomputes the reference decode (``reference_decode``)
+and caption (``caption_for``) independently of the page, and the
+single-node replayer oracle uses the same ``caption_for``, so the
+per-row invariant (decoded-pixel PSNR ≥ 40 dB + caption equality,
+BASELINE input_hint) is checkable without golden files.
 """
 
 from __future__ import annotations
@@ -52,19 +54,30 @@ def shape_for(image_id: str) -> tuple[int, int, str]:
     return w, h, fmt
 
 
-def payload_for(image_id: str) -> dict:
-    """Full payload row: image_id, bytes, w, h, fmt, caption, phash."""
+def _page_and_pixels(image_id: str) -> tuple[dict, np.ndarray]:
     w, h, fmt = shape_for(image_id)
     arr = reference_pixels(image_id, w, h)
-    return {
+    page = {
         "image_id": image_id,
         "bytes": encode_image(arr, fmt),
         "w": w,
         "h": h,
         "fmt": fmt,
         "caption": caption_for(image_id),
-        "phash": phash64(arr),
     }
+    return page, arr
+
+
+def page_for(image_id: str) -> dict:
+    """What a fetch of the URL returns: image_id, bytes, w, h, fmt, caption."""
+    return _page_and_pixels(image_id)[0]
+
+
+def payload_for(image_id: str) -> dict:
+    """Full payload row: the fetched page plus its ``phash``."""
+    page, arr = _page_and_pixels(image_id)
+    page["phash"] = phash64(arr)
+    return page
 
 
 def reference_decode(image_id: str) -> np.ndarray:

@@ -415,8 +415,11 @@ def run_round(
         # persisted results_delta: the re-aggregation was a full shuffle
         # of the cached partitions per round, the read-back is one
         # column of one delta directory (r6; the values are identical
-        # by construction — it IS the written seen_delta)
-        delta_path = catalog.manifest()["tables"]["seen"]["paths"][-1]
+        # by construction — it IS the written seen_delta).  Pinned to
+        # ``version``, not the head: a commit landing between ours and
+        # this read would otherwise hand us ITS delta, and the filter
+        # would miss this round's keys (filter ⊇ seen broken)
+        delta_path = catalog.manifest(version)["tables"]["seen"]["paths"][-1]
         delta_keys = spark.read.parquet(delta_path)
         if isinstance(bloom, CuckooFilter64):
             bloom.merge(build_cuckoo(delta_keys, "url_hash", bloom_expected))

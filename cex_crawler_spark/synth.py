@@ -141,8 +141,9 @@ def gen_payloads(spark: SparkSession, n: int) -> DataFrame:
     """Image+caption payload table (BASELINE input_hint shape).
 
     One mapInPandas stage over ``spark.range`` calling the pure
-    ``payload.payload_for`` twin — the same function the fetch simulator
-    and replayer use, so every consumer sees byte-identical payloads.
+    ``payload.payload_for`` — the page the fetch simulator's
+    ``payload.page_for`` returns plus its ``phash``, so every consumer
+    sees byte-identical payloads.
     """
     df = spark.range(n).select(
         F.format_string("img%010d", F.col("id")).alias("image_id")

@@ -324,12 +324,29 @@ def test_cuckoo_crawl_lifecycle_matches_no_filter(spark, tmp_path):
 def test_fetch_memo_null_and_dup_image_ids(spark):
     """r6 fetch memoization: duplicate image_ids get the (identical)
     memoized verdict, a NULL image_id still yields the fetch-failed row
-    (factorize's na sentinel must not alias it to another verdict)."""
+    (factorize's na sentinel must not alias it to another verdict).
+
+    The fetch stage calls ``page_for`` (no perceptual hash), yet every
+    verdict column must equal the one derived from the full payload row
+    (``payload_for`` + decode + PSNR against the reference decode)."""
     from pyspark.sql import types as T
 
-    from cex_crawler_spark.operators.fetch import fetch_and_validate
+    from cex_crawler_spark.functions.imaging import decode_image, psnr
+    from cex_crawler_spark.operators.fetch import (
+        FETCH_VERDICT_SCHEMA,
+        fetch_and_validate,
+    )
+    from cex_crawler_spark.operators.validate import PSNR_THRESHOLD_DB
+    from cex_crawler_spark.payload import (
+        caption_for,
+        page_for,
+        payload_for,
+        reference_decode,
+    )
 
-    rows = [(1, "img0000000001"), (2, None), (3, "img0000000001")]
+    ids = [f"img{i:010d}" for i in range(300)]
+    rows = [(n, i) for n, i in enumerate(ids)]
+    rows += [(-1, None), (-2, ids[1])]
     schema = T.StructType(
         [
             T.StructField("url_hash", T.LongType()),
@@ -342,7 +359,102 @@ def test_fetch_memo_null_and_dup_image_ids(spark):
             spark.createDataFrame(rows, schema)
         ).collect()
     }
-    assert out[2]["fetch_ok"] is False and out[2]["valid"] is False
-    assert out[1]["fetch_ok"] is True and out[3]["fetch_ok"] is True
+    assert "phash" not in FETCH_VERDICT_SCHEMA.names
+    assert len(out) == len(rows)
+    assert out[-1]["fetch_ok"] is False and out[-1]["valid"] is False
     # duplicate ids must agree on every verdict column
-    assert out[1].asDict() == {**out[3].asDict(), "url_hash": 1}
+    assert out[1].asDict() == {**out[-2].asDict(), "url_hash": 1}
+
+    fmts = set()
+    for n, i in enumerate(ids):
+        p = payload_for(i)
+        assert page_for(i) == {k: v for k, v in p.items() if k != "phash"}
+        decoded = decode_image(p["bytes"], p["fmt"])
+        ref = reference_decode(i)
+        p_db = min(psnr(decoded, ref), 1e9)
+        pixels_ok = p_db >= PSNR_THRESHOLD_DB and decoded.shape == ref.shape
+        caption_ok = p["caption"] == caption_for(i)
+        expected = {
+            "url_hash": n, "image_id": i, "w": p["w"], "h": p["h"],
+            "fmt": p["fmt"], "caption": p["caption"], "fetch_ok": True,
+            "pixels_ok": pixels_ok, "caption_ok": caption_ok,
+            "psnr_db": p_db, "valid": pixels_ok and caption_ok,
+        }
+        assert out[n].asDict() == expected, i
+        fmts.add(p["fmt"])
+    assert fmts == {"png", "jpeg"}
+
+
+def test_bloom_delta_pinned_to_round_commit(spark, tmp_path, monkeypatch):
+    """The round's filter update reads the seen delta of the version it
+    committed, not the catalog head: a seen append committed by another
+    writer between the round's commit and its filter update must not
+    cost the filter this round's keys (filter ⊇ seen)."""
+    import numpy as np
+
+    from cex_crawler_spark.catalog import APPEND
+    from cex_crawler_spark.operators.seen import BloomFilter64
+    from cex_crawler_spark.plans.round import run_round
+
+    cat = SnapshotCatalog(tmp_path / "interleaved")
+    bootstrap(cat, gen_frontier(spark, 250, n_payloads=60), WATERMARK)
+    other = spark.createDataFrame(
+        [(-1, "https://interleaved.example/x")], "url_hash long, url string"
+    )
+    real_commit = cat.commit
+
+    def commit_then_interleave(round_id, writes, **kw):
+        version = real_commit(round_id, writes, **kw)
+        if "results" in writes:
+            real_commit(round_id, {"seen": (other, APPEND)})
+        return version
+
+    monkeypatch.setattr(cat, "commit", commit_then_interleave)
+    bloom = BloomFilter64(5000)
+    run_round(spark, cat, gen_host_policy(spark), WATERMARK, 0,
+              bloom=bloom, bloom_expected=5000)
+
+    keys = np.array(
+        [r["url_hash"] for r in cat.read(spark, "seen").collect()
+         if r["url_hash"] != -1],
+        dtype=np.int64,
+    )
+    assert keys.size > 0 and bloom.might_contain(keys).all()
+
+
+def test_cuckoo_sidecar_survives_compact_and_vacuum(spark, tmp_path,
+                                                     monkeypatch):
+    """Equality deletes and compaction carry the cuckoo sidecar
+    reference forward and vacuum keeps its file, so a cuckoo crawl
+    rewritten this way mid-way still resumes from the sidecar (no cold
+    rebuild)."""
+    import numpy as np
+
+    import cex_crawler_spark.plans.driver as drv
+    from cex_crawler_spark.plans.round import load_cuckoo_sidecar
+
+    seeds = gen_frontier(spark, 250, n_payloads=60)
+    policy = gen_host_policy(spark).withColumn("budget_per_round", F.lit(30))
+    cat = SnapshotCatalog(tmp_path / "cuckoo_compact")
+    bootstrap(cat, seeds, WATERMARK)
+    crawl(spark, cat, policy, WATERMARK, max_rounds=2,
+          filter_kind="cuckoo", bloom_expected=5000)  # "kill"
+    cat.delete_rows("seen", spark.createDataFrame([(-1,)], "url_hash long"))
+    cat.compact(spark, "seen")
+    cat.vacuum(keep_versions=1)
+    assert load_cuckoo_sidecar(cat, 5000) is not None
+
+    def no_rebuild(*a, **k):
+        raise AssertionError("resume cold-rebuilt the cuckoo filter")
+
+    monkeypatch.setattr(drv, "build_cuckoo", no_rebuild)
+    crawl(spark, cat, policy, WATERMARK, max_rounds=30,
+          filter_kind="cuckoo", bloom_expected=5000)
+
+    cf = load_cuckoo_sidecar(cat, 5000)
+    keys = np.array(
+        [r["url_hash"] for r in cat.read(spark, "seen").collect()],
+        dtype=np.int64,
+    )
+    assert cf is not None
+    assert keys.size > 0 and cf.might_contain(keys).all()
