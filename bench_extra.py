@@ -100,7 +100,7 @@ def drain(n_urls: int | None = None) -> None:
 
             import pandas as pd
 
-            def stub(scheduled, parallelism=None, fault_latch=None):
+            def stub(scheduled, fault_latch=None):
                 src = scheduled.select("url_hash", "image_id")
 
                 def run(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:

@@ -36,8 +36,9 @@ from pyspark.sql import DataFrame, SparkSession
 
 OVERWRITE = "overwrite"
 APPEND = "append"
-# manifest keys naming a seen-filter sidecar file under ``_bloom/``
-# (plans/round.save_bloom_sidecar / save_cuckoo_sidecar)
+# manifest keys naming a seen-filter sidecar file under ``_bloom/``: the
+# filter kinds (``kind`` of operators/seen.BloomFilter64 / CuckooFilter64),
+# written by plans/round.save_bloom_sidecar
 SIDECAR_KEYS = ("bloom", "cuckoo")
 
 

@@ -36,13 +36,6 @@ def token_count(text: Column) -> Column:
     return F.size(tokens(text))
 
 
-def word_punct_token_count(text: Column) -> Column:
-    """BPE-ish pre-tokenization count: word pieces OR single punctuation."""
-    return F.size(
-        F.regexp_extract_all(text, F.lit(r"([A-Za-z0-9]+|[^A-Za-z0-9\s])"), 0)
-    )
-
-
 def stopword_ratio(text: Column) -> Column:
     """Fraction of whitespace tokens that are English stopwords."""
     toks = tokens(F.lower(text))

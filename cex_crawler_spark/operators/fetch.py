@@ -66,7 +66,6 @@ def _trip_fault_latch(path: str) -> bool:
 
 def fetch_and_validate(
     scheduled: DataFrame,
-    parallelism: int | None = None,
     fault_latch: str | None = None,
 ) -> DataFrame:
     """Fused fetch→decode→validate in ONE Python stage.
@@ -88,13 +87,12 @@ def fetch_and_validate(
     output, exercising Spark's discard-and-retry of partial task output.
     """
     src = scheduled.select("url_hash", "image_id")
-    if parallelism is None:
-        # 2 tasks per core: slack partitions still smooth per-row payload
-        # variance, but every extra task is also one more output file in
-        # the results write and one more partition in every downstream
-        # scan of the round's caches — measured on the 200k drain, 4×
-        # cost ~3 s over 2× with no tail benefit (r6)
-        parallelism = 2 * scheduled.sparkSession.sparkContext.defaultParallelism
+    # 2 tasks per core: slack partitions still smooth per-row payload
+    # variance, but every extra task is also one more output file in
+    # the results write and one more partition in every downstream
+    # scan of the round's caches — measured on the 200k drain, 4×
+    # cost ~3 s over 2× with no tail benefit (r6)
+    parallelism = 2 * scheduled.sparkSession.sparkContext.defaultParallelism
     # image_id partitioning (not url_hash): the verdict is a pure function
     # of the resource, so landing every row of a payload in one task lets
     # the per-task memo fetch+validate each distinct resource ONCE and

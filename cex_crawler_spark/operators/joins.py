@@ -13,10 +13,11 @@ fires on selective creation-side filters it can see through.
 
 This operator makes the reduction explicit and unbounded: build a
 compact Bloom over the build side's join keys with the engine's
-existing distributed builder (per-partition bitmaps OR-reduced on the
-driver — `operators/seen.py:build_bloom`, the same filter that backs
-URL-seen dedup), broadcast the ~n·10-bit bitmap, and drop fact rows
-scan-side BEFORE the exchange.  Bloom false positives are harmless:
+existing builder (`operators/seen.py:build_bloom` — driver add for
+small filters, per-partition bitmaps OR-reduced on the driver for large
+ones; the same filter that backs URL-seen dedup), broadcast the
+~n·10-bit bitmap through the seen check's `prefilter`, and drop fact
+rows scan-side BEFORE the exchange.  Bloom false positives are harmless:
 the exact join that follows removes them, so the composition is
 bit-identical to the plain join for `inner` / `left_semi` — the only
 modes where dropping non-matching left rows early is sound (`left`
@@ -39,7 +40,7 @@ from typing import Sequence
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .seen import BloomFilter64, bloom_prefilter, build_bloom
+from .seen import BloomFilter64, build_bloom, prefilter
 
 _JK = "__bloom_join_key"
 
@@ -81,5 +82,5 @@ def bloom_filtered_join(
         n_expected = build_keys.count()
     bf: BloomFilter64 = build_bloom(build_keys, _JK, max(n_expected, 1), fpp)
     fact_keyed = _with_join_key(fact, on)
-    _, maybe_match = bloom_prefilter(fact_keyed, _JK, bf)
+    _, maybe_match = prefilter(fact_keyed, _JK, bf)
     return maybe_match.drop(_JK).join(build, on, how)

@@ -192,7 +192,6 @@ def schedule_round(
     candidates: DataFrame,
     host_policy: DataFrame,
     watermark: str,
-    salt_buckets: int = 16,
     caches: list | None = None,
 ) -> DataFrame:
     """Assign a status (and host_seq for scheduled rows) to every candidate.
@@ -326,7 +325,6 @@ def schedule_round(
     # chunk), then adds per-chunk offsets (a tiny map-side broadcast
     # join).  A plain `row_number() OVER (PARTITION BY host)` would sort
     # a 50%-skew host in one task regardless of cluster size.
-    # (``salt_buckets`` is kept in the signature for API stability.)
     ranked = _ranked_per_host(schedulable)
 
     # verdict assembly: a 3-leg UNION over the cached narrow rows — NO

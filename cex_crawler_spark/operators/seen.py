@@ -15,11 +15,11 @@ Engine design (north rule: bloom/cuckoo URL-seen at 10^10 scale):
   genuinely-new URLs — skip the shuffle entirely; only possible-positives
   flow into the anti-join.  False positives therefore cost one extra
   join probe, never a dropped URL (property-tested).
-- The filter is built distributively: one ``mapInPandas`` pass emits a
-  per-partition bitmap (numpy bit-ops over int64 arrays, no per-row
-  Python), OR-reduced on the driver (k bitmaps of m/8 bytes — the
-  treeAggregate pattern), then broadcast.  Per-round DELTAS are merged
-  by the same OR, so the filter is maintained incrementally instead of
+- One build (:func:`build_filter`): small filters add Arrow-collected
+  keys on the driver; large ones build one filter per partition (numpy
+  ops over int64 arrays, no per-row Python) and merge them on the
+  driver — the treeAggregate pattern.  Per-round DELTAS are merged the
+  same way, so the filter is maintained incrementally instead of
   rebuilt (SURVEY §2.11: the one custom aggregate the engine needs).
 
 The north rule names a CUCKOO-FILTER FALLBACK FOR DELETES: the one
@@ -28,11 +28,13 @@ invalidation / forced re-crawl, where a previously-fetched URL must
 become schedulable again.  ``CuckooFilter64`` (partial-key cuckoo
 hashing, Fan et al. CoNEXT'14) supports that: 4-slot buckets of 16-bit
 fingerprints at ≤0.95 load ≈ 2.2 B/key (vs Bloom's ~0.9 B/key at 3%
-fpp), built distributively like the Bloom (per-partition tables, driver
-batch-merge) and applied through the same prefilter + exact-anti-join
-contract via ``invalidate_seen`` — deletes always hit the exact seen
-TABLE and the filter together, so a fingerprint collision between a
-deleted and a kept key costs one extra join probe (possible false
+fpp).  Delete is its one extra method (``delete_many``); otherwise both
+filters share one surface — ``add_many``, ``might_contain``, ``merge``,
+``to_bytes``/``from_bytes`` and ``geometry`` — so the build, the
+prefilter and the sidecar (plans/round.py) handle either kind.  The
+crawl's delete path (plans/driver.requeue) removes keys from the exact
+seen TABLE and the filter together, so a fingerprint collision between
+a deleted and a kept key costs one extra join probe (possible false
 positive), never a duplicate fetch.  At 10^10 keys either filter is
 tens of GB — too big for one broadcast — so the scale path shards the
 filter by the frontier's ``host_bucket`` partitioning (each task loads
@@ -55,6 +57,8 @@ _M64 = (1 << 64) - 1
 
 class BloomFilter64:
     """Bloom filter over int64 keys; double hashing, numpy-vectorized."""
+
+    kind = "bloom"
 
     def __init__(self, n_expected: int, fpp: float = 0.03, bits: np.ndarray | None = None):
         if bits is not None:
@@ -92,6 +96,17 @@ class BloomFilter64:
         self.bits |= other.bits
         return self
 
+    @property
+    def geometry(self) -> dict:
+        return {"m": self.m, "k": self.k}
+
+    def to_bytes(self) -> bytes:
+        return self.bits.tobytes()
+
+    @classmethod
+    def from_bytes(cls, data: bytes, n_expected: int) -> "BloomFilter64":
+        return cls(n_expected, bits=np.frombuffer(data, dtype=np.uint8).copy())
+
 
 class CuckooFilter64:
     """Cuckoo filter over int64 keys — the delete-capable seen filter.
@@ -110,6 +125,7 @@ class CuckooFilter64:
     that was never added is undefined, as in the paper.
     """
 
+    kind = "cuckoo"
     SLOTS = 4
     _MAX_KICKS = 500
 
@@ -240,179 +256,104 @@ class CuckooFilter64:
         self._insert_batch(fp, rows.astype(np.int64), alt)
         return self
 
+    @property
+    def geometry(self) -> dict:
+        return {"n_buckets": self.n_buckets}
 
-def build_cuckoo(
-    df: DataFrame, key_col: str, n_expected: int
-) -> CuckooFilter64:
-    """Distributed cuckoo build: per-partition tables, driver batch-merge.
+    def to_bytes(self) -> bytes:
+        return self.table.tobytes()
 
-    Same shape as :func:`build_bloom`; the merge is a vectorized
-    re-placement instead of a bitwise OR (cuckoo tables don't OR), so
-    size ``n_expected`` for the FULL key count — every partition table
-    shares the full-size geometry and the driver union stays below the
-    load limit.  Small filters (same threshold as :func:`build_bloom`)
-    skip the partition tables and add the Arrow-collected keys directly.
-    """
-    proto = CuckooFilter64(n_expected)
-    if n_expected <= _DRIVER_BUILD_MAX:
-        keys = _collect_keys(df, key_col)
-        if keys.size:
-            proto.add_many(keys)
-        return proto
-
-    def partition_table(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cf = CuckooFilter64(n_expected)
-        seen_any = False
-        for pdf in it:
-            keys = pdf[key_col].to_numpy(dtype=np.int64)
-            if keys.size:
-                cf.add_many(keys)
-                seen_any = True
-        if seen_any:
-            yield pd.DataFrame({"table": [cf.table.tobytes()]})
-
-    parts = (
-        df.select(key_col)
-        .mapInPandas(
-            partition_table,
-            schema=T.StructType([T.StructField("table", T.BinaryType())]),
-        )
-        .collect()
-    )
-    for row in parts:
-        t = np.frombuffer(row["table"], dtype=np.uint16).reshape(
-            proto.n_buckets, CuckooFilter64.SLOTS
-        )
-        proto.merge(CuckooFilter64(n_expected, table=t.copy()))
-    return proto
-
-
-def invalidate_seen(
-    seen: DataFrame,
-    urls: DataFrame,
-    cuckoo: CuckooFilter64,
-    key_col: str = "url_hash",
-) -> DataFrame:
-    """Un-see ``urls`` — the delete path Bloom cannot express.
-
-    Removes the keys from the exact seen TABLE (anti-join) and from the
-    cuckoo filter (in place) in one step, keeping the invariant the
-    prefilter relies on: the filter's member set is always a superset of
-    the table's — a collision-induced extra copy costs one join probe
-    (false positive), never a missed seen row.  The invalidated URLs
-    become schedulable in the next round, which re-fetches them — the
-    re-crawl semantics (freshness expiry / payload-invalidation sweeps)
-    the north rule's cuckoo fallback exists for.
-    """
-    keys = np.array(
-        [r[key_col] for r in urls.select(key_col).distinct().collect()],
-        dtype=np.int64,
-    )
-    cuckoo.delete_many(keys)
-    return seen.join(urls.select(key_col).distinct(), key_col, "left_anti")
+    @classmethod
+    def from_bytes(cls, data: bytes, n_expected: int) -> "CuckooFilter64":
+        table = np.frombuffer(data, dtype=np.uint16).reshape(-1, cls.SLOTS)
+        return cls(n_expected, table=table.copy())
 
 
 # Below this n_expected the filter is built by collecting the raw keys
 # (8 B/key over Arrow) and one vectorized driver-side add_many; above it
-# the per-partition-bitmap reduce takes over.  The key collect moves
-# rows × 8 B; the bitmap path moves partitions × m/8 B — at bench scale
-# (400 k expected, ~200 post-AQE partitions of a 128-partition fetch
-# stage) that is 0.7 MB vs ~80 MB, and the gap WIDENS with n_expected
-# until the key count itself threatens driver memory (8 B × 64 M =
-# 512 MB, the cap below; tune via env on bigger drivers).
-_DRIVER_BUILD_MAX = int(
-    __import__("os").environ.get("SPARK_GRAFT_FILTER_DRIVER_BUILD_MAX",
-                                 str(64_000_000))
-)
+# the per-partition-filter reduce takes over.  The key collect moves
+# rows × 8 B; the per-partition path moves partitions × filter bytes —
+# at bench scale (400 k expected, ~200 post-AQE partitions of a
+# 128-partition fetch stage) that is 0.7 MB vs ~80 MB for a Bloom, and
+# the gap WIDENS with n_expected until the key count itself threatens
+# driver memory (8 B × 64 M = 512 MB, the cap below).
+_DRIVER_BUILD_MAX = 64_000_000
 
 
-def _collect_keys(df: DataFrame, key_col: str) -> np.ndarray:
-    pdf = df.select(key_col).toPandas()
-    return pdf[key_col].to_numpy(dtype=np.int64)
+def build_filter(
+    df: DataFrame, key_col: str, n_expected: int,
+    empty: BloomFilter64 | CuckooFilter64,
+) -> BloomFilter64 | CuckooFilter64:
+    """Add every ``key_col`` value of ``df`` to ``empty`` — a fresh
+    filter sized for ``n_expected`` keys, of either kind — and return it.
+
+    Up to ``_DRIVER_BUILD_MAX`` expected keys, the keys are collected
+    over Arrow and added on the driver.  Above it, each partition fills
+    its own filter of the same geometry and the driver merges them (a
+    bitwise OR for Bloom, a vectorized re-placement for cuckoo — cuckoo
+    tables don't OR, so every partition table shares the full-size
+    geometry and the union stays below the load limit).
+    """
+    if n_expected <= _DRIVER_BUILD_MAX:
+        keys = df.select(key_col).toPandas()[key_col].to_numpy(dtype=np.int64)
+        if keys.size:
+            empty.add_many(keys)
+        return empty
+    # the tasks get the class and byte size, not the (large) empty
+    # filter: all-zero bytes deserialize to an empty filter
+    cls, n_bytes = type(empty), len(empty.to_bytes())
+
+    def partition_filter(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        part = cls.from_bytes(bytes(n_bytes), n_expected)
+        seen_any = False
+        for pdf in it:
+            keys = pdf[key_col].to_numpy(dtype=np.int64)
+            if keys.size:
+                part.add_many(keys)
+                seen_any = True
+        if seen_any:
+            yield pd.DataFrame({"filter": [part.to_bytes()]})
+
+    parts = (
+        df.select(key_col)
+        .mapInPandas(
+            partition_filter,
+            schema=T.StructType([T.StructField("filter", T.BinaryType())]),
+        )
+        .collect()
+    )
+    for row in parts:
+        empty.merge(cls.from_bytes(row["filter"], n_expected))
+    return empty
 
 
 def build_bloom(
     df: DataFrame, key_col: str, n_expected: int, fpp: float = 0.03
 ) -> BloomFilter64:
-    """Bloom build: driver add_many over Arrow-collected keys for filters
-    up to ``$SPARK_GRAFT_FILTER_DRIVER_BUILD_MAX`` expected keys, else
-    per-partition bitmaps OR-reduced on the driver."""
-    proto = BloomFilter64(n_expected, fpp)
-    if n_expected <= _DRIVER_BUILD_MAX:
-        keys = _collect_keys(df, key_col)
-        if keys.size:
-            proto.add_many(keys)
-        return proto
-    m, k = proto.m, proto.k
-
-    def partition_bitmap(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        bf = BloomFilter64(n_expected, fpp)
-        assert (bf.m, bf.k) == (m, k)
-        seen_any = False
-        for pdf in it:
-            keys = pdf[key_col].to_numpy(dtype=np.int64)
-            if keys.size:
-                bf.add_many(keys)
-                seen_any = True
-        if seen_any:
-            yield pd.DataFrame({"bitmap": [bf.bits.tobytes()]})
-
-    parts = (
-        df.select(key_col)
-        .mapInPandas(
-            partition_bitmap,
-            schema=T.StructType([T.StructField("bitmap", T.BinaryType())]),
-        )
-        .collect()
-    )
-    for row in parts:
-        proto.bits |= np.frombuffer(row["bitmap"], dtype=np.uint8)
-    return proto
+    """:func:`build_filter` into an empty Bloom filter."""
+    return build_filter(df, key_col, n_expected, BloomFilter64(n_expected, fpp))
 
 
-def bloom_prefilter(df: DataFrame, key_col: str, bf: BloomFilter64) -> tuple[DataFrame, DataFrame]:
-    """Split ``df`` into (definitely_new, possibly_seen) via a broadcast Bloom.
-
-    ``definitely_new`` rows skip the anti-join shuffle; ``possibly_seen``
-    rows go through the exact anti-join.  The bitmap travels as a Spark
-    broadcast variable, deserialized once per executor.
-    """
-    sc = df.sparkSession.sparkContext
-    b = sc.broadcast((bf.bits.tobytes(), bf.m, bf.k))
-
-    @F.pandas_udf(T.BooleanType())
-    def might_contain(keys: pd.Series) -> pd.Series:
-        bits_bytes, m, k = b.value
-        local = BloomFilter64(1, bits=np.frombuffer(bits_bytes, dtype=np.uint8))
-        local.m, local.k = m, k
-        return pd.Series(local.might_contain(keys.to_numpy(dtype=np.int64)))
-
-    flagged = df.withColumn("__maybe_seen", might_contain(F.col(key_col)))
-    return (
-        flagged.filter(~F.col("__maybe_seen")).drop("__maybe_seen"),
-        flagged.filter(F.col("__maybe_seen")).drop("__maybe_seen"),
-    )
+def build_cuckoo(df: DataFrame, key_col: str, n_expected: int) -> CuckooFilter64:
+    """:func:`build_filter` into an empty cuckoo filter."""
+    return build_filter(df, key_col, n_expected, CuckooFilter64(n_expected))
 
 
-def cuckoo_prefilter(
-    df: DataFrame, key_col: str, cf: CuckooFilter64
+def prefilter(
+    df: DataFrame, key_col: str, filt: BloomFilter64 | CuckooFilter64
 ) -> tuple[DataFrame, DataFrame]:
     """Split ``df`` into (definitely_new, possibly_seen) via a broadcast
-    cuckoo filter — same contract as :func:`bloom_prefilter`, for crawls
-    that need the delete path (:func:`invalidate_seen`)."""
-    sc = df.sparkSession.sparkContext
-    b = sc.broadcast((cf.table.tobytes(), cf.n_buckets))
+    filter of either kind.
+
+    ``definitely_new`` rows skip the anti-join shuffle; ``possibly_seen``
+    rows go through the exact anti-join.  The filter travels as a Spark
+    broadcast variable, deserialized once per executor.
+    """
+    b = df.sparkSession.sparkContext.broadcast(filt)
 
     @F.pandas_udf(T.BooleanType())
     def might_contain(keys: pd.Series) -> pd.Series:
-        tbl, nb = b.value
-        local = CuckooFilter64(
-            1,
-            table=np.frombuffer(tbl, dtype=np.uint16).reshape(
-                nb, CuckooFilter64.SLOTS
-            ),
-        )
-        return pd.Series(local.might_contain(keys.to_numpy(dtype=np.int64)))
+        return pd.Series(b.value.might_contain(keys.to_numpy(dtype=np.int64)))
 
     flagged = df.withColumn("__maybe_seen", might_contain(F.col(key_col)))
     return (
@@ -429,18 +370,15 @@ def anti_join_seen(
 ) -> DataFrame:
     """Rows of ``frontier`` whose ``key_col`` is NOT in ``seen`` — exact.
 
-    With a prefilter (Bloom, or cuckoo when the crawl un-sees URLs),
-    only possible-positives shuffle; without one, a plain left-anti join
-    (Catalyst picks broadcast-anti when ``seen`` is small).
+    With a seen filter ``bloom`` (either kind), only possible-positives
+    shuffle; without one, a plain left-anti join (Catalyst picks
+    broadcast-anti when ``seen`` is small).
     """
     if seen is None:
         return frontier
     seen_keys = seen.select(key_col).distinct()
     if bloom is None:
         return frontier.join(seen_keys, key_col, "left_anti")
-    prefilter = (
-        cuckoo_prefilter if isinstance(bloom, CuckooFilter64) else bloom_prefilter
-    )
     definitely_new, possibly_seen = prefilter(frontier, key_col, bloom)
     survivors = possibly_seen.join(seen_keys, key_col, "left_anti")
     return definitely_new.unionByName(survivors)

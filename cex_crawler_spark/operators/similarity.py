@@ -106,16 +106,6 @@ def srp_buckets_udf(dim: int, n_planes: int = 8, n_tables: int = 8,
     return buckets
 
 
-def srp_bucket_udf(dim: int, n_planes: int = 12, seed: int = 13):
-    """Single-table SRP bucket id (kept for callers needing one key)."""
-    inner = srp_buckets_udf(dim, n_planes, n_tables=1, seed=seed)
-
-    def bucket(col):
-        return F.element_at(inner(col), 1)
-
-    return bucket
-
-
 def _keyed(df: DataFrame, id_name: str, dim: int, n_planes: int,
            n_tables: int, seed: int) -> DataFrame:
     """(id, table, bucket) triples — the thin join side (24 B/row)."""

@@ -1,14 +1,15 @@
-"""Crawl driver — the multi-round loop with incremental Bloom maintenance.
+"""Crawl driver — the multi-round loop with incremental seen-filter upkeep.
 
 The analog of /root/reference/run.sh + main.py's cron-batch re-invocation:
 each call to :func:`crawl` resumes from the catalog's last committed
 round (nothing to re-do after a kill — the manifest is the checkpoint)
 and runs rounds until the frontier drains or ``max_rounds`` is hit.
 
-Bloom filter lifecycle: sized once per crawl (``n_expected``), loaded
-on resume from the bitmap sidecar each round persists with its manifest
+Seen-filter lifecycle (Bloom, or the delete-capable cuckoo filter —
+``filter_kind``): sized once per crawl (``n_expected``), loaded on
+resume from the sidecar each round persists with its manifest
 (cold-rebuilt from the full seen table only when no valid sidecar
-exists), then maintained by OR-merging each round's seen-delta — the
+exists), then maintained by merging each round's seen-delta — the
 per-round cost is one pass over the delta, never the full history.
 """
 
@@ -19,16 +20,12 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import OVERWRITE, SnapshotCatalog
-from ..operators.seen import (
-    BloomFilter64,
-    CuckooFilter64,
-    build_bloom,
-    build_cuckoo,
-)
+from ..operators.seen import BloomFilter64, CuckooFilter64, build_filter
+# not called here: perfbench's tracer wraps driver.build_bloom by name
+from ..operators.seen import build_bloom  # noqa: F401
 from .round import (
     ingest_seeds,
     load_bloom_sidecar,
-    load_cuckoo_sidecar,
     run_round,
     with_host_bucket,
 )
@@ -55,10 +52,7 @@ def crawl(
     watermark: str,
     max_rounds: int = 100,
     bloom_expected: int = 1_000_000,
-    use_bloom: bool = True,
-    filter_kind: str = "bloom",
-    salt_buckets: int = 16,
-    fetch_parallelism: int | None = None,
+    filter_kind: str | None = "bloom",
     expand: bool = False,
     compact_every: int | None = None,
 ) -> list[dict]:
@@ -74,30 +68,35 @@ def crawl(
     row-identical and commits its own manifest version, so kill/resume
     semantics are unchanged (tested).
     """
-    # ``filter_kind``: "bloom" (default — smallest, append-only seen) or
+    # ``filter_kind``: "bloom" (default — smallest, append-only seen),
     # "cuckoo" (delete-capable: pairs with :func:`requeue` sweeps, whose
-    # churn would saturate a Bloom that can never forget a key)
-    if filter_kind not in ("bloom", "cuckoo"):
-        raise ValueError(f"filter_kind must be bloom|cuckoo: {filter_kind!r}")
-    load_sidecar, build_filter, empty_filter = (
-        (load_bloom_sidecar, build_bloom, BloomFilter64)
-        if filter_kind == "bloom"
-        else (load_cuckoo_sidecar, build_cuckoo, CuckooFilter64)
-    )
-    bloom = None
-    if use_bloom and catalog.has_table("seen"):
-        # resume: each round persists its merged filter against the
-        # manifest it covers, so a resume is a ~1 MB file read; the cold
-        # rebuild from the full seen table (a scan that grows with crawl
-        # age) remains only as the fallback for pre-sidecar catalogs, a
-        # changed n_expected, or a kill between commit and sidecar amend
-        bloom = load_sidecar(catalog, bloom_expected)
-        if bloom is None:
-            bloom = build_filter(
-                catalog.read(spark, "seen"), "url_hash", bloom_expected
-            )
-    elif use_bloom:
-        bloom = empty_filter(bloom_expected)
+    # churn would saturate a Bloom that can never forget a key) or None
+    # (no prefilter: a plain anti-join against the seen table)
+    if filter_kind not in ("bloom", "cuckoo", None):
+        raise ValueError(
+            f"filter_kind must be bloom|cuckoo|None: {filter_kind!r}"
+        )
+    filt = None
+    if filter_kind is not None:
+        has_seen = catalog.has_table("seen")
+        if has_seen:
+            # resume: each round persists its merged filter against the
+            # manifest it covers, so a resume is a ~1 MB file read
+            filt = load_bloom_sidecar(catalog, bloom_expected, filter_kind)
+        if filt is None:
+            # looked up per call, not at import, so a wrapped
+            # BloomFilter64 (perfbench's tracer) is the one called
+            classes = {"bloom": BloomFilter64, "cuckoo": CuckooFilter64}
+            filt = classes[filter_kind](bloom_expected)
+            if has_seen:
+                # the cold rebuild from the full seen table (a scan that
+                # grows with crawl age) remains only as the fallback for
+                # pre-sidecar catalogs, a changed n_expected, or a kill
+                # between commit and sidecar amend
+                filt = build_filter(
+                    catalog.read(spark, "seen"), "url_hash",
+                    bloom_expected, filt,
+                )
 
     stats_log: list[dict] = []
     round_id = catalog.current_round() + 1
@@ -106,13 +105,11 @@ def crawl(
     if catalog.read(spark, "frontier").isEmpty():
         return stats_log
     for _ in range(max_rounds):
-        # the round itself OR-updates the Bloom from its cached seen delta
+        # the round itself merges its seen delta into the filter
         # (folded in — r1 paid a parquet re-read + extra job per round)
         stats = run_round(
             spark, catalog, host_policy, watermark, round_id,
-            bloom=bloom, salt_buckets=salt_buckets,
-            fetch_parallelism=fetch_parallelism, expand=expand,
-            bloom_expected=bloom_expected,
+            bloom=filt, expand=expand, bloom_expected=bloom_expected,
         )
         stats_log.append({"round": round_id, **stats})
         round_id += 1

@@ -17,7 +17,6 @@ from __future__ import annotations
 
 import os
 
-import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -36,9 +35,10 @@ from ..operators.seen import (
     BloomFilter64,
     CuckooFilter64,
     anti_join_seen,
-    build_bloom,
-    build_cuckoo,
+    build_filter,
 )
+# not called here: perfbench builds its recrawl sidecar as round.build_bloom
+from ..operators.seen import build_bloom  # noqa: F401
 from ..functions.urlnorm import with_canonical_url
 
 # frontier columns persisted across rounds
@@ -78,95 +78,56 @@ def ingest_seeds(seeds: DataFrame) -> DataFrame:
 
 
 def save_bloom_sidecar(
-    catalog: SnapshotCatalog, version: int, bloom: BloomFilter64,
-    n_expected: int,
+    catalog: SnapshotCatalog, version: int,
+    filt: BloomFilter64 | CuckooFilter64, n_expected: int,
 ) -> None:
-    """Persist the Bloom bitmap next to the manifest version it covers.
+    """Persist the seen filter (either kind) next to the manifest
+    version it covers.
 
     Resume previously cold-rebuilt the filter from the FULL seen table —
     a scan whose cost grows with crawl age (VERDICT r3 item 4).  The
-    bitmap is written (atomic tmp+rename) to ``_bloom/v<N>.bin`` and
-    referenced from manifest ``v<N>`` via :meth:`SnapshotCatalog.amend`
-    AFTER the round's seen-delta was OR-merged, so a persisted bitmap is
-    always a SUPERSET of that manifest's seen keys (a bloom missing keys
-    would break the anti-join's exactness; a superset only costs extra
-    join probes).  A kill between commit and this amend leaves the
-    manifest without a ``bloom`` entry → the resume path falls back to
-    the cold rebuild, so correctness never depends on the sidecar.
+    filter bytes are written (atomic tmp+rename) to
+    ``_bloom/v<N>.<kind>.bin`` and referenced from manifest ``v<N>``
+    under the key ``filt.kind`` (one of ``catalog.SIDECAR_KEYS``), with
+    the filter's geometry, via :meth:`SnapshotCatalog.amend` AFTER the
+    round's seen-delta was merged, so a persisted filter is always a
+    SUPERSET of that manifest's seen keys (a filter missing keys would
+    break the anti-join's exactness; a superset only costs extra join
+    probes).  A kill between commit and this amend leaves the manifest
+    without the entry → the resume path falls back to the cold rebuild,
+    so correctness never depends on the sidecar.
     """
     d = catalog.root / "_bloom"
     d.mkdir(exist_ok=True)
-    path = d / f"v{version:06d}.bin"
+    path = d / f"v{version:06d}.{filt.kind}.bin"
     tmp = path.with_suffix(".tmp")
-    tmp.write_bytes(bloom.bits.tobytes())
+    tmp.write_bytes(filt.to_bytes())
     os.rename(tmp, path)
     catalog.amend(
         version,
-        {"bloom": {"file": path.name, "m": bloom.m, "k": bloom.k,
-                   "n_expected": n_expected}},
+        {filt.kind: {"file": path.name, **filt.geometry,
+                     "n_expected": n_expected}},
     )
-
-
-def save_cuckoo_sidecar(
-    catalog: SnapshotCatalog, version: int, cf: CuckooFilter64,
-    n_expected: int,
-) -> None:
-    """Cuckoo analog of :func:`save_bloom_sidecar` — same superset
-    invariant, same kill-window fallback (a manifest without a
-    ``cuckoo`` entry cold-rebuilds from the seen table).  The table
-    serializes like the bitmap (atomic tmp+rename under ``_bloom/``);
-    the manifest entry records the geometry so resume can reject a
-    sidecar sized for a different ``n_expected``."""
-    d = catalog.root / "_bloom"
-    d.mkdir(exist_ok=True)
-    path = d / f"v{version:06d}.cuckoo.bin"
-    tmp = path.with_suffix(".tmp")
-    tmp.write_bytes(cf.table.tobytes())
-    os.rename(tmp, path)
-    catalog.amend(
-        version,
-        {"cuckoo": {"file": path.name, "n_buckets": cf.n_buckets,
-                    "n_expected": n_expected}},
-    )
-
-
-def load_cuckoo_sidecar(
-    catalog: SnapshotCatalog, n_expected: int
-) -> CuckooFilter64 | None:
-    """Reconstruct the persisted cuckoo filter for the CURRENT manifest,
-    or ``None`` when absent / mis-sized / missing on disk."""
-    entry = catalog.manifest().get("cuckoo")
-    if not entry or entry["n_expected"] != n_expected:
-        return None
-    path = catalog.root / "_bloom" / entry["file"]
-    if not path.exists():
-        return None
-    table = np.frombuffer(path.read_bytes(), dtype=np.uint16).reshape(
-        entry["n_buckets"], CuckooFilter64.SLOTS
-    )
-    cf = CuckooFilter64(n_expected, table=table.copy())
-    if cf.n_buckets != entry["n_buckets"]:
-        return None
-    return cf
 
 
 def load_bloom_sidecar(
-    catalog: SnapshotCatalog, n_expected: int
-) -> BloomFilter64 | None:
-    """Reconstruct the persisted Bloom filter for the CURRENT manifest,
-    or ``None`` when absent / sized for a different ``n_expected`` /
-    missing on disk — callers then cold-rebuild from the seen table."""
-    entry = catalog.manifest().get("bloom")
+    catalog: SnapshotCatalog, n_expected: int, kind: str = "bloom"
+) -> BloomFilter64 | CuckooFilter64 | None:
+    """Reconstruct the persisted ``kind`` filter for the CURRENT
+    manifest, or ``None`` when absent / sized for a different
+    ``n_expected`` / missing on disk / of a geometry other than the
+    manifest records — callers then cold-rebuild from the seen table."""
+    entry = catalog.manifest().get(kind)
     if not entry or entry["n_expected"] != n_expected:
         return None
     path = catalog.root / "_bloom" / entry["file"]
     if not path.exists():
         return None
-    bits = np.frombuffer(path.read_bytes(), dtype=np.uint8).copy()
-    bf = BloomFilter64(n_expected, bits=bits)
-    if bf.m != entry["m"] or bf.k != entry["k"]:
+    cls = {"bloom": BloomFilter64, "cuckoo": CuckooFilter64}[kind]
+    filt = cls.from_bytes(path.read_bytes(), n_expected)
+    if any(entry.get(k) != v for k, v in filt.geometry.items()):
         return None
-    return bf
+    return filt
 
 
 def run_round(
@@ -176,17 +137,14 @@ def run_round(
     watermark: str,
     round_id: int,
     bloom: BloomFilter64 | CuckooFilter64 | None = None,
-    salt_buckets: int = 16,
-    fetch_parallelism: int | None = None,
     expand: bool = False,
     bloom_expected: int = 1_000_000,
 ) -> dict:
     """Execute one round against catalog state; returns round stats.
 
-    When ``bloom`` is given it is OR-updated in place with this round's
-    seen delta as part of the round — built from the still-cached
-    results delta, not re-read from the just-written parquet (r1 spent
-    an extra read job per round on that).
+    When the seen filter ``bloom`` (either kind) is given, this round's
+    seen delta is merged into it in place as part of the round, and the
+    merged filter is persisted as the version's sidecar.
 
     Every Spark job the round launches is tagged with job group
     ``round-<id>`` so the per-round job count is observable via the
@@ -213,7 +171,7 @@ def run_round(
     candidates = anti_join_seen(frontier, seen, "url_hash", bloom)
     round_caches: list = []
     decisions = schedule_round(
-        candidates, host_policy, watermark, salt_buckets, caches=round_caches
+        candidates, host_policy, watermark, caches=round_caches
     )
     # one pass, many consumers (results / frontier' / metrics) → cache.
     # decisions is NARROW (politeness.py): wide frontier columns are
@@ -250,7 +208,7 @@ def run_round(
     # and results persist captions + verdicts, never raw payloads
     # (matching the reference, which stores extracted records only —
     # /root/reference/deepseek_analyzer.py:225-242)
-    validated = fetch_and_validate(scheduled, parallelism=fetch_parallelism)
+    validated = fetch_and_validate(scheduled)
     verdicts = validated.select(
         F.col("url_hash").alias("uh"), "caption", "valid", "psnr_db"
     )
@@ -421,14 +379,14 @@ def run_round(
         # would miss this round's keys (filter ⊇ seen broken)
         delta_path = catalog.manifest(version)["tables"]["seen"]["paths"][-1]
         delta_keys = spark.read.parquet(delta_path)
-        if isinstance(bloom, CuckooFilter64):
-            bloom.merge(build_cuckoo(delta_keys, "url_hash", bloom_expected))
-            save_cuckoo_sidecar(catalog, version, bloom, bloom_expected)
-        else:
-            bloom.merge(build_bloom(delta_keys, "url_hash", bloom_expected))
-            # persist the merged bitmap against this round's manifest so a
-            # resume loads it instead of re-scanning the whole seen table
-            save_bloom_sidecar(catalog, version, bloom, bloom_expected)
+        # the delta filter takes the live filter's kind and geometry
+        # (both sized from bloom_expected); persisting the merged filter
+        # against this round's manifest lets a resume load it instead of
+        # re-scanning the whole seen table
+        bloom.merge(build_filter(
+            delta_keys, "url_hash", bloom_expected, type(bloom)(bloom_expected)
+        ))
+        save_bloom_sidecar(catalog, version, bloom, bloom_expected)
     decisions.unpersist()
     results_delta.unpersist()
     for cached in round_caches:

@@ -206,15 +206,12 @@ class TestCuckoo:
         assert a.might_contain(k1).all() and a.might_contain(k2).all()
 
     def test_invalidate_reopens_urls(self, spark):
-        """The re-crawl path: distributed build, then invalidate_seen
-        un-sees a batch — those URLs come back from the prefiltered
-        anti-join (schedulable again) while every other seen URL stays
-        excluded, exactly (vs the plain anti-join)."""
-        from cex_crawler_spark.operators.seen import (
-            anti_join_seen,
-            build_cuckoo,
-            invalidate_seen,
-        )
+        """The re-crawl path (what ``plans/driver.requeue`` does): a
+        driver-side cuckoo build, then ``delete_many`` plus the matching
+        anti-join of the seen table un-see a batch — those URLs come back
+        from the prefiltered anti-join (schedulable again) while every
+        other seen URL stays excluded, exactly (vs the plain anti-join)."""
+        from cex_crawler_spark.operators.seen import anti_join_seen, build_cuckoo
 
         frontier = spark.range(2000).select(F.xxhash64("id").alias("url_hash"))
         seen = spark.range(500, 1200).select(F.xxhash64("id").alias("url_hash"))
@@ -229,7 +226,10 @@ class TestCuckoo:
         assert before == exact and len(exact) == 2000 - 700
 
         recrawl = spark.range(800, 900).select(F.xxhash64("id").alias("url_hash"))
-        seen2 = invalidate_seen(seen, recrawl, cf)
+        cf.delete_many(
+            np.array([r["url_hash"] for r in recrawl.collect()], dtype=np.int64)
+        )
+        seen2 = seen.join(recrawl, "url_hash", "left_anti")
         after = sorted(
             r["url_hash"]
             for r in anti_join_seen(frontier, seen2, bloom=cf).collect()
@@ -238,6 +238,34 @@ class TestCuckoo:
             r["url_hash"] for r in anti_join_seen(frontier, seen2).collect()
         )
         assert after == exact2 and len(exact2) == 2000 - 600
+
+
+@pytest.mark.parametrize("kind", ["bloom", "cuckoo"])
+def test_per_partition_build_matches_driver_build(spark, monkeypatch, kind):
+    """Above ``_DRIVER_BUILD_MAX`` expected keys the filter is built per
+    partition and merged on the driver.  Bloom: byte-equal to the driver
+    build (OR is order-free).  Cuckoo (merge re-places entries, so the
+    table layout may differ): no false negatives, and the same answers
+    as the driver build over the keys plus a probe set."""
+    from cex_crawler_spark.operators import seen as seen_mod
+
+    build = {"bloom": seen_mod.build_bloom, "cuckoo": seen_mod.build_cuckoo}[kind]
+    keys_df = spark.range(0, 3000, numPartitions=4).select(
+        F.xxhash64("id").alias("url_hash")
+    )
+    on_driver = build(keys_df, "url_hash", 5000)
+    monkeypatch.setattr(seen_mod, "_DRIVER_BUILD_MAX", 0)
+    per_partition = build(keys_df, "url_hash", 5000)
+
+    keys = np.array([r["url_hash"] for r in keys_df.collect()], dtype=np.int64)
+    probe = np.random.default_rng(3).integers(
+        -(2**63), 2**63, size=20_000, dtype=np.int64
+    )
+    assert per_partition.might_contain(keys).all()
+    if kind == "bloom":
+        assert per_partition.to_bytes() == on_driver.to_bytes()
+    both = np.concatenate([keys, probe])
+    assert (per_partition.might_contain(both) == on_driver.might_contain(both)).all()
 
 
 class TestRobots:

@@ -61,12 +61,12 @@ def test_bloom_prefilter_actually_prunes(spark):
     # than the fact table holds.  Measure the survivor count through the
     # same prefilter the join uses.
     from cex_crawler_spark.operators.joins import _with_join_key, _JK
-    from cex_crawler_spark.operators.seen import bloom_prefilter, build_bloom
+    from cex_crawler_spark.operators.seen import build_bloom, prefilter
 
     fact, build = _sides(spark)
     build_keys = _with_join_key(build.select("k").distinct(), ["k"])
     bf = build_bloom(build_keys, _JK, 300, fpp=0.01)
-    _, maybe = bloom_prefilter(_with_join_key(fact, ["k"]), _JK, bf)
+    _, maybe = prefilter(_with_join_key(fact, ["k"]), _JK, bf)
     n_fact = fact.count()
     n_maybe = maybe.count()
     n_true = fact.join(build.select("k").distinct(), "k", "left_semi").count()

@@ -27,13 +27,13 @@ def test_interrupted_resume_bit_identical(spark, tmp_path):
 
     cat_a = SnapshotCatalog(tmp_path / "uninterrupted")
     bootstrap(cat_a, seeds, WATERMARK)
-    crawl(spark, cat_a, policy, WATERMARK, max_rounds=30, use_bloom=False)
+    crawl(spark, cat_a, policy, WATERMARK, max_rounds=30, filter_kind=None)
 
     cat_b = SnapshotCatalog(tmp_path / "interrupted")
     bootstrap(cat_b, seeds, WATERMARK)
-    crawl(spark, cat_b, policy, WATERMARK, max_rounds=2, use_bloom=False)  # "kill"
+    crawl(spark, cat_b, policy, WATERMARK, max_rounds=2, filter_kind=None)  # "kill"
     assert not cat_b.read(spark, "frontier").isEmpty()
-    crawl(spark, cat_b, policy, WATERMARK, max_rounds=30, use_bloom=False)  # resume
+    crawl(spark, cat_b, policy, WATERMARK, max_rounds=30, filter_kind=None)  # resume
 
     assert _final_state(spark, cat_a) == _final_state(spark, cat_b)
 
@@ -45,7 +45,7 @@ def test_resume_with_bloom_matches_no_bloom(spark, tmp_path):
 
     cat_a = SnapshotCatalog(tmp_path / "nobloom")
     bootstrap(cat_a, seeds, WATERMARK)
-    crawl(spark, cat_a, policy, WATERMARK, max_rounds=30, use_bloom=False)
+    crawl(spark, cat_a, policy, WATERMARK, max_rounds=30, filter_kind=None)
 
     cat_b = SnapshotCatalog(tmp_path / "bloom")
     bootstrap(cat_b, seeds, WATERMARK)
@@ -80,9 +80,9 @@ def test_resume_loads_persisted_bloom_no_seen_rescan(spark, tmp_path, monkeypatc
     def no_rebuild(*a, **k):
         raise AssertionError("resume cold-rebuilt the bloom from the seen table")
 
-    # round-level delta builds (round.build_bloom) stay intact; only the
+    # round-level delta builds (round.build_filter) stay intact; only the
     # driver's cold-rebuild path is fenced off
-    monkeypatch.setattr(drv, "build_bloom", no_rebuild)
+    monkeypatch.setattr(drv, "build_filter", no_rebuild)
     crawl(spark, cat, policy, WATERMARK, max_rounds=30, bloom_expected=5000)
 
     bf = load_bloom_sidecar(cat, 5000)
@@ -101,7 +101,7 @@ def test_resume_loads_persisted_bloom_no_seen_rescan(spark, tmp_path, monkeypatc
 
     cat_a = SnapshotCatalog(tmp_path / "nobloom_truth")
     bootstrap(cat_a, seeds, WATERMARK)
-    crawl(spark, cat_a, policy, WATERMARK, max_rounds=30, use_bloom=False)
+    crawl(spark, cat_a, policy, WATERMARK, max_rounds=30, filter_kind=None)
     assert _final_state(spark, cat_a) == _final_state(spark, cat)
 
 
@@ -121,7 +121,7 @@ def test_task_failure_retry_exactly_once(spark, tmp_path, monkeypatch):
 
     cat_a = SnapshotCatalog(tmp_path / "clean")
     bootstrap(cat_a, seeds, WATERMARK)
-    crawl(spark, cat_a, policy, WATERMARK, max_rounds=30, use_bloom=False)
+    crawl(spark, cat_a, policy, WATERMARK, max_rounds=30, filter_kind=None)
 
     latch = tmp_path / "fault_latch"
     monkeypatch.setattr(
@@ -131,7 +131,7 @@ def test_task_failure_retry_exactly_once(spark, tmp_path, monkeypatch):
     )
     cat_b = SnapshotCatalog(tmp_path / "faulted")
     bootstrap(cat_b, seeds, WATERMARK)
-    crawl(spark, cat_b, policy, WATERMARK, max_rounds=30, use_bloom=False)
+    crawl(spark, cat_b, policy, WATERMARK, max_rounds=30, filter_kind=None)
 
     assert latch.exists()  # the fault actually fired (and only once)
     assert _final_state(spark, cat_a) == _final_state(spark, cat_b)
@@ -151,16 +151,16 @@ def test_resume_pre_priority_catalog(spark, tmp_path):
 
     cat_a = SnapshotCatalog(tmp_path / "truth")
     bootstrap(cat_a, seeds, WATERMARK)
-    crawl(spark, cat_a, policy, WATERMARK, max_rounds=30, use_bloom=False)
+    crawl(spark, cat_a, policy, WATERMARK, max_rounds=30, filter_kind=None)
 
     cat_b = SnapshotCatalog(tmp_path / "legacy")
     bootstrap(cat_b, seeds, WATERMARK)
-    crawl(spark, cat_b, policy, WATERMARK, max_rounds=2, use_bloom=False)
+    crawl(spark, cat_b, policy, WATERMARK, max_rounds=2, filter_kind=None)
     # simulate the legacy layout: rewrite the frontier without priority
     legacy = cat_b.read(spark, "frontier").drop("priority")
     assert "priority" not in legacy.columns
     cat_b.commit(cat_b.current_round(), {"frontier": (legacy, OVERWRITE)})
-    crawl(spark, cat_b, policy, WATERMARK, max_rounds=30, use_bloom=False)
+    crawl(spark, cat_b, policy, WATERMARK, max_rounds=30, filter_kind=None)
 
     assert _final_state(spark, cat_a) == _final_state(spark, cat_b)
 
@@ -178,7 +178,7 @@ def test_crawl_with_periodic_compaction_identical(spark, tmp_path):
 
     cat_a = SnapshotCatalog(tmp_path / "plain")
     bootstrap(cat_a, seeds, WATERMARK)
-    crawl(spark, cat_a, policy, WATERMARK, max_rounds=30, use_bloom=False)
+    crawl(spark, cat_a, policy, WATERMARK, max_rounds=30, filter_kind=None)
     n_rounds = len(cat_a.read(spark, "results").select("round").distinct().collect())
     assert n_rounds >= 3  # enough rounds for compaction to trigger repeatedly
 
@@ -233,7 +233,7 @@ def test_requeue_refetches_invalidated_urls(spark, tmp_path):
 
     cat = SnapshotCatalog(tmp_path / "requeue")
     bootstrap(cat, seeds, WATERMARK)
-    crawl(spark, cat, policy, WATERMARK, max_rounds=30, use_bloom=False)
+    crawl(spark, cat, policy, WATERMARK, max_rounds=30, filter_kind=None)
     assert cat.read(spark, "frontier").isEmpty()
     results1 = cat.read(spark, "results").collect()
     fetched1 = {r["url_hash"] for r in results1 if r["status"] == "fetched"}
@@ -259,7 +259,7 @@ def test_requeue_refetches_invalidated_urls(spark, tmp_path):
     stats2 = requeue(spark, cat, target)
     assert stats2["requeued"] == 0 and stats2["unseen"] == 0
 
-    crawl(spark, cat, policy, WATERMARK, max_rounds=30, use_bloom=False)
+    crawl(spark, cat, policy, WATERMARK, max_rounds=30, filter_kind=None)
     results2 = cat.read(spark, "results").collect()
     # rows added by the second crawl = totals minus the first pass
     from collections import Counter
@@ -287,7 +287,7 @@ def test_cuckoo_crawl_lifecycle_matches_no_filter(spark, tmp_path):
     the filter)."""
     from cex_crawler_spark.operators.seen import CuckooFilter64
     from cex_crawler_spark.plans.driver import requeue
-    from cex_crawler_spark.plans.round import load_cuckoo_sidecar
+    from cex_crawler_spark.plans.round import load_bloom_sidecar
 
     seeds = gen_frontier(spark, 250, n_payloads=60)
     policy = gen_host_policy(spark).withColumn("budget_per_round", F.lit(30))
@@ -309,7 +309,7 @@ def test_cuckoo_crawl_lifecycle_matches_no_filter(spark, tmp_path):
         )
         cuckoo = None
         if crawl_kw.get("filter_kind") == "cuckoo":
-            cuckoo = load_cuckoo_sidecar(cat, 5000)
+            cuckoo = load_bloom_sidecar(cat, 5000, "cuckoo")
             assert isinstance(cuckoo, CuckooFilter64)  # sidecar resume works
         requeue(spark, cat, target, cuckoo=cuckoo)
         crawl(spark, cat, policy, WATERMARK, max_rounds=30, **crawl_kw)
@@ -317,7 +317,7 @@ def test_cuckoo_crawl_lifecycle_matches_no_filter(spark, tmp_path):
 
     cat_c = lifecycle(tmp_path / "cuckoo", filter_kind="cuckoo",
                       bloom_expected=5000)
-    cat_n = lifecycle(tmp_path / "nofilter", use_bloom=False)
+    cat_n = lifecycle(tmp_path / "nofilter", filter_kind=None)
     assert _final_state(spark, cat_c) == _final_state(spark, cat_n)
 
 
@@ -431,7 +431,7 @@ def test_cuckoo_sidecar_survives_compact_and_vacuum(spark, tmp_path,
     import numpy as np
 
     import cex_crawler_spark.plans.driver as drv
-    from cex_crawler_spark.plans.round import load_cuckoo_sidecar
+    from cex_crawler_spark.plans.round import load_bloom_sidecar
 
     seeds = gen_frontier(spark, 250, n_payloads=60)
     policy = gen_host_policy(spark).withColumn("budget_per_round", F.lit(30))
@@ -442,16 +442,16 @@ def test_cuckoo_sidecar_survives_compact_and_vacuum(spark, tmp_path,
     cat.delete_rows("seen", spark.createDataFrame([(-1,)], "url_hash long"))
     cat.compact(spark, "seen")
     cat.vacuum(keep_versions=1)
-    assert load_cuckoo_sidecar(cat, 5000) is not None
+    assert load_bloom_sidecar(cat, 5000, "cuckoo") is not None
 
     def no_rebuild(*a, **k):
         raise AssertionError("resume cold-rebuilt the cuckoo filter")
 
-    monkeypatch.setattr(drv, "build_cuckoo", no_rebuild)
+    monkeypatch.setattr(drv, "build_filter", no_rebuild)
     crawl(spark, cat, policy, WATERMARK, max_rounds=30,
           filter_kind="cuckoo", bloom_expected=5000)
 
-    cf = load_cuckoo_sidecar(cat, 5000)
+    cf = load_bloom_sidecar(cat, 5000, "cuckoo")
     keys = np.array(
         [r["url_hash"] for r in cat.read(spark, "seen").collect()],
         dtype=np.int64,

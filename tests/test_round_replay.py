@@ -27,7 +27,8 @@ def _run_both(spark, tmp_path, n_seeds, rounds, policy, bloom=True):
     catalog = SnapshotCatalog(tmp_path)
     bootstrap(catalog, seeds, WATERMARK)
     stats = crawl(spark, catalog, policy, WATERMARK, max_rounds=rounds,
-                  bloom_expected=10_000, use_bloom=bloom)
+                  bloom_expected=10_000,
+                  filter_kind="bloom" if bloom else None)
     engine = [r.asDict() for r in catalog.read(spark, "results").collect()]
     oracle = replay_crawl(
         [r.asDict() for r in seeds.collect()],
@@ -151,7 +152,7 @@ def test_link_expansion_matches_oracle(spark, tmp_path):
     seeds = gen_frontier(spark, 200, n_payloads=100)
     catalog = SnapshotCatalog(tmp_path)
     bootstrap(catalog, seeds, WATERMARK)
-    crawl(spark, catalog, policy, WATERMARK, max_rounds=10, use_bloom=True,
+    crawl(spark, catalog, policy, WATERMARK, max_rounds=10,
           bloom_expected=10_000, expand=True)
     engine = [r.asDict() for r in catalog.read(spark, "results").collect()]
     oracle = replay_crawl(
