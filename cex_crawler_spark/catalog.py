@@ -375,16 +375,6 @@ class SnapshotCatalog:
                 "version": version,
                 "round": round_id,
                 "tables": tables,
-                # durable table properties (Iceberg-style): carried
-                # forward through EVERY commit unless the writer
-                # overrides them.  The streaming sink's exactly-once
-                # guard depends on this — its per-table high-water batch
-                # id must survive interleaved non-stream commits, or a
-                # sink-commit → other-commit → crash sequence would
-                # replay the last batch as new (double append).
-                **{
-                    k: base[k] for k in ("stream_batches",) if k in base
-                },
                 **(extra or {}),
             }
             try:
@@ -456,14 +446,10 @@ class SnapshotCatalog:
                 "version": version,
                 "round": base["round"],
                 "tables": tables,
-                # durable properties ride through, same as commit();
-                # the filter sidecars stay valid — they are a SUPERSET
-                # guarantee and deleting rows only shrinks the true set
-                **{
-                    k: base[k]
-                    for k in ("stream_batches", *SIDECAR_KEYS)
-                    if k in base
-                },
+                # the filter sidecars ride through and stay valid — they
+                # are a SUPERSET guarantee and deleting rows only shrinks
+                # the true set
+                **{k: base[k] for k in SIDECAR_KEYS if k in base},
             }
             try:
                 self._link_manifest(version, new_manifest, attempt)

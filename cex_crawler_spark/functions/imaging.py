@@ -164,69 +164,3 @@ def phash64(arr: np.ndarray) -> int:
     if val >= 1 << 63:
         val -= 1 << 64
     return val
-
-
-# ------------------------------------------------- fake video / audio
-# Deterministic container stand-ins (STUBS for ffmpeg/soundfile, which
-# this sandbox lacks).  What they deliberately DO share with the real
-# formats is the access pattern the Spark plumbing depends on: rawv
-# carries a frame-offset INDEX so sampling every Nth frame decodes only
-# the sampled frames (a real ffmpeg path seeks keyframes the same way),
-# and rawa is linear PCM whose features vectorize over one numpy array.
-
-_RAWV_MAGIC = b"RAWV"
-_RAWA_MAGIC = b"RAWA"
-
-
-def rawv_encode(frames: list[np.ndarray]) -> bytes:
-    """Pack (h, w, 3) uint8 frames: magic, w, h, n, offset index, then
-    one zlib block per frame — random-access by construction."""
-    if not frames:
-        raise ValueError("rawv_encode needs at least one frame")
-    h, w, _ = frames[0].shape
-    blocks = []
-    for f in frames:
-        if f.shape != (h, w, 3) or f.dtype != np.uint8:
-            raise ValueError("all frames must be identical (h, w, 3) uint8")
-        blocks.append(zlib.compress(f.tobytes(), 1))
-    head = struct.pack(">4sHHI", _RAWV_MAGIC, w, h, len(blocks))
-    off = len(head) + 8 * len(blocks)
-    index = b""
-    for b in blocks:
-        index += struct.pack(">II", off, len(b))
-        off += len(b)
-    return head + index + b"".join(blocks)
-
-
-def rawv_info(data: bytes) -> tuple[int, int, int]:
-    """(w, h, n_frames) from the header alone."""
-    magic, w, h, n = struct.unpack(">4sHHI", data[:12])
-    if magic != _RAWV_MAGIC:
-        raise ValueError("not a rawv container")
-    return w, h, n
-
-
-def rawv_decode_frame(data: bytes, i: int) -> np.ndarray:
-    """Decode ONLY frame ``i`` — reads its index entry and its block;
-    bytes of other frames are never touched (tested by corrupting them)."""
-    w, h, n = rawv_info(data)
-    if not 0 <= i < n:
-        raise IndexError(f"frame {i} of {n}")
-    off, size = struct.unpack(">II", data[12 + 8 * i : 20 + 8 * i])
-    raw = zlib.decompress(data[off : off + size])
-    return np.frombuffer(raw, dtype=np.uint8).reshape(h, w, 3)
-
-
-def rawa_encode(samples: np.ndarray, sample_rate: int) -> bytes:
-    """Pack mono float32 PCM (explicit little-endian — byte-stable
-    across hosts): magic, sample_rate, then the raw samples."""
-    s = np.asarray(samples).astype("<f4")
-    return struct.pack(">4sI", _RAWA_MAGIC, sample_rate) + s.tobytes()
-
-
-def rawa_decode(data: bytes) -> tuple[np.ndarray, int]:
-    """(samples float32, sample_rate)."""
-    magic, sr = struct.unpack(">4sI", data[:8])
-    if magic != _RAWA_MAGIC:
-        raise ValueError("not a rawa container")
-    return np.frombuffer(data[8:], dtype="<f4").astype(np.float32), sr

@@ -34,13 +34,11 @@ from ..functions.text import fingerprint64, normalize_text, word_shingles
 
 # connected_components switches to a driver-side union-find below this
 # doubled-edge count (collect of ~16 B/edge); see the function docstring.
-_CC_DRIVER_MAX = int(
-    __import__("os").environ.get("SPARK_GRAFT_CC_DRIVER_MAX", "200000")
-)
+_CC_DRIVER_MAX = 200_000
 
 __all__ = [
     "cap_bucket_rows", "exact_dedup", "ngram_jaccard_pairs",
-    "minhash_signature", "minhash_lsh_pairs", "duplicate_span_stats",
+    "minhash_lsh_pairs", "duplicate_span_stats",
     "winnow_fingerprints", "connected_components",
     "dedup_cluster_representatives", "hamming_near_dup_candidates",
     "simhash_dedup_candidates", "simhash64", "py_simhash64",
@@ -197,17 +195,6 @@ def _signature_udf(num_hashes: int):
         return pd.Series(out)
 
     return sig
-
-
-def _signature_expr(shingle_col, num_hashes: int) -> F.Column:
-    """MinHash signature from a shingle array (hash JVM-side, permute numpy-side)."""
-    base = F.transform(shingle_col, lambda s: F.xxhash64(s))
-    return _signature_udf(num_hashes)(base)
-
-
-def minhash_signature(text: F.Column, num_hashes: int = 64, k: int = 3) -> F.Column:
-    """MinHash signature of a text column (array of per-permutation minima)."""
-    return _signature_expr(F.array_distinct(word_shingles(text, k)), num_hashes)
 
 
 def minhash_lsh_pairs(
@@ -711,6 +698,10 @@ def connected_components(
     representative per connected component of the pair graph (a~b~c must
     collapse to one doc even if (a,c) was never emitted).  This is the
     step between the pair operators above and "drop the duplicates".
+    A pair with a NULL on either side names no edge and is dropped
+    before anything else, so a NULL never appears as an id or a
+    component, and an id seen only beside a NULL is absent from the
+    output.
 
     Algorithm: distributed min-label propagation with PATH HALVING —
     each iteration min-merges two legs, (a) labels pushed one hop along
@@ -734,7 +725,7 @@ def connected_components(
     """
     edges_fwd = pairs.select(
         F.col(id_a).alias("src"), F.col(id_b).alias("dst")
-    )
+    ).filter(F.col("src").isNotNull() & F.col("dst").isNotNull())
     edges = (
         edges_fwd.unionByName(
             edges_fwd.select(
@@ -751,8 +742,8 @@ def connected_components(
     # checkpoint job, so a 3-round convergence on a 10k-edge graph spent
     # seconds of pure job latency.  Labels are identical (component =
     # min reachable id, resolved exactly below).  Above the threshold
-    # (env SPARK_GRAFT_CC_DRIVER_MAX, default 200k edges ≈ 3 MB of
-    # longs) the O(log d) distributed loop is unchanged.
+    # (``_CC_DRIVER_MAX`` = 200k edges ≈ 3 MB of longs) the O(log d)
+    # distributed loop is unchanged.
     if driver_max is None:
         driver_max = _CC_DRIVER_MAX
     n_edges = edges.count()
@@ -891,7 +882,7 @@ def _simhash_majority64(token_hashes: pd.Series) -> pd.Series:
 
     Pure numpy over pre-hashed longs: the tokenize+hash stage runs
     JVM-side (whole-stage codegen xxhash64 — the same split MinHash uses,
-    :func:`_signature_expr`), so no interpreted-Python per-token work
+    :func:`minhash_lsh_pairs`), so no interpreted-Python per-token work
     remains (VERDICT r3 item 1; the r2 version called the from-spec
     pure-Python XXH64 once per token inside the batch loop).
     """

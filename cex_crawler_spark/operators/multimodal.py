@@ -1,15 +1,13 @@
 """Multimodal column operators — binary payloads with typed metadata.
 
-Images/audio/video ride through the engine as opaque ``binary`` columns
-plus typed metadata (w, h, fmt / sample_rate / duration), exactly like
-the crawl payload table (BASELINE input_hint).  The Spark-side plumbing
-here is real and tested — schemas, Arrow batching, mapInPandas
-signatures, partition behavior; the media codecs themselves are the
-engine's own PNG / fake-lossy pair (functions/imaging.py) for images and
-clearly-marked stubs for formats this container has no library for.
+Images ride through the engine as opaque ``binary`` columns plus typed
+metadata (w, h, fmt), exactly like the crawl payload table (BASELINE
+input_hint).  The Spark-side plumbing here is real and tested — schemas,
+Arrow batching, mapInPandas signatures, partition behavior; the codecs
+are the engine's own PNG / fake-lossy pair (functions/imaging.py).
 
-Production swap: replace the codec calls with Pillow / libjpeg / ffmpeg
-inside the same batch functions — no plan changes.
+Production swap: replace the codec calls with Pillow / libjpeg inside
+the same batch functions — no plan changes.
 """
 
 from __future__ import annotations
@@ -70,38 +68,6 @@ def extract_image_features(payloads: DataFrame) -> DataFrame:
     return src.mapInPandas(run, schema=IMAGE_FEATURES_SCHEMA)
 
 
-def resize_images(payloads: DataFrame, out_w: int, out_h: int) -> DataFrame:
-    """Nearest-neighbor resize, re-encoded as PNG (pure numpy — real).
-
-    Returns (image_id, bytes, w, h, fmt) with the resized payload.
-    """
-    src = payloads.select("image_id", "bytes", "fmt")
-    schema = T.StructType(
-        [
-            T.StructField("image_id", T.StringType()),
-            T.StructField("bytes", T.BinaryType()),
-            T.StructField("w", T.IntegerType()),
-            T.StructField("h", T.IntegerType()),
-            T.StructField("fmt", T.StringType()),
-        ]
-    )
-
-    def run(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from ..functions.imaging import decode_image, png_encode
-
-        for pdf in it:
-            rows = []
-            for iid, b, fmt in zip(pdf["image_id"], pdf["bytes"], pdf["fmt"]):
-                arr = decode_image(bytes(b), fmt)
-                ys = (np.arange(out_h) * arr.shape[0] // out_h)
-                xs = (np.arange(out_w) * arr.shape[1] // out_w)
-                resized = arr[ys][:, xs]
-                rows.append((iid, png_encode(resized), out_w, out_h, "png"))
-            yield pd.DataFrame(rows, columns=["image_id", "bytes", "w", "h", "fmt"])
-
-    return src.mapInPandas(run, schema=schema)
-
-
 def jitter_images(payloads: DataFrame, amplitude: int = 8) -> DataFrame:
     """Deterministic ±``amplitude`` checkerboard pixel jitter, re-encoded
     as PNG — emulates lossy re-encode noise (the small pixel-level edits
@@ -136,104 +102,6 @@ def jitter_images(payloads: DataFrame, amplitude: int = 8) -> DataFrame:
             yield pd.DataFrame(rows, columns=["image_id", "bytes", "fmt"])
 
     return src.mapInPandas(run, schema=schema)
-
-
-def sample_video_frames(videos: DataFrame, every_n: int = 30) -> DataFrame:
-    """Frame sampling over a binary video column — REAL plumbing, fake
-    codec.
-
-    The container is the engine's deterministic ``rawv`` stand-in
-    (functions/imaging.py — this sandbox has no ffmpeg), chosen to share
-    the property a production decoder's plan depends on: a frame-offset
-    index, so sampling every ``every_n``-th frame decodes ONLY those
-    frames (ffmpeg seeks keyframes the same way — the scan never pays
-    for frames it drops).  Emits one row per sampled frame, PNG-encoded,
-    so downstream image operators (features/phash/near-dups) compose
-    unchanged.  Swap ``rawv_*`` for PyAV calls in production — same
-    batch fn, same schema, same plan.
-
-    One video explodes to n/every_n rows — at 100 TB repartition the
-    OUTPUT by (video_id, frame_no) if a skewed long video dominates a
-    task; input rows are independent, so Arrow batch shape is the only
-    per-task bound.
-    """
-    schema = T.StructType(
-        [
-            T.StructField("video_id", T.StringType()),
-            T.StructField("frame_no", T.IntegerType()),
-            T.StructField("w", T.IntegerType()),
-            T.StructField("h", T.IntegerType()),
-            T.StructField("n_frames", T.IntegerType()),
-            T.StructField("frame_png", T.BinaryType()),
-        ]
-    )
-
-    def run(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from ..functions.imaging import (
-            png_encode,
-            rawv_decode_frame,
-            rawv_info,
-        )
-
-        for pdf in it:
-            rows = []
-            for vid, b in zip(pdf["video_id"], pdf["bytes"]):
-                data = bytes(b)
-                w, h, n = rawv_info(data)
-                for fno in range(0, n, every_n):
-                    rows.append(
-                        (vid, fno, w, h, n,
-                         png_encode(rawv_decode_frame(data, fno)))
-                    )
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in schema.fields]
-            )
-
-    return videos.select("video_id", "bytes").mapInPandas(run, schema=schema)
-
-
-def audio_features(audio: DataFrame) -> DataFrame:
-    """Audio features over a binary PCM column — REAL plumbing, fake
-    codec (``rawa`` float32 PCM stands in for soundfile; swap the decode
-    call in production — same batch fn, schema, plan).  Features are
-    numpy-vectorized over the whole sample array per row: duration,
-    RMS, peak, zero-crossing rate."""
-    schema = T.StructType(
-        [
-            T.StructField("audio_id", T.StringType()),
-            T.StructField("sample_rate", T.IntegerType()),
-            T.StructField("duration_s", T.DoubleType()),
-            T.StructField("rms", T.DoubleType()),
-            T.StructField("peak", T.DoubleType()),
-            T.StructField("zero_cross_rate", T.DoubleType()),
-        ]
-    )
-
-    def run(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from ..functions.imaging import rawa_decode
-
-        for pdf in it:
-            rows = []
-            for aid, b in zip(pdf["audio_id"], pdf["bytes"]):
-                s, sr = rawa_decode(bytes(b))
-                n = len(s)
-                rows.append(
-                    (
-                        aid,
-                        sr,
-                        n / sr if sr else 0.0,
-                        float(np.sqrt(np.mean(s**2))) if n else 0.0,
-                        float(np.abs(s).max()) if n else 0.0,
-                        float(np.mean(np.signbit(s[1:]) != np.signbit(s[:-1])))
-                        if n > 1
-                        else 0.0,
-                    )
-                )
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in schema.fields]
-            )
-
-    return audio.select("audio_id", "bytes").mapInPandas(run, schema=schema)
 
 
 # ----------------------------------------- aspect-ratio batch shaping

@@ -48,11 +48,6 @@ FRONTIER_COLS = [
     "duplicate_of",
 ]
 
-RESULT_COLS = [
-    "round", "host", "host_seq", "url", "url_hash", "status", "caption",
-    "valid", "psnr_db",
-]
-
 # frontier hive-partition fan-out: pmod(xxhash64(host), N).  Host-targeted
 # scans (recrawl one host, inspect a host's backlog) prune to 1/N of the
 # files; the full-frontier round scan reads everything either way.

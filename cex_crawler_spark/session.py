@@ -26,11 +26,6 @@ from pathlib import Path
 
 from pyspark.sql import SparkSession
 
-# Reference analog: the crawler renders all timestamps in Asia/Hong_Kong
-# (/root/reference/main.py:54, exchange/binance.py:239).  We keep the
-# session in UTC and convert explicitly at the edges.
-REFERENCE_TZ = "Asia/Hong_Kong"
-
 
 def get_spark(
     app_name: str = "cex_crawler_spark",
@@ -123,13 +118,10 @@ def prewarm_python_workers(spark: SparkSession) -> None:
     default) that cost belongs to session initialization, exactly like
     JVM startup, not to whichever query happens to touch Python first.
     One tiny pandas-UDF job over ``defaultParallelism`` single-row
-    partitions forks the full pool up front.  Disable with
-    ``SPARK_GRAFT_PREWARM=0`` (e.g. for pure-JVM workloads).
+    partitions forks the full pool up front.
     """
     sc = spark.sparkContext
     if getattr(sc, "_cex_py_prewarmed", False):
-        return
-    if os.environ.get("SPARK_GRAFT_PREWARM", "1") == "0":
         return
     import pandas as pd  # noqa: F401  (driver-side import mirrors worker)
     from pyspark.sql import functions as F

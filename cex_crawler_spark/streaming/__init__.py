@@ -1,1 +1,1 @@
-"""Structured Streaming analogs of the crawl's incremental semantics."""
+"""Windowed batch analogs of the crawl's incremental semantics."""

@@ -1,30 +1,25 @@
-"""Structured Streaming over the events table.
+"""Windowed aggregations over the events table.
 
 The reference is a cron-batch incremental crawler (SURVEY §2.12) — no
-true streams — but the engine exposes the streaming analogs a continuous
-crawl would need:
+true streams — so each round recomputes its windows in batch:
 
-- :func:`windowed_event_counts` — tumbling-window aggregation with a
-  watermark for late data (the F1 freshness filter's streaming twin);
-- :func:`stream_windowed_event_counts` — the same logical plan as a
-  readStream over a parquet directory; batch and stream share the
-  aggregation builder so correctness is testable in batch (DuckDB
-  time_bucket oracle) while the streaming wiring is exercised with a
-  bounded trigger in tests;
+- :func:`windowed_event_counts` — tumbling-window aggregation (the F1
+  freshness filter's windowed form; oracle: DuckDB time_bucket);
 - :func:`sessionize_events` — session windows per user (gap-based),
   batch implementation via the lag/cumsum idiom.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 
-def _window_agg(df: DataFrame, window: str = "1 hour") -> DataFrame:
+def windowed_event_counts(events: DataFrame, window: str = "1 hour") -> DataFrame:
+    """Batch tumbling-window agg — oracle: DuckDB time_bucket."""
     return (
-        df.groupBy(
+        events.groupBy(
             F.window("ts", window).alias("win"), F.col("event_type")
         )
         .agg(
@@ -37,37 +32,6 @@ def _window_agg(df: DataFrame, window: str = "1 hour") -> DataFrame:
             "n_events",
             "sum_value",
         )
-    )
-
-
-def windowed_event_counts(events: DataFrame, window: str = "1 hour") -> DataFrame:
-    """Batch tumbling-window agg — oracle: DuckDB time_bucket."""
-    return _window_agg(events, window)
-
-
-def stream_windowed_event_counts(
-    spark: SparkSession,
-    events_dir: str,
-    schema,
-    window: str = "1 hour",
-    watermark: str = "2 hours",
-):
-    """The same aggregation as an incremental stream with late-data bound.
-
-    Returns the streaming DataFrame; caller attaches writeStream (tests
-    use format('memory') + trigger(availableNow=True)).
-    """
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 4)
-        .parquet(events_dir)
-        # watermarks require TIMESTAMP (LTZ); testdata parquet stores NTZ.
-        # Session tz is UTC, so the cast is value-preserving.
-        .withColumn("ts", F.col("ts").cast("timestamp_ltz"))
-        .withWatermark("ts", watermark)
-    )
-    return _window_agg(stream, window).withColumn(
-        "window_start", F.col("window_start").cast("timestamp_ntz")
     )
 
 

@@ -1,33 +1,32 @@
-"""Streaming host-health windows — adaptive politeness as a live signal.
+"""Host-health windows — adaptive politeness per tumbling window.
 
 The batch tier (operators/recrawl.py adaptive_host_delay) recomputes
-per-host delays from the whole attempt log between rounds; a continuous
-crawl wants the same signal per tumbling window as fetches land, so the
-NEXT round's policy fold needs no full-log pass.  Batch and stream share
-one aggregation builder (the events.py discipline): correctness is
-proven in batch against a DuckDB time_bucket oracle, the streaming
-wiring with a bounded trigger.
+per-host delays from the whole attempt log between rounds; this tier
+computes the same signal per tumbling window, so the NEXT round's
+policy fold can read the latest window instead of the full log.
+Correctness is proven against a DuckDB time_bucket oracle.
 
-Streaming constraint, stated not hidden: percentile sketches aren't
-mergeable across Structured Streaming's state here, so the windowed
-tier clamps 3× the window MEAN latency (sum/count — both mergeable
-integers) instead of the batch tier's p95; the batch op remains the
-authority when both exist, and the same floor/ceiling/error-doubling
+The windowed tier clamps 3× the window MEAN latency (sum/count — both
+integers) instead of the whole-log tier's p95; the whole-log op remains
+the authority when both exist, and the same floor/ceiling/error-doubling
 rules apply (all integer arithmetic, engine-exact).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 DELAY_FLOOR_MS = 200
 DELAY_CEIL_MS = 60_000
 
 
-def _health_agg(df: DataFrame, window: str) -> DataFrame:
+def host_health_windows(
+    attempts: DataFrame, window: str = "10 minutes"
+) -> DataFrame:
+    """Batch form — oracle: DuckDB time_bucket + the same integer fold."""
     g = (
-        df.groupBy(F.window("ts", window).alias("win"), F.col("host"))
+        attempts.groupBy(F.window("ts", window).alias("win"), F.col("host"))
         .agg(
             F.count("*").alias("n_attempts"),
             F.sum((~F.col("ok")).cast("long")).alias("n_errors"),
@@ -58,27 +57,3 @@ def _health_agg(df: DataFrame, window: str) -> DataFrame:
             ).otherwise(base),
         ),
     )
-
-
-def host_health_windows(
-    attempts: DataFrame, window: str = "10 minutes"
-) -> DataFrame:
-    """Batch form — oracle: DuckDB time_bucket + the same integer fold."""
-    return _health_agg(attempts, window)
-
-
-def stream_host_health(
-    spark: SparkSession,
-    attempts_dir: str,
-    schema,
-    window: str = "10 minutes",
-    watermark: str = "30 minutes",
-):
-    """The same aggregation over a readStream with a late-data bound;
-    caller attaches writeStream (tests: memory sink + availableNow)."""
-    stream = (
-        spark.readStream.schema(schema)
-        .parquet(attempts_dir)
-        .withWatermark("ts", watermark)
-    )
-    return _health_agg(stream, window)

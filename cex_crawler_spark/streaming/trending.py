@@ -1,27 +1,26 @@
-"""Streaming trending-term windows — what the crawl is SAYING, live.
+"""Trending-term windows — what the crawl is SAYING, per window.
 
-A continuous crawl wants breaking-topic detection as pages land (a
-burst of pages all carrying one term = an event worth steering budget
-toward), not a full-corpus pass between rounds.  Batch and stream
-share one aggregation builder (the health.py discipline): per
-(tumbling window, term) occurrence counts — deliberately ONE
-aggregation, because Structured Streaming rejects multi-aggregate
-plans and distinct-count aggregates; page-level distincts and top-k
-ranking live OUTSIDE the streamed aggregate (the batch query ranks,
-a live consumer ranks over the emitted counts table).
+Breaking-topic detection over crawled pages (a burst of pages all
+carrying one term = an event worth steering budget toward): per
+(tumbling window, term) occurrence counts; page-level distincts and
+top-k ranking are left to the caller (the batch query ranks over the
+counts).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.text import tokens
 
 
-def _term_window_counts(df: DataFrame, window: str) -> DataFrame:
+def trending_term_windows(
+    pages: DataFrame, window: str = "10 minutes"
+) -> DataFrame:
+    """Batch form — oracle: DuckDB time_bucket + the same counts."""
     return (
-        df.select(
+        pages.select(
             F.window("ts", window).alias("win"),
             F.explode(tokens(F.col("text"))).alias("term"),
         )
@@ -33,57 +32,3 @@ def _term_window_counts(df: DataFrame, window: str) -> DataFrame:
             "n_occurrences",
         )
     )
-
-
-def trending_term_windows(
-    pages: DataFrame, window: str = "10 minutes"
-) -> DataFrame:
-    """Batch form — oracle: DuckDB time_bucket + the same counts."""
-    return _term_window_counts(pages, window)
-
-
-def stream_trending_terms(
-    spark: SparkSession,
-    pages_dir: str,
-    schema,
-    window: str = "10 minutes",
-    watermark: str = "30 minutes",
-):
-    """The same aggregation over a readStream with a late-data bound;
-    caller attaches writeStream (tests: memory sink + availableNow)."""
-    stream = (
-        spark.readStream.schema(schema)
-        .parquet(pages_dir)
-        .withWatermark("ts", watermark)
-    )
-    return _term_window_counts(stream, window)
-
-
-def stream_standing_alerts(
-    spark: SparkSession,
-    pages_dir: str,
-    schema,
-    queries: DataFrame,
-):
-    """Percolation over the live crawl: the standing conjunctive
-    alert table (a broadcast dim) matched against a page readStream —
-    same builder contract as operators/index.standing_alerts, with
-    the one streamed aggregation counting satisfied terms per
-    (query, doc).  Emits only full matches (n_terms == query size —
-    the size rides the broadcast dim so no second aggregate is
-    needed)."""
-    qsize = queries.groupBy("query_id").agg(F.count("*").alias("__need"))
-    qdim = queries.join(qsize, "query_id")
-    stream = spark.readStream.schema(schema).parquet(pages_dir)
-    doc_terms = stream.select(
-        F.col("doc_id"),
-        F.explode_outer(F.array_distinct(tokens(F.col("text")))).alias("term"),
-    )
-    hits = (
-        doc_terms.join(F.broadcast(qdim), "term")
-        .groupBy("query_id", "doc_id", "__need")
-        .agg(F.count("*").alias("n_terms"))
-        .filter(F.col("n_terms") == F.col("__need"))
-        .select("query_id", "doc_id", "n_terms")
-    )
-    return hits

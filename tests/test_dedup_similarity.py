@@ -9,11 +9,7 @@ from cex_crawler_spark.operators.dedup import (
     ngram_jaccard_pairs,
     simhash_dedup_candidates,
 )
-from cex_crawler_spark.operators.multimodal import (
-    extract_image_features,
-    resize_images,
-    sample_video_frames,
-)
+from cex_crawler_spark.operators.multimodal import extract_image_features
 from cex_crawler_spark.operators.similarity import (
     cosine_topk,
     embedding_near_dup_pairs,
@@ -603,6 +599,26 @@ class TestConnectedComponents:
         assert comp.count() == n
         assert comp.filter(F.col("component") != 0).count() == 0
 
+    @pytest.mark.parametrize("driver_max", [None, 0])
+    def test_null_ids_dropped(self, spark, driver_max):
+        """A pair with a NULL side is no edge: both the driver union-find
+        (default) and the distributed loop (driver_max=0) drop it, so no
+        NULL id or component comes out and 5 and 7, seen only beside a
+        NULL, are absent."""
+        from cex_crawler_spark.operators.dedup import connected_components
+
+        pairs = spark.createDataFrame(
+            [(1, 2), (2, 3), (5, None), (None, 7), (8, 9)],
+            "id_a long, id_b long",
+        )
+        got = {
+            (r["id"], r["component"])
+            for r in connected_components(
+                pairs, driver_max=driver_max
+            ).collect()
+        }
+        assert got == {(1, 1), (2, 1), (3, 1), (8, 8), (9, 8)}
+
     def test_driver_unionfind_matches_distributed(self, spark):
         """r6 small-graph fast path: the driver-side union-find must
         emit exactly the distributed min-label propagation's labels."""
@@ -779,108 +795,6 @@ class TestMultimodal:
         stored = {r["image_id"]: r["phash"] for r in p.select("image_id", "phash").collect()}
         png = feats[feats["fmt"] == "png"]
         assert all(stored[r.image_id] == r.phash for r in png.itertuples())
-
-    def test_resize(self, spark):
-        from cex_crawler_spark.synth import gen_payloads
-
-        p = gen_payloads(spark, 5)
-        out = resize_images(p, 8, 8).toPandas()
-        assert (out["w"] == 8).all() and (out["h"] == 8).all()
-        from cex_crawler_spark.functions.imaging import png_decode
-
-        for b in out["bytes"]:
-            assert png_decode(bytes(b)).shape == (8, 8, 3)
-
-    def test_video_frame_sampling(self, spark):
-        """Every-Nth-frame sampling round-trips pixels exactly and emits
-        PNG frames the image operators can consume directly."""
-        import numpy as np
-
-        from cex_crawler_spark.functions.imaging import (
-            png_decode,
-            rawv_encode,
-            reference_pixels,
-        )
-
-        frames = {
-            vid: [reference_pixels(f"{vid}:{i}", 16, 12) for i in range(75)]
-            for vid in ("v1", "v2", "v3")
-        }
-        v = spark.createDataFrame(
-            [(vid, bytearray(rawv_encode(fs))) for vid, fs in frames.items()],
-            "video_id string, bytes binary",
-        )
-        out = sample_video_frames(v, every_n=30).toPandas()
-        assert sorted(
-            (r.video_id, r.frame_no) for r in out.itertuples()
-        ) == [(vid, f) for vid in ("v1", "v2", "v3") for f in (0, 30, 60)]
-        assert (out["n_frames"] == 75).all()
-        assert (out["w"] == 16).all() and (out["h"] == 12).all()
-        for r in out.itertuples():
-            assert np.array_equal(
-                png_decode(bytes(r.frame_png)), frames[r.video_id][r.frame_no]
-            )
-
-    def test_video_sampling_seeks_not_scans(self, spark):
-        """The rawv index makes sampling random-access: corrupting every
-        NON-sampled frame's bytes must not affect the output — proof the
-        operator never decodes frames it drops (the property a real
-        ffmpeg keyframe-seek path shares)."""
-        import struct
-
-        import numpy as np
-
-        from cex_crawler_spark.functions.imaging import (
-            png_decode,
-            rawv_encode,
-            reference_pixels,
-        )
-
-        frames = [reference_pixels(f"s:{i}", 8, 8) for i in range(10)]
-        data = rawv_encode(frames)
-        corrupted = bytearray(data)
-        for i in range(10):
-            if i % 5 == 0:
-                continue  # keep the sampled frames (0, 5)
-            off, size = struct.unpack(">II", data[12 + 8 * i : 20 + 8 * i])
-            corrupted[off : off + size] = b"\x00" * size
-        v = spark.createDataFrame(
-            [("v1", bytes(corrupted))], "video_id string, bytes binary"
-        )
-        out = sample_video_frames(v, every_n=5).toPandas()
-        assert sorted(out["frame_no"]) == [0, 5]
-        for r in out.itertuples():
-            assert np.array_equal(
-                png_decode(bytes(r.frame_png)), frames[r.frame_no]
-            )
-
-    def test_audio_features(self, spark):
-        """Known PCM signals give the analytically expected features."""
-        import numpy as np
-
-        from cex_crawler_spark.functions.imaging import rawa_encode
-        from cex_crawler_spark.operators.multimodal import audio_features
-
-        sr = 8000
-        t = np.arange(2 * sr) / sr
-        sine = 0.5 * np.sin(2 * np.pi * 100 * t)  # 2 s, 100 Hz, amp 0.5
-        silence = np.zeros(sr // 2)
-        a = spark.createDataFrame(
-            [
-                ("sine", bytearray(rawa_encode(sine, sr))),
-                ("silence", bytearray(rawa_encode(silence, sr))),
-            ],
-            "audio_id string, bytes binary",
-        )
-        out = {r.audio_id: r for r in audio_features(a).collect()}
-        s = out["sine"]
-        assert s.sample_rate == sr and abs(s.duration_s - 2.0) < 1e-9
-        assert abs(s.rms - 0.5 / np.sqrt(2)) < 1e-3   # sine RMS = A/√2
-        assert abs(s.peak - 0.5) < 1e-3
-        # 100 Hz crosses zero 200×/s → rate ≈ 200/8000
-        assert abs(s.zero_cross_rate - 200 / sr) < 1e-3
-        z = out["silence"]
-        assert z.rms == 0.0 and z.peak == 0.0 and abs(z.duration_s - 0.5) < 1e-9
 
 
 class TestDecontamination:
