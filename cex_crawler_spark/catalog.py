@@ -21,8 +21,11 @@ Protocol:
   ALL their data paths in the manifest; overwrite tables (``frontier``)
   list only the newest.
 
-The API mirrors what the Iceberg swap would need (read / commit /
-current round), so moving to real Iceberg is a one-module change.
+The API is what the crawl needs and what an Iceberg swap would map
+(read with time travel / commit / amend / compact / vacuum / current
+round), so moving to real Iceberg is a one-module change.  Writes
+append or overwrite whole files; there are no row deletes, incremental
+scans or automatic commit retries.
 """
 
 from __future__ import annotations
@@ -42,12 +45,6 @@ APPEND = "append"
 SIDECAR_KEYS = ("bloom", "cuckoo")
 
 
-class IncrementalReadError(RuntimeError):
-    """Raised when an incremental read spans a non-append rewrite
-    (overwrite or compaction) — the path diff would return rewritten
-    files containing OLD rows, so the read is refused instead."""
-
-
 class CommitConflictError(RuntimeError):
     """Another writer committed the same manifest version first.
 
@@ -55,7 +52,7 @@ class CommitConflictError(RuntimeError):
     write-once under version-named dirs, so the loser's files are
     orphans (harmless, vacuumable) and the catalog state is untouched.
     Callers retry by re-reading the current manifest and re-committing
-    against it."""
+    against it; :meth:`SnapshotCatalog.commit` never retries itself."""
 
 
 class SnapshotCatalog:
@@ -89,129 +86,21 @@ class SnapshotCatalog:
         return table in self.manifest()["tables"]
 
     def read(
-        self,
-        spark: SparkSession,
-        table: str,
-        version: int | None = None,
-        merge_schema: bool = False,
+        self, spark: SparkSession, table: str, version: int | None = None
     ) -> DataFrame:
         """Read a table — optionally AS OF an earlier manifest version
-        (snapshot time travel, the Iceberg `VERSION AS OF` analog).
-
-        ``merge_schema=True`` unions the schemas of every referenced
-        file (additive schema evolution: an append that introduced a
-        new column surfaces it as NULL for older rows — Iceberg
-        ``add_column`` semantics).  Off by default: schema merging reads
-        every file footer up front, and a table written under one
-        schema doesn't need it."""
+        (snapshot time travel, the Iceberg `VERSION AS OF` analog)."""
         entry = self.manifest(version)["tables"].get(table)
         if entry is None or not entry["paths"]:
             raise KeyError(f"table {table!r} not in catalog")
-        reader = spark.read
-        if merge_schema:
-            reader = reader.option("mergeSchema", "true")
-        deletes = entry.get("deletes") or []
-        if not deletes:
-            return reader.parquet(*entry["paths"])
-        # merge-on-read equality deletes (Iceberg v2 analog): a delete
-        # file applies to a data file iff the data file was committed AT
-        # OR BEFORE the delete (file seq <= delete seq) — so a key
-        # re-appended AFTER a delete is alive, exactly like Iceberg
-        # sequence numbers.  Delete seqs are ascending (append order),
-        # so each data file's applicable deletes are a SUFFIX of the
-        # list; files group by the suffix start, one anti-join per
-        # group (the seen-set anti-join shape — delete-key sets are
-        # small and broadcastable, AQE picks BHJ LeftAnti).  Group
-        # count is bounded by delete COMMITS since the last rewrite,
-        # which compaction resets to zero by materializing.
-        import bisect
-
-        key_cols = entry["delete_keys"]
-        paths = entry["paths"]
-        seqs = entry.get("path_seqs") or [0] * len(paths)
-        del_seqs = [d["seq"] for d in deletes]
-        groups: dict[int, list[str]] = {}
-        for p, s in zip(paths, seqs):
-            groups.setdefault(bisect.bisect_left(del_seqs, s), []).append(p)
-        parts = []
-        for i, ps in sorted(groups.items()):
-            df = reader.parquet(*ps)
-            if i < len(deletes):
-                keys = spark.read.parquet(
-                    *[d["path"] for d in deletes[i:]]
-                ).select(*key_cols)
-                df = df.join(keys, on=key_cols, how="left_anti")
-            parts.append(df)
-        out = parts[0]
-        for df in parts[1:]:
-            out = out.unionByName(df)
-        return out
-
-    def read_changes(
-        self,
-        spark: SparkSession,
-        table: str,
-        from_version: int,
-        to_version: int | None = None,
-    ) -> DataFrame:
-        """Rows appended to ``table`` AFTER ``from_version``, up to and
-        including ``to_version`` (default: current) — the Iceberg
-        incremental-scan analog (``incremental append scan`` between two
-        snapshot ids).
-
-        This is how downstream consumers (the curation/packing pipeline,
-        a metrics exporter) keep up with a long-running crawl without
-        re-reading the whole table each round: at 100 TB a results table
-        holds thousands of per-round directories, and the incremental
-        scan opens ONLY the directories committed in the window — cost
-        proportional to the new data, not the table.
-
-        Every append commit adds exactly one immutable directory to the
-        table's manifest path list, so the change set is the path-list
-        difference between the two manifests.  Correct ONLY over
-        pure-append history: an OVERWRITE or :meth:`compact` between the
-        two versions rewrites the path set, and the diff would return
-        rewritten files full of OLD rows — detected (the old version's
-        paths are no longer a subset of the new version's) and refused
-        with :class:`IncrementalReadError`, exactly as Iceberg's
-        incremental scan refuses REPLACE/OVERWRITE snapshots.
-        """
-        if to_version is None:
-            to_version = self.current_version()
-        if not 0 <= from_version <= to_version:
+        if entry.get("deletes"):
+            # written by an earlier release's merge-on-read deletes
             raise ValueError(
-                f"need 0 <= from_version <= to_version, got "
-                f"{from_version}..{to_version}"
+                f"table {table!r} lists equality-delete files, which this "
+                "catalog no longer applies: reading its data files alone "
+                "would return the deleted rows"
             )
-        entry = self.manifest(to_version)["tables"].get(table)
-        if entry is None:
-            raise KeyError(f"table {table!r} not in catalog @ v{to_version}")
-        old = self.manifest(from_version)["tables"].get(table)
-        if (old or {}).get("deletes") != entry.get("deletes"):
-            # a delete in the window is not an append: rows the consumer
-            # already read at from_version have since been deleted, and
-            # a path diff cannot express that — refuse, like Iceberg's
-            # incremental scan on a DELETE snapshot
-            raise IncrementalReadError(
-                f"table {table!r} had rows deleted between "
-                f"v{from_version} and v{to_version}; incremental read is "
-                "only defined over pure-append history — fall back to a "
-                "full read of the newer version"
-            )
-        old_paths = set(old["paths"]) if old else set()
-        if not old_paths.issubset(entry["paths"]):
-            raise IncrementalReadError(
-                f"table {table!r} was overwritten or compacted between "
-                f"v{from_version} and v{to_version}; incremental read is "
-                "only defined over pure-append history — fall back to a "
-                "full read of the newer version"
-            )
-        new_paths = [p for p in entry["paths"] if p not in old_paths]
-        if not new_paths:
-            # schema-stable empty result (no table scan: parquet footer
-            # read only)
-            return spark.read.parquet(*entry["paths"]).limit(0)
-        return spark.read.parquet(*new_paths)
+        return spark.read.parquet(*entry["paths"])
 
     # ---------------------------------------------------------------- commit
 
@@ -222,7 +111,6 @@ class SnapshotCatalog:
         extra: dict | None = None,
         partition_by: dict[str, list[str]] | None = None,
         serial_first: list[str] | None = None,
-        retry_conflicts: int = 0,
     ) -> int:
         """Atomically commit ``{table: (df, OVERWRITE|APPEND)}`` as one round.
 
@@ -236,15 +124,8 @@ class SnapshotCatalog:
         remaining writes — cheap scans over those caches — run in
         parallel threads, overlapping their per-job fixed cost.  Data
         files are still all-or-nothing: the manifest flips only after
-        every write returns.
-        ``retry_conflicts`` bounds automatic retries after a lost
-        manifest race (Iceberg commit-retry semantics): the already
-        written data files are REUSED — only the manifest merge re-reads
-        the new current state and re-links at the next version.  Retry
-        is offered only when every table mode is APPEND; an OVERWRITE
-        table under concurrency is a lost-update the caller must
-        re-derive from the winner's state, so those still raise
-        :class:`CommitConflictError` immediately.
+        every write returns.  A writer that loses the manifest race gets
+        :class:`CommitConflictError`; its data dirs stay unreferenced.
         """
         m = self.manifest()
         version = m["version"] + 1
@@ -342,123 +223,26 @@ class SnapshotCatalog:
             for t in rest:
                 paths[t] = write_one(t)
 
-        all_append = all(mode == APPEND for _, mode in writes.values())
-        while True:
-            # re-read the CURRENT manifest on every attempt: a retry
-            # after a lost race must merge against the winner's state
-            # (its appended paths included), not the stale pre-race view
-            base = self.manifest()
-            version = base["version"] + 1
-            tables = {k: dict(v) for k, v in base["tables"].items()}
-            for table, (df, mode) in writes.items():
-                path = paths[table]
-                if mode == APPEND and table in tables:
-                    # carry delete files / key spec forward, and record
-                    # the new path's sequence number: deletes committed
-                    # EARLIER must not shadow rows appended now
-                    # (merge-on-read, see read()).  Pre-delete-era
-                    # entries have no path_seqs — seq 0 for those paths
-                    # is conservative and correct (every delete applies).
-                    e = dict(tables[table])
-                    prior = e.get("path_seqs") or [0] * len(e["paths"])
-                    e["paths"] = e["paths"] + [path]
-                    e["path_seqs"] = prior + [version]
-                    tables[table] = e
-                else:
-                    # overwrite rewrites the row set: accumulated
-                    # deletes are materialized into it (read() applied
-                    # them to whatever produced ``df``) and cleared
-                    tables[table] = {
-                        "paths": [path], "path_seqs": [version]
-                    }
-            new_manifest = {
-                "version": version,
-                "round": round_id,
-                "tables": tables,
-                **(extra or {}),
-            }
-            try:
-                self._link_manifest(version, new_manifest, attempt)
-                return version
-            except CommitConflictError:
-                if retry_conflicts > 0 and all_append:
-                    retry_conflicts -= 1
-                    continue
-                raise
-
-    def delete_rows(
-        self,
-        table: str,
-        keys: DataFrame,
-        retry_conflicts: int = 0,
-    ) -> int:
-        """Commit an EQUALITY-DELETE file against ``table`` — the
-        Iceberg v2 merge-on-read analog: rows matching any key in
-        ``keys`` (joined on its column names) disappear from subsequent
-        :meth:`read`\\ s without rewriting a single data file.  At 100 TB
-        a point-delete (GDPR takedown, a poisoned host's pages, a
-        recalled image) must not cost a table rewrite; the delete is one
-        tiny parquet of keys plus a manifest flip.
-
-        Semantics (sequence-aware, like Iceberg): the delete applies to
-        rows in data files committed at or before it — a key re-appended
-        LATER is alive.  Time travel to a pre-delete version still sees
-        the rows.  :meth:`compact` (or any overwrite) materializes
-        accumulated deletes and clears them; :meth:`read_changes`
-        refuses windows spanning a delete.  Key columns are fixed by the
-        first delete against the table (one equality spec per table —
-        mixed specs would need per-file scopes).
-
-        Concurrency matches :meth:`commit`: per-attempt immutable delete
-        file, atomic manifest link, optional bounded retry re-merging
-        against the winner's state (safe — a delete composes with
-        concurrent appends by sequence number).
-        """
-        import uuid
-
-        if not self.has_table(table):
-            raise KeyError(f"table {table!r} not in catalog")
-        key_cols = list(keys.columns)
-        attempt = uuid.uuid4().hex[:8]
-        path = str(
-            self.root / table
-            / f"delete-v{self.current_version() + 1:06d}-{attempt}"
-        )
-        keys.dropDuplicates().write.mode("overwrite").parquet(path)
-        while True:
-            base = self.manifest()
-            version = base["version"] + 1
-            tables = {k: dict(v) for k, v in base["tables"].items()}
-            e = tables.get(table)
-            if e is None:
-                raise KeyError(f"table {table!r} not in catalog")
-            spec = e.get("delete_keys")
-            if spec is not None and list(spec) != key_cols:
-                raise ValueError(
-                    f"table {table!r} already has equality-delete key "
-                    f"spec {spec}; got {key_cols}"
-                )
-            e["deletes"] = (e.get("deletes") or []) + [
-                {"path": path, "seq": version}
-            ]
-            e["delete_keys"] = key_cols
-            new_manifest = {
-                "version": version,
-                "round": base["round"],
-                "tables": tables,
-                # the filter sidecars ride through and stay valid — they
-                # are a SUPERSET guarantee and deleting rows only shrinks
-                # the true set
-                **{k: base[k] for k in SIDECAR_KEYS if k in base},
-            }
-            try:
-                self._link_manifest(version, new_manifest, attempt)
-                return version
-            except CommitConflictError:
-                if retry_conflicts > 0:
-                    retry_conflicts -= 1
-                    continue
-                raise
+        base = self.manifest()
+        version = base["version"] + 1
+        tables = dict(base["tables"])
+        for table, (_df, mode) in writes.items():
+            if mode == APPEND and table in tables:
+                # keep what an older catalog wrote beside the paths: read()
+                # refuses an entry that still lists delete files
+                e = dict(tables[table])
+                e["paths"] = e["paths"] + [paths[table]]
+                tables[table] = e
+            else:
+                tables[table] = {"paths": [paths[table]]}
+        new_manifest = {
+            "version": version,
+            "round": round_id,
+            "tables": tables,
+            **(extra or {}),
+        }
+        self._link_manifest(version, new_manifest, attempt)
+        return version
 
     def _link_manifest(
         self, version: int, manifest: dict, attempt: str
@@ -513,7 +297,6 @@ class SnapshotCatalog:
         table: str,
         target_file_mb: int = 128,
         sort_by: list[str] | None = None,
-        zorder: bool = False,
     ) -> int:
         """Rewrite an append table's accumulated per-round files into
         few ``target_file_mb``-sized files (the Iceberg
@@ -538,10 +321,6 @@ class SnapshotCatalog:
         footer min/max stats let later filtered scans skip whole files.
         Costs one shuffle (the plain path is shuffle-free ``coalesce``)
         — pay it when the table is read selectively more than once.
-        ``zorder=True`` with exactly two ``sort_by`` columns sorts by
-        the Morton interleave instead (functions/zorder.py): per-file
-        ranges are bounded on BOTH columns, the right layout when
-        filters come on either dimension.
         """
         m = self.manifest()
         entry = m["tables"].get(table)
@@ -556,45 +335,7 @@ class SnapshotCatalog:
                 )
         n_files = max(1, -(-n_bytes // (target_file_mb * 1024 * 1024)))
         df = self.read(spark, table)
-        if zorder:
-            if not sort_by or len(sort_by) != 2:
-                raise ValueError("zorder=True needs exactly two sort_by "
-                                 "columns")
-            from pyspark.sql import functions as F
-
-            from .functions.zorder import morton2
-
-            df = df.withColumn(
-                "__z", morton2(F.col(sort_by[0]), F.col(sort_by[1]))
-            )
-            # Deterministic near-equal z-ranges: bin on percentile_approx
-            # boundaries (mergeable sketch, one tiny agg) instead of
-            # letting RangePartitioner row-sample the continuous Morton
-            # key — its run-dependent samples occasionally produce a fat
-            # partition whose z-span projects to wide x/y ranges and
-            # ruins file skipping (observed as suite-order-dependent
-            # pruning flakiness).  The range exchange then only has to
-            # split an already-balanced 0..n-1 int.
-            if int(n_files) > 1:
-                qs = [i / int(n_files) for i in range(1, int(n_files))]
-                bounds = (
-                    df.select(
-                        F.percentile_approx("__z", qs, 10000).alias("b")
-                    ).first()["b"]
-                    or []
-                )
-                bin_expr = F.lit(0)
-                for b in bounds:
-                    bin_expr = bin_expr + (F.col("__z") > F.lit(b)).cast(
-                        "int"
-                    )
-                df = (
-                    df.withColumn("__bin", bin_expr)
-                    .repartitionByRange(int(n_files), "__bin", "__z")
-                    .drop("__bin")
-                )
-            df = df.sortWithinPartitions("__z").drop("__z")
-        elif sort_by:
+        if sort_by:
             df = df.repartitionByRange(
                 int(n_files), *sort_by
             ).sortWithinPartitions(*sort_by)
@@ -627,7 +368,6 @@ class SnapshotCatalog:
         for v in range(max(1, current - keep_versions + 1), current + 1):
             for entry in self.manifest(v)["tables"].values():
                 keep.update(entry["paths"])
-                keep.update(d["path"] for d in entry.get("deletes") or [])
         deleted = []
         for table_dir in self.root.iterdir():
             # "_"-prefixed dirs are catalog metadata (manifests, bloom

@@ -8,8 +8,8 @@ the whole crawl" re-shuffles the full URL corpus every time someone asks.
 An HLL sketch is a fixed ≤ 2^lg_k-byte summary that (a) builds in one
 map-side-combinable aggregate, (b) MERGES by union — so per-round /
 per-partition sketches committed to the catalog roll up later without
-rescanning the data (pairs with ``SnapshotCatalog.read_changes``: append
-one sketch row per round, union over any round window), and (c) answers
+rescanning the data (append one sketch row per round to a catalog
+table, union the rows read back over any rounds), and (c) answers
 within ~1.6 % at lg_k = 12 (relative standard error ≈ 1.04 / √2^lg_k —
 Heule et al., HLL++ EDBT'13).  Below a few thousand distinct values the
 DataSketches implementation is still in coupon-list mode and the

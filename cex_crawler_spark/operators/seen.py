@@ -372,11 +372,14 @@ def anti_join_seen(
 
     With a seen filter ``bloom`` (either kind), only possible-positives
     shuffle; without one, a plain left-anti join (Catalyst picks
-    broadcast-anti when ``seen`` is small).
+    broadcast-anti when ``seen`` is small).  ``seen`` is not
+    de-duplicated first: a left-anti join's output does not depend on
+    duplicate keys on the right, and a distinct would aggregate and
+    shuffle the whole seen table every round.
     """
     if seen is None:
         return frontier
-    seen_keys = seen.select(key_col).distinct()
+    seen_keys = seen.select(key_col)
     if bloom is None:
         return frontier.join(seen_keys, key_col, "left_anti")
     definitely_new, possibly_seen = prefilter(frontier, key_col, bloom)

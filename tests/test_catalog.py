@@ -3,7 +3,6 @@
 import json
 
 import pytest
-from pyspark.sql import functions as F
 
 from cex_crawler_spark.catalog import (
     APPEND,
@@ -96,33 +95,10 @@ def test_manifest_publish_never_crosses_writers(cat):
     assert not list((cat.root / "_manifests").glob("*.tmp"))
 
 
-def test_commit_conflict_auto_retry_append(spark, cat):
-    """VERDICT r4 item 3: an append-only commit that loses the manifest
-    race retries against the re-read state — both writers land, with
-    serialized versions and BOTH appended paths visible."""
-    other = SnapshotCatalog(cat.root)
-    real = cat._link_manifest
-    injected = {"done": False}
-
-    def racing(version, manifest, attempt):
-        if not injected["done"]:
-            injected["done"] = True
-            # another writer steals the version cat is about to link
-            other.commit(5, {"log": (spark.range(4), APPEND)})
-        return real(version, manifest, attempt)
-
-    cat._link_manifest = racing
-    v = cat.commit(6, {"log": (spark.range(10), APPEND)}, retry_conflicts=3)
-    assert injected["done"]
-    assert v == other.current_version() == 4  # serialized: v3 then v4
-    # fixture 2+3, other's 4, cat's 10 — nothing lost on either side
-    assert cat.read(spark, "log").count() == 19
-    assert cat.manifest(3)["round"] == 5 and cat.manifest(4)["round"] == 6
-
-
 def test_commit_conflict_overwrite_never_retries(spark, cat):
-    """OVERWRITE under concurrency is a lost-update — auto-retry must
-    refuse and surface the conflict even when retries were requested."""
+    """A writer that loses the manifest link AFTER writing its data
+    files gets CommitConflictError — no retry — and the winner's
+    state stays intact."""
     other = SnapshotCatalog(cat.root)
     real = cat._link_manifest
 
@@ -133,7 +109,7 @@ def test_commit_conflict_overwrite_never_retries(spark, cat):
 
     cat._link_manifest = racing
     with pytest.raises(CommitConflictError):
-        cat.commit(6, {"t": (spark.range(10), OVERWRITE)}, retry_conflicts=3)
+        cat.commit(6, {"t": (spark.range(10), OVERWRITE)})
     assert other.read(spark, "t").count() == 4  # winner's state intact
 
 
@@ -231,141 +207,31 @@ def test_frontier_partition_pruning(spark, tmp_path):
     assert n_full == n_sum
 
 
-# ------------------------------------------------------------ incremental
+def test_read_refuses_entry_with_delete_files(spark, cat):
+    """A manifest entry that still lists equality-delete files (the
+    merge-on-read deletes of earlier releases) makes read — and so
+    compact — raise: reading its data files alone would return the
+    deleted rows.  An append keeps the list, so the refusal holds."""
+    cat.commit(2, {"seen": (spark.range(4).withColumnRenamed(
+        "id", "url_hash"), APPEND)})
+    m = cat.manifest()
+    delete_file = str(cat.root / "seen" / "delete-v000004-legacy")
+    spark.range(2).withColumnRenamed("id", "url_hash").write.parquet(
+        delete_file)
+    m["tables"]["seen"]["deletes"] = [{"path": delete_file, "seq": 4}]
+    m["tables"]["seen"]["delete_keys"] = ["url_hash"]
+    m["version"] = 4
+    cat._link_manifest(4, m, "legacy")
 
-
-def test_read_changes_append_window(spark, cat):
-    """Incremental scan returns exactly the rows appended in the
-    version window — cost proportional to new data, not the table."""
-    from cex_crawler_spark.catalog import IncrementalReadError  # noqa: F401
-
-    cat.commit(2, {"log": (spark.range(10, 14), APPEND)})  # v3
-    cat.commit(3, {"log": (spark.range(20, 21), APPEND)})  # v4
-
-    got = {r.id for r in cat.read_changes(spark, "log", 2).collect()}
-    assert got == {10, 11, 12, 13, 20}
-    got = {r.id for r in cat.read_changes(spark, "log", 2, 3).collect()}
-    assert got == {10, 11, 12, 13}
-    # from the table's birth: the full table
-    assert cat.read_changes(spark, "log", 0).count() == 10
-    # empty window: zero rows, schema intact
-    empty = cat.read_changes(spark, "log", 4, 4)
-    assert empty.count() == 0
-    assert empty.schema == cat.read(spark, "log").schema
-
-
-def test_read_changes_refuses_rewrites(spark, cat):
-    """Overwrite and compaction rewrite the path set — the path diff
-    would return old rows as 'new', so the read must refuse."""
-    from cex_crawler_spark.catalog import IncrementalReadError
-
-    cat.commit(2, {"t": (spark.range(3), OVERWRITE)})  # v3 rewrites t
-    with pytest.raises(IncrementalReadError):
-        cat.read_changes(spark, "t", 2)
-    # but the window AFTER the overwrite is pure-append again
-    cat.commit(3, {"t": (spark.range(100, 102), APPEND)})  # v4
-    got = {r.id for r in cat.read_changes(spark, "t", 3).collect()}
-    assert got == {100, 101}
-
-    cat.compact(spark, "log")  # v5 rewrites log's path list
-    with pytest.raises(IncrementalReadError):
-        cat.read_changes(spark, "log", 2)
-
-
-def test_read_changes_bad_window(spark, cat):
-    with pytest.raises(ValueError):
-        cat.read_changes(spark, "log", 2, 1)
-    with pytest.raises(KeyError):
-        cat.read_changes(spark, "nope", 0)
-
-
-def test_read_merge_schema_additive_evolution(spark, cat):
-    """An append that adds a column (additive schema evolution):
-    merge_schema surfaces it, NULL-filled for pre-evolution rows."""
-    evolved = spark.range(30, 32).select(
-        F.col("id"), F.lit("new").alias("tag")
-    )
-    cat.commit(2, {"log": (evolved, APPEND)})
-    df = cat.read(spark, "log", merge_schema=True)
-    assert set(df.columns) == {"id", "tag"}
-    assert df.count() == 7  # 2 + 3 + 2
-    assert df.filter(F.col("tag").isNull()).count() == 5
-    assert {r.id for r in df.filter(F.col("tag") == "new").collect()} == \
-        {30, 31}
-
-
-# ------------------------------------------------- equality deletes (r5)
-
-
-def _ids(spark, df):
-    return sorted(r["id"] for r in df.collect())
-
-
-def test_delete_rows_merge_on_read_and_time_travel(spark, cat):
-    """delete_rows removes matching keys from reads WITHOUT rewriting
-    data files; time travel to a pre-delete version still sees them."""
-    v_before = cat.current_version()
-    paths_before = cat.manifest()["tables"]["log"]["paths"]
-    cat.delete_rows("log", spark.range(2).select("id"))  # ids 0,1 (×2 files)
-    assert cat.manifest()["tables"]["log"]["paths"] == paths_before
-    # log = append of range(2) + range(3): multiset {0,0,1,1,2}
-    assert _ids(spark, cat.read(spark, "log")) == [2]
-    assert _ids(spark, cat.read(spark, "log", version=v_before)) == [
-        0, 0, 1, 1, 2,
-    ]
-
-
-def test_delete_does_not_shadow_later_appends(spark, cat):
-    """Sequence-aware: a key re-appended AFTER the delete is alive
-    (Iceberg v2 sequence-number semantics) — a naive whole-table
-    anti-join would silently swallow the new rows."""
-    cat.delete_rows("log", spark.range(2).select("id"))
-    cat.commit(2, {"log": (spark.range(2), APPEND)})  # re-add 0,1
-    assert _ids(spark, cat.read(spark, "log")) == [0, 1, 2]
-    # a SECOND delete hides the re-added rows again, but not ones
-    # appended after it
-    cat.delete_rows("log", spark.range(1).select("id"))  # id 0
-    cat.commit(3, {"log": (spark.range(1), APPEND)})
-    assert _ids(spark, cat.read(spark, "log")) == [0, 1, 2]
-
-
-def test_compact_materializes_deletes(spark, cat):
-    cat.delete_rows("log", spark.range(2).select("id"))
-    cat.compact(spark, "log", target_file_mb=128)
-    entry = cat.manifest()["tables"]["log"]
-    assert not entry.get("deletes")
-    assert _ids(spark, cat.read(spark, "log")) == [2]
-    # post-materialization appends of deleted keys are alive
-    cat.commit(9, {"log": (spark.range(1), APPEND)})
-    assert _ids(spark, cat.read(spark, "log")) == [0, 2]
-
-
-def test_read_changes_refuses_delete_window(spark, cat):
-    from cex_crawler_spark.catalog import IncrementalReadError
-
-    v0 = cat.current_version()
-    cat.delete_rows("log", spark.range(1).select("id"))
-    with pytest.raises(IncrementalReadError):
-        cat.read_changes(spark, "log", v0)
-    # windows strictly after the delete work again
-    v1 = cat.current_version()
-    cat.commit(2, {"log": (spark.range(4), APPEND)})
-    assert cat.read_changes(spark, "log", v1).count() == 4
-
-
-def test_delete_key_spec_is_fixed_and_vacuum_keeps_delete_files(
-    spark, cat, tmp_path
-):
-    cat.delete_rows("log", spark.range(1).select("id"))
-    with pytest.raises(ValueError):
-        cat.delete_rows(
-            "log", spark.range(1).select(F.col("id").alias("other"))
-        )
-    # churn versions so vacuum has something to drop, then check the
-    # referenced delete file survives and reads still apply it
-    for r in range(3, 6):
-        cat.commit(r, {"t": (spark.range(r), OVERWRITE)})
-    cat.vacuum(keep_versions=2)
-    assert _ids(spark, cat.read(spark, "log")) == [1, 1, 2]
-    with pytest.raises(KeyError):
-        cat.delete_rows("nope", spark.range(1))
+    with pytest.raises(ValueError, match="equality-delete"):
+        cat.read(spark, "seen")
+    with pytest.raises(ValueError, match="equality-delete"):
+        cat.compact(spark, "seen")
+    cat.commit(3, {"seen": (spark.range(9, 10).withColumnRenamed(
+        "id", "url_hash"), APPEND)})
+    assert cat.manifest()["tables"]["seen"]["deletes"]
+    with pytest.raises(ValueError, match="equality-delete"):
+        cat.read(spark, "seen")
+    # the versions before the delete, and the other tables, still read
+    assert cat.read(spark, "seen", version=3).count() == 4
+    assert cat.read(spark, "log").count() == 5

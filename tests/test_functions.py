@@ -268,6 +268,32 @@ def test_per_partition_build_matches_driver_build(spark, monkeypatch, kind):
     assert (per_partition.might_contain(both) == on_driver.might_contain(both)).all()
 
 
+def _plan_nodes(plan):
+    yield plan
+    kids = plan.children()
+    for i in range(kids.size()):
+        yield from _plan_nodes(kids.apply(i))
+
+
+@pytest.mark.parametrize("kind", [None, "bloom"])
+def test_anti_join_seen_does_not_aggregate_seen(spark, kind):
+    """The seen side of the seen check is joined as read: a left-anti
+    join ignores duplicate keys on the right, so a distinct there would
+    only add an aggregate and a shuffle over the whole seen table."""
+    frontier = spark.range(2000).select(F.xxhash64("id").alias("url_hash"))
+    seen = spark.range(500, 1200).select(F.xxhash64("id").alias("url_hash"))
+    bf = build_bloom(seen, "url_hash", 1000) if kind else None
+    plan = anti_join_seen(frontier, seen, bloom=bf)._jdf.queryExecution() \
+        .optimizedPlan()
+    anti = [n for n in _plan_nodes(plan)
+            if n.getClass().getSimpleName() == "Join"
+            and n.joinType().toString() == "LeftAnti"]
+    assert len(anti) == 1
+    seen_side = {n.getClass().getSimpleName()
+                 for n in _plan_nodes(anti[0].right())}
+    assert "Aggregate" not in seen_side, seen_side
+
+
 class TestRobots:
     def test_parse_and_roundtrip(self, spark):
         from pyspark.sql import functions as F

@@ -1,14 +1,18 @@
-"""Ratchet: every top-level package name is reached from a non-test entry
-point, or is listed in ``TEST_ONLY`` with the reason it stays.
+"""Ratchet: every top-level package name, and every method of a reached
+class, is reached from a non-test entry point, or is listed in
+``TEST_ONLY`` (methods as ``Class.method``) with the reason it stays.
 
 Static and name-based (no Spark session): the reachable set is seeded
 with every identifier, attribute, imported name and identifier-shaped
 string literal in the entry points (string literals count because
 perfbench wraps package functions by name), then closed over the
-references inside each reached package definition.  A name matches
-every top-level definition that carries it, so the reach errs toward
-"reached".  New package code that only tests call fails this test;
-delete it, or add it to ``TEST_ONLY`` with a reason.
+references inside each reached package definition.  A reached class
+contributes its bases, decorators, class-level statements and dunder
+methods; any other method counts as reached once its name is, and only
+then contributes its body.  A name matches every definition that
+carries it, so the reach errs toward "reached".  New package code that
+only tests call fails this test; delete it, or add it to ``TEST_ONLY``
+with a reason.
 """
 
 import ast
@@ -59,6 +63,11 @@ TEST_ONLY = {
     "hll_distinct": "one-shot HLL distinct beside the mergeable sketches",
     "salted_collect_set": "skew-safe collect_set beside salted counts",
     "suggest_bucket_width": "derives range_join's bucket_width",
+    # methods
+    "CuckooFilter64.delete_many": "the cuckoo un-see path requeue uses, "
+                                  "the delete the cuckoo filter exists for",
+    "SnapshotCatalog.vacuum": "snapshot expiry, the catalog's storage "
+                              "bound",
 }
 
 
@@ -87,17 +96,50 @@ def _refs(node: ast.AST) -> set[str]:
     return out
 
 
-def _package_defs() -> tuple[dict[str, list[ast.AST]], set[str]]:
-    """Top-level def/class/assignment name -> the nodes that define it,
-    plus the references of top-level statements that run on import
-    (anything that is not a definition, an import or a docstring)."""
+def _is_dunder(name: str) -> bool:
+    return name.startswith("__") and name.endswith("__")
+
+
+def _methods(cls: ast.ClassDef) -> list[ast.AST]:
+    """The methods a reference by name reaches (dunders run implicitly,
+    so they belong to the class itself)."""
+    return [n for n in cls.body
+            if isinstance(n, (ast.FunctionDef, ast.AsyncFunctionDef))
+            and not _is_dunder(n.name)]
+
+
+def _node_refs(node: ast.AST) -> set[str]:
+    if not isinstance(node, ast.ClassDef):
+        return _refs(node)
+    methods = _methods(node)
+    out: set[str] = set()
+    for part in (*node.bases, *node.keywords, *node.decorator_list,
+                 *(n for n in node.body if n not in methods)):
+        out |= _refs(part)
+    return out
+
+
+def _package_defs() -> tuple[dict[str, list[ast.AST]], set[str],
+                             set[tuple[str, str]], set[str]]:
+    """Definition name -> the nodes that define it (top-level def, class
+    and assignment names, and the names of non-dunder methods), the
+    top-level names, the (class, method) pairs, plus the references of
+    top-level statements that run on import (anything that is not a
+    definition, an import or a docstring)."""
     defs: dict[str, list[ast.AST]] = {}
+    top: set[str] = set()
+    methods: set[tuple[str, str]] = set()
     on_import: set[str] = set()
     for path in sorted(PACKAGE.rglob("*.py")):
         for stmt in ast.parse(path.read_text()).body:
             if isinstance(stmt, (ast.FunctionDef, ast.AsyncFunctionDef,
                                  ast.ClassDef)):
                 defs.setdefault(stmt.name, []).append(stmt)
+                top.add(stmt.name)
+                if isinstance(stmt, ast.ClassDef):
+                    for m in _methods(stmt):
+                        defs.setdefault(m.name, []).append(m)
+                        methods.add((stmt.name, m.name))
             elif isinstance(stmt, (ast.Assign, ast.AnnAssign)):
                 targets = (stmt.targets if isinstance(stmt, ast.Assign)
                            else [stmt.target])
@@ -105,6 +147,7 @@ def _package_defs() -> tuple[dict[str, list[ast.AST]], set[str]]:
                     for n in ast.walk(t):
                         if isinstance(n, ast.Name):
                             defs.setdefault(n.id, []).append(stmt)
+                            top.add(n.id)
             elif isinstance(stmt, (ast.Import, ast.ImportFrom)):
                 continue
             elif (isinstance(stmt, ast.Expr)
@@ -112,11 +155,11 @@ def _package_defs() -> tuple[dict[str, list[ast.AST]], set[str]]:
                 continue
             else:
                 on_import |= _refs(stmt)
-    return defs, on_import
+    return defs, top, methods, on_import
 
 
 def _unreached() -> set[str]:
-    defs, on_import = _package_defs()
+    defs, top, methods, on_import = _package_defs()
     todo = set(on_import)
     for rel in ENTRY_POINTS:
         for f in _files(rel):
@@ -128,10 +171,10 @@ def _unreached() -> set[str]:
             continue
         reached.add(name)
         for node in defs.get(name, ()):
-            todo |= _refs(node) - reached
-    return {n for n in defs
-            if n not in reached
-            and not (n.startswith("__") and n.endswith("__"))}
+            todo |= _node_refs(node) - reached
+    return ({n for n in top if n not in reached and not _is_dunder(n)}
+            | {f"{c}.{m}" for c, m in methods
+               if c in reached and m not in reached})
 
 
 def test_unreached_package_names_are_the_frozen_test_only_set():

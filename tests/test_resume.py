@@ -424,10 +424,9 @@ def test_bloom_delta_pinned_to_round_commit(spark, tmp_path, monkeypatch):
 
 def test_cuckoo_sidecar_survives_compact_and_vacuum(spark, tmp_path,
                                                      monkeypatch):
-    """Equality deletes and compaction carry the cuckoo sidecar
-    reference forward and vacuum keeps its file, so a cuckoo crawl
-    rewritten this way mid-way still resumes from the sidecar (no cold
-    rebuild)."""
+    """Compaction carries the cuckoo sidecar reference forward and
+    vacuum keeps its file, so a cuckoo crawl compacted mid-way still
+    resumes from the sidecar (no cold rebuild)."""
     import numpy as np
 
     import cex_crawler_spark.plans.driver as drv
@@ -439,7 +438,6 @@ def test_cuckoo_sidecar_survives_compact_and_vacuum(spark, tmp_path,
     bootstrap(cat, seeds, WATERMARK)
     crawl(spark, cat, policy, WATERMARK, max_rounds=2,
           filter_kind="cuckoo", bloom_expected=5000)  # "kill"
-    cat.delete_rows("seen", spark.createDataFrame([(-1,)], "url_hash long"))
     cat.compact(spark, "seen")
     cat.vacuum(keep_versions=1)
     assert load_bloom_sidecar(cat, 5000, "cuckoo") is not None

@@ -303,42 +303,6 @@ class TestWarcRoundtrip:
             for _, uri, _, payload in rows:
                 assert got[uri] == payload
 
-    def test_incremental_cdx_over_appended_archives(self, spark, tmp_path):
-        """A long crawl's CDX keeps up incrementally: after a second
-        WARC append, read_changes + parse + cdx_index indexes ONLY the
-        new round's records — cost proportional to the new data."""
-        from cex_crawler_spark.catalog import APPEND, SnapshotCatalog
-        from cex_crawler_spark.sources.warc import (
-            cdx_index,
-            parse_warc_gz,
-            render_warc_gz_files,
-        )
-
-        cat = SnapshotCatalog(str(tmp_path / "cat"))
-
-        def batch(round_no, n):
-            return render_warc_gz_files(
-                spark.createDataFrame(
-                    [
-                        (
-                            round_no,
-                            f"http://h/r{round_no}/{i}",
-                            "2025-08-01T00:00:00Z",
-                            f"payload {round_no}.{i}",
-                        )
-                        for i in range(n)
-                    ],
-                    "file_id long, uri string, date string, payload string",
-                )
-            )
-
-        v1 = cat.commit(1, {"warc": (batch(1, 5), APPEND)})
-        v2 = cat.commit(2, {"warc": (batch(2, 7), APPEND)})
-        inc = cat.read_changes(spark, "warc", v1, v2)
-        idx = cdx_index(parse_warc_gz(inc, warc_col="warc_gz"))
-        got = sorted(r["original"] for r in idx.collect())
-        assert got == sorted(f"http://h/r2/{i}" for i in range(7))
-
     def test_render_is_deterministic_and_sorted(self, spark):
         rows = [
             (0, "http://a/2", "2025-08-02T00:00:00Z", "b"),

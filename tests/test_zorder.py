@@ -1,6 +1,5 @@
-"""Morton keys + sort-aware compaction: bit-exact encoding, disjoint
-per-file ranges (linear sort), two-dimensional pruning (z-order) —
-verified against the actual parquet footer min/max stats scans use."""
+"""Sort-aware compaction: disjoint per-file ranges, verified against the
+actual parquet footer min/max stats scans use."""
 
 from pathlib import Path
 
@@ -9,38 +8,6 @@ import pytest
 from pyspark.sql import functions as F
 
 from cex_crawler_spark.catalog import APPEND, SnapshotCatalog
-from cex_crawler_spark.functions.zorder import morton2, spread_bits32
-
-
-def _py_spread(x: int) -> int:
-    out = 0
-    for i in range(32):
-        out |= ((x >> i) & 1) << (2 * i)
-    return out
-
-
-def test_morton_matches_python_reference(spark):
-    vals = [0, 1, 2, 3, 7, 12345, 2**16, 2**31 - 1, 2**32 - 1]
-    df = spark.createDataFrame(
-        [(a, b) for a in vals for b in vals], "a long, b long"
-    )
-    got = df.select(
-        "a", "b",
-        spread_bits32(F.col("a")).alias("s"),
-        morton2(F.col("a"), F.col("b")).alias("z"),
-    ).collect()
-    for r in got:
-        assert r.s == _py_spread(r.a & 0xFFFFFFFF)
-        want = _py_spread(r.a) | (_py_spread(r.b) << 1)
-        # python ints are unbounded; the engine key is a SIGNED 64-bit
-        want = want - (1 << 64) if want >= 1 << 63 else want
-        assert r.z == want
-
-
-def test_morton_rejects_negative(spark):
-    df = spark.createDataFrame([(-1, 2)], "a long, b long")
-    with pytest.raises(Exception, match="non-negative"):
-        df.select(morton2(F.col("a"), F.col("b"))).collect()
 
 
 def _file_stats(paths, cols):
@@ -101,34 +68,3 @@ def test_compact_sort_by_gives_disjoint_ranges(spark, grid_cat):
     )
     assert before.exceptAll(after).count() == 0
     assert after.exceptAll(before).count() == 0
-
-
-def test_compact_zorder_prunes_both_dims(spark, grid_cat):
-    """Morton layout: a 1/8-range filter on EITHER column must skip
-    most files (linear x-sort would leave y filters scanning all)."""
-    grid_cat.compact(
-        spark, "pts", target_file_mb=1, sort_by=["x", "y"], zorder=True
-    )
-    files = _data_files(grid_cat, "pts")
-    n = len(files)
-    assert n >= 8
-    stats = _file_stats(files, ["x", "y"])
-    lo, hi = 0, 127  # 1/8 of the 1024 domain
-    for col in ("x", "y"):
-        hit = sum(
-            1 for s in stats if not (s[col][1] < lo or s[col][0] > hi)
-        )
-        assert hit <= n / 2, f"{col}: {hit}/{n} files overlap the filter"
-    # correctness of a pruned read
-    got = grid_cat.read(spark, "pts").filter(
-        (F.col("x") >= lo) & (F.col("x") <= hi)
-    ).count()
-    want = 1_200_000 * 128 // 1024
-    assert abs(got - want) / want < 0.2
-
-
-def test_compact_zorder_requires_two_cols(spark, grid_cat):
-    with pytest.raises(ValueError):
-        grid_cat.compact(spark, "pts", sort_by=["x"], zorder=True)
-    with pytest.raises(ValueError):
-        grid_cat.compact(spark, "pts", zorder=True)
