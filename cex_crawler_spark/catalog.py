@@ -126,6 +126,9 @@ class SnapshotCatalog:
         files are still all-or-nothing: the manifest flips only after
         every write returns.  A writer that loses the manifest race gets
         :class:`CommitConflictError`; its data dirs stay unreferenced.
+        The new manifest extends the one read when the commit starts, so
+        a writer that commits while this one writes its data files wins
+        the version and this commit is the loser.
         """
         m = self.manifest()
         version = m["version"] + 1
@@ -140,8 +143,10 @@ class SnapshotCatalog:
 
         def _is_local_empty(df: DataFrame) -> bool:
             # a schema-only empty plan (LocalRelation with no rows) —
-            # the shape run_round's drained-frontier write produces.
-            # Detected from the optimized plan on the driver, no job.
+            # what ``df.limit(0)`` optimizes to, the shape run_round's
+            # drained-frontier write produces.  Detected from the
+            # optimized plan on the driver, no job.  (An empty
+            # ``createDataFrame`` plans as a LogicalRDD, not this.)
             try:
                 plan = df._jdf.queryExecution().optimizedPlan()
                 return (
@@ -175,13 +180,12 @@ class SnapshotCatalog:
             if cols and not any(Path(path).rglob("*.parquet")):
                 # dynamic-partition write of ZERO rows leaves no data file
                 # (so no schema to read back); emit a schema-bearing empty
-                # file BUILT FROM THE SCHEMA — rewriting `df` itself would
+                # file from limit(0), which optimizes to an empty
+                # LocalRelation of the schema — rewriting `df` itself would
                 # re-execute its whole plan a second time (measured: the
                 # drain's empty-frontier write re-ran a full-frontier
                 # anti-join just to write nothing)
-                df.sparkSession.createDataFrame([], df.schema).write.mode(
-                    "overwrite"
-                ).parquet(path)
+                df.limit(0).write.mode("overwrite").parquet(path)
             return path
 
         serial = [t for t in (serial_first or []) if t in writes]
@@ -223,9 +227,10 @@ class SnapshotCatalog:
             for t in rest:
                 paths[t] = write_one(t)
 
-        base = self.manifest()
-        version = base["version"] + 1
-        tables = dict(base["tables"])
+        # built from the version read BEFORE the writes: a writer that
+        # committed meanwhile took this version number, so the link below
+        # raises instead of publishing a manifest merged over its commit
+        tables = dict(m["tables"])
         for table, (_df, mode) in writes.items():
             if mode == APPEND and table in tables:
                 # keep what an older catalog wrote beside the paths: read()

@@ -40,7 +40,7 @@ from typing import Sequence
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .seen import BloomFilter64, build_bloom, prefilter
+from .seen import MAYBE_SEEN, BloomFilter64, build_bloom, prefilter
 
 _JK = "__bloom_join_key"
 
@@ -81,6 +81,7 @@ def bloom_filtered_join(
     if n_expected is None:
         n_expected = build_keys.count()
     bf: BloomFilter64 = build_bloom(build_keys, _JK, max(n_expected, 1), fpp)
-    fact_keyed = _with_join_key(fact, on)
-    _, maybe_match = prefilter(fact_keyed, _JK, bf)
-    return maybe_match.drop(_JK).join(build, on, how)
+    maybe_match = prefilter(_with_join_key(fact, on), _JK, bf).filter(
+        F.col(MAYBE_SEEN)
+    )
+    return maybe_match.drop(_JK, MAYBE_SEEN).join(build, on, how)

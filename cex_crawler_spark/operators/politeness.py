@@ -202,11 +202,13 @@ def schedule_round(
 
     ``caches``: optional registry the caller owns.  When given, the
     NARROW projection (~130 B/row — not the wide frontier rows, whose
-    cache was measured slower than pruned re-scans in r1) is persisted
-    and appended to it; the verdict DAG fans out into several consumer
-    branches, and without the cache each branch re-executes the
-    scan→policy-join→regex subtree.  The caller unpersists after the
-    round's actions (plans/round.py) — no session-lifetime leak.
+    cache was measured slower than pruned re-scans in r1) is computed
+    once, eagerly, as a local checkpoint and appended to it; the verdict
+    DAG fans out into several consumer branches, and without it each
+    branch re-executes the scan→seen-check→policy-join→regex subtree.
+    This is the one Spark job ``schedule_round`` runs itself.  The caller
+    releases the checkpoint after the round's writes (plans/round.py) —
+    no session-lifetime leak.
 
     Returns a NARROW decisions frame — ``_NARROW_COLS`` + (status,
     host_seq) — never the wide frontier payload (title/url/
@@ -287,7 +289,10 @@ def schedule_round(
     )
     narrow = narrow.select("*", pre_terminal.alias("__pre"))
     if caches is not None:
-        narrow = narrow.persist()
+        # computed here, in one job, before any consumer runs: a
+        # persist() instead became one adaptive query stage — one job,
+        # each rerunning the seen check's probe — per reference below
+        narrow = narrow.localCheckpoint(eager=True)
         caches.append(narrow)
     fetchable = narrow.filter(F.col("__pre").isNull()).drop("__pre")
 

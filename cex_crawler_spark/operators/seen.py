@@ -8,13 +8,16 @@ Engine design (north rule: bloom/cuckoo URL-seen at 10^10 scale):
 
 - EXACTNESS comes from a left-anti join of the frontier against the
   ``seen(url_hash)`` table — never from the Bloom filter alone.
-- The Bloom filter is a broadcast PREFILTER: at 10^10 seen URLs the
-  anti-join's shuffle dominates round cost, and most frontier rows in a
-  steady-state crawl are already-seen (links are rediscovered
-  constantly).  ``might_contain == False`` rows — the vast majority of
-  genuinely-new URLs — skip the shuffle entirely; only possible-positives
-  flow into the anti-join.  False positives therefore cost one extra
-  join probe, never a dropped URL (property-tested).
+- The filter (Bloom or cuckoo) is a broadcast PREFILTER, probed once
+  per frontier row (:func:`prefilter`) and used as a join condition:
+  ONE left-anti join on ``key = seen key AND maybe_seen``, so a row the
+  filter rules out can never match and the frontier is scanned once.
+  False positives cost one extra key comparison, never a dropped URL
+  (property-tested).  The probe is a nondeterministic UDF, so Catalyst
+  cannot infer it through the join key onto the seen side — it runs
+  over frontier rows only.  The seen keys are still read and broadcast
+  every round; reading only the seen files that can hold
+  possibly-seen keys is the open part of this design.
 - One build (:func:`build_filter`): small filters add Arrow-collected
   keys on the driver; large ones build one filter per partition (numpy
   ops over int64 arrays, no per-row Python) and merge them on the
@@ -34,7 +37,7 @@ filters share one surface — ``add_many``, ``might_contain``, ``merge``,
 prefilter and the sidecar (plans/round.py) handle either kind.  The
 crawl's delete path (plans/driver.requeue) removes keys from the exact
 seen TABLE and the filter together, so a fingerprint collision between
-a deleted and a kept key costs one extra join probe (possible false
+a deleted and a kept key costs one extra key comparison (possible false
 positive), never a duplicate fetch.  At 10^10 keys either filter is
 tens of GB — too big for one broadcast — so the scale path shards the
 filter by the frontier's ``host_bucket`` partitioning (each task loads
@@ -339,15 +342,22 @@ def build_cuckoo(df: DataFrame, key_col: str, n_expected: int) -> CuckooFilter64
     return build_filter(df, key_col, n_expected, CuckooFilter64(n_expected))
 
 
+# the column :func:`prefilter` adds: the filter's answer for the row's key
+MAYBE_SEEN = "__maybe_seen"
+
+
 def prefilter(
     df: DataFrame, key_col: str, filt: BloomFilter64 | CuckooFilter64
-) -> tuple[DataFrame, DataFrame]:
-    """Split ``df`` into (definitely_new, possibly_seen) via a broadcast
-    filter of either kind.
+) -> DataFrame:
+    """``df`` plus a boolean ``MAYBE_SEEN`` column: whether the filter
+    (either kind) might hold the row's ``key_col``.  ``False`` is exact
+    (no false negatives); ``True`` may be a false positive.
 
-    ``definitely_new`` rows skip the anti-join shuffle; ``possibly_seen``
-    rows go through the exact anti-join.  The filter travels as a Spark
-    broadcast variable, deserialized once per executor.
+    The filter travels as a Spark broadcast variable, deserialized once
+    per executor, and the probe runs once per row of ``df``.  The UDF is
+    marked nondeterministic so Catalyst cannot copy it: a deterministic
+    probe used as a filter is inferred through an equi-join key onto the
+    other side, which then runs it over every row there too.
     """
     b = df.sparkSession.sparkContext.broadcast(filt)
 
@@ -355,11 +365,8 @@ def prefilter(
     def might_contain(keys: pd.Series) -> pd.Series:
         return pd.Series(b.value.might_contain(keys.to_numpy(dtype=np.int64)))
 
-    flagged = df.withColumn("__maybe_seen", might_contain(F.col(key_col)))
-    return (
-        flagged.filter(~F.col("__maybe_seen")).drop("__maybe_seen"),
-        flagged.filter(F.col("__maybe_seen")).drop("__maybe_seen"),
-    )
+    probe = might_contain.asNondeterministic()
+    return df.withColumn(MAYBE_SEEN, probe(F.col(key_col)))
 
 
 def anti_join_seen(
@@ -370,18 +377,27 @@ def anti_join_seen(
 ) -> DataFrame:
     """Rows of ``frontier`` whose ``key_col`` is NOT in ``seen`` — exact.
 
-    With a seen filter ``bloom`` (either kind), only possible-positives
-    shuffle; without one, a plain left-anti join (Catalyst picks
-    broadcast-anti when ``seen`` is small).  ``seen`` is not
-    de-duplicated first: a left-anti join's output does not depend on
-    duplicate keys on the right, and a distinct would aggregate and
-    shuffle the whole seen table every round.
+    Without a seen filter ``bloom``: a plain left-anti join (Catalyst
+    picks broadcast-anti when ``seen`` is small).  With one (either
+    kind): ONE left-anti join on ``key = seen key AND maybe_seen``, so
+    the frontier is scanned once and probed once per row, and a row the
+    filter rules out can never match — exactness still comes from the
+    join, since the filter has no false negatives.  ``seen`` is read
+    as is, never probed and not de-duplicated: a left-anti join's output
+    does not depend on duplicate keys on the right, and a distinct would
+    aggregate and shuffle the whole seen table every round.
     """
     if seen is None:
         return frontier
-    seen_keys = seen.select(key_col)
     if bloom is None:
-        return frontier.join(seen_keys, key_col, "left_anti")
-    definitely_new, possibly_seen = prefilter(frontier, key_col, bloom)
-    survivors = possibly_seen.join(seen_keys, key_col, "left_anti")
-    return definitely_new.unionByName(survivors)
+        return frontier.join(seen.select(key_col), key_col, "left_anti")
+    seen_keys = seen.select(F.col(key_col).alias("__seen_key"))
+    return (
+        prefilter(frontier, key_col, bloom)
+        .join(
+            seen_keys,
+            (F.col(key_col) == F.col("__seen_key")) & F.col(MAYBE_SEEN),
+            "left_anti",
+        )
+        .drop(MAYBE_SEEN)
+    )

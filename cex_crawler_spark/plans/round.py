@@ -158,24 +158,28 @@ def run_round(
         frontier = frontier.withColumn("priority", F.lit(0).cast("long"))
     seen = catalog.read(spark, "seen") if catalog.has_table("seen") else None
 
-    # NOTE: the scheduling DAG re-reads the frontier from several branches
-    # (the narrow projection plus the two wide id-joins below), but each
-    # branch prunes columns at the scan, so the re-scans are cheaper than
-    # materializing a wide cache of candidates (measured: +9s/round at 1M
-    # rows with a persist here).
+    # NOTE: schedule_round computes its narrow projection of the
+    # candidates (the seen check included) once, as a local checkpoint
+    # every scheduling branch reads.  The wide rows are not
+    # materialized: only the next-frontier write below re-reads them,
+    # pruned at the scan, which is cheaper than a wide cache of
+    # candidates (measured: +9s/round at 1M rows with a persist here).
     candidates = anti_join_seen(frontier, seen, "url_hash", bloom)
     round_caches: list = []
     decisions = schedule_round(
         candidates, host_policy, watermark, caches=round_caches
     )
-    # one pass, many consumers (results / frontier' / metrics) → cache.
+    # one pass, many consumers (results / frontier' / metrics) → computed
+    # once, now, as a local checkpoint.  A persist() instead left each
+    # consumer's adaptive query stages to build it: three concurrent
+    # jobs per round, each rerunning the dup and rank shuffles.
     # decisions is NARROW (politeness.py): wide frontier columns are
     # joined back below only for the rows that need them — the scheduled
     # minority (fetch needs image_id) and the deferred remainder (the
     # next-round frontier).  r2 instead joined every verdict to the wide
     # rows up front: a full-width shuffle of both sides that the 8→32
     # scaling profile identified as pure fixed-stage latency.
-    decisions = decisions.persist()
+    decisions = decisions.localCheckpoint(eager=True)
 
     # one observe() pass piggy-backed on the results write replaces the
     # r2 post-commit metrics-parquet re-read job (VERDICT r2 items 1/7)
@@ -192,7 +196,7 @@ def run_round(
         obs, *[F.count_if(F.col("status") == s).alias(s) for s in all_statuses]
     )
 
-    # the fetch input comes STRAIGHT from the decisions cache — the
+    # the fetch input comes STRAIGHT from the decisions checkpoint — the
     # narrow projection carries image_id + the post-fetch freshness
     # columns precisely so no join back to the wide frontier is needed
     # here (r3.0 joined a sched_ids set against the frontier lineage;
@@ -292,13 +296,14 @@ def run_round(
         # children), the next frontier is empty BY CONSTRUCTION — write
         # it from the schema instead of re-scanning the whole frontier
         # through the anti-join just to emit zero rows (the final round
-        # of every drain hits this)
+        # of every drain hits this).  limit(0) optimizes to an empty
+        # LocalRelation, which the commit writes flat in one job.
         if not expand and obs.get.get(STATUS_DEFERRED, 0) == 0:
-            return spark.createDataFrame([], frontier_write.schema)
+            return frontier_write.limit(0)
         return frontier_write
 
     # metrics + lineage share ONE pre-aggregation over the decisions
-    # cache — (host, part, status) is a superset key of both, so each
+    # checkpoint — (host, part, status) is a superset key of both, so each
     # table is a re-group of the tiny grain rows (hosts × partitions ×
     # statuses) instead of its own full shuffle over the cache (r6; the
     # emitted rows are identical: counts sum, budget/min_delay are
@@ -332,11 +337,12 @@ def run_round(
         F.max("__max_uh").alias("max_url_hash"),
     )
 
-    # no pre-commit action: the results write IS the round's driving job
-    # (schedule → fetch → union run as one job, filling both caches AND
-    # the observe() stat counters), the other four writes overlap in
-    # threads over those caches — r1 paid a full extra barrier
-    # collecting metrics before the fetch could start
+    # two pre-commit actions, the checkpoints of the narrow rows and of
+    # the decisions; the results write then drives fetch → union
+    # (filling the results cache AND the observe() stat counters), and
+    # the other four writes overlap in threads over those stored rows —
+    # r1 paid a full extra barrier collecting metrics before the fetch
+    # could start
     version = catalog.commit(
         round_id,
         {
@@ -349,7 +355,7 @@ def run_round(
         extra={"watermark": watermark},
         partition_by={"frontier": ["host_bucket"]},
         # results first: its write runs the fetch stage and pins the
-        # decisions + results caches the parallel writes then scan
+        # results cache the parallel writes then scan
         serial_first=["results"],
     )
     # the observe() counters filled during the results write ARE the
@@ -382,8 +388,19 @@ def run_round(
             delta_keys, "url_hash", bloom_expected, type(bloom)(bloom_expected)
         ))
         save_bloom_sidecar(catalog, version, bloom, bloom_expected)
-    decisions.unpersist()
-    results_delta.unpersist()
-    for cached in round_caches:
-        cached.unpersist()
+    for cached in (decisions, results_delta, *round_caches):
+        _release(cached)
     return stats
+
+
+def _release(df: DataFrame) -> None:
+    """Free what ``persist()`` or ``localCheckpoint()`` stored for ``df``.
+
+    ``unpersist`` drops a cached plan but not a local checkpoint: that
+    is a persisted RDD under the frame's ``LogicalRDD`` leaf, which stays
+    in executor storage until it is unpersisted itself.
+    """
+    df.unpersist()
+    plan = df._jdf.queryExecution().analyzed()
+    if plan.getClass().getSimpleName() == "LogicalRDD":
+        plan.rdd().unpersist(False)

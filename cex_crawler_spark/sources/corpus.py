@@ -14,6 +14,8 @@ fields, exactly as ``pd.DataFrame(...)`` unions them in the reference.
 
 from __future__ import annotations
 
+from pathlib import Path
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -31,7 +33,11 @@ def read_announcement_corpus(
     spark: SparkSession, root: str = REFERENCE_ROOT
 ) -> DataFrame:
     """All announcement records under ``root/output/*/*.json`` with a
-    repo-relative ``file`` column."""
+    repo-relative ``file`` column.  Raises ``FileNotFoundError`` naming
+    ``root/output`` when the snapshot is not there."""
+    output = Path(root) / "output"
+    if not output.is_dir():
+        raise FileNotFoundError(f"reference snapshot not found: {output}")
     df = (
         spark.read.schema(CORPUS_SCHEMA)
         .option("multiLine", "true")

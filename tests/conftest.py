@@ -6,6 +6,29 @@ import pytest
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from cex_crawler_spark.session import get_spark
+from cex_crawler_spark.sources.corpus import REFERENCE_ROOT
+
+# the reference's shipped announcement snapshot; tests marked
+# ``reference_snapshot`` compare against it and skip when it is absent
+REFERENCE_OUTPUT = os.path.join(REFERENCE_ROOT, "output")
+
+
+def pytest_configure(config):
+    config.addinivalue_line(
+        "markers",
+        "reference_snapshot: reads the reference's shipped output snapshot",
+    )
+
+
+def pytest_collection_modifyitems(config, items):
+    if os.path.isdir(REFERENCE_OUTPUT):
+        return
+    skip = pytest.mark.skip(
+        reason=f"reference snapshot not present: {REFERENCE_OUTPUT}"
+    )
+    for item in items:
+        if "reference_snapshot" in item.keywords:
+            item.add_marker(skip)
 
 
 @pytest.fixture(scope="session")

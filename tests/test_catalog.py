@@ -113,6 +113,24 @@ def test_commit_conflict_overwrite_never_retries(spark, cat):
     assert other.read(spark, "t").count() == 4  # winner's state intact
 
 
+def test_commit_mid_write_is_a_conflict(spark, cat):
+    """A writer that commits while another commit is writing its data
+    files wins the version: the other commit raises CommitConflictError
+    instead of publishing a manifest merged over the winner's (an
+    OVERWRITE would otherwise replace the winner's version silently)."""
+    other = SnapshotCatalog(cat.root)
+
+    def racing_write():
+        other.commit(5, {"t": (spark.range(4), OVERWRITE)})
+        return spark.range(1)
+
+    with pytest.raises(CommitConflictError):
+        cat.commit(6, {"t": (racing_write, OVERWRITE)})
+    assert cat.current_version() == 3
+    assert cat.current_round() == 5
+    assert cat.read(spark, "t").count() == 4  # the winner's rows
+
+
 def test_parallel_write_failures_all_surface(spark, cat):
     """ADVICE r3: when several parallel table writes fail, every root
     cause must surface (ExceptionGroup), not one arbitrary exception —

@@ -96,6 +96,7 @@ def test_extractor_case(spark, text, expected):
     assert got == fallback_twin(text)
 
 
+@pytest.mark.reference_snapshot
 def test_extractor_matches_twin_on_reference_corpus(spark):
     """Engine == Python twin on every real announcement text in the repo."""
     texts = []

@@ -275,14 +275,25 @@ def _plan_nodes(plan):
         yield from _plan_nodes(kids.apply(i))
 
 
-@pytest.mark.parametrize("kind", [None, "bloom"])
+def _python_udfs(plan) -> int:
+    return sum(n.udfs().size() for n in _plan_nodes(plan)
+               if n.getClass().getSimpleName() == "ArrowEvalPython")
+
+
+@pytest.mark.parametrize("kind", [None, "bloom", "cuckoo"])
 def test_anti_join_seen_does_not_aggregate_seen(spark, kind):
     """The seen side of the seen check is joined as read: a left-anti
     join ignores duplicate keys on the right, so a distinct there would
-    only add an aggregate and a shuffle over the whole seen table."""
+    only add an aggregate and a shuffle over the whole seen table.  With
+    a filter, the probe runs once per frontier row — one Python UDF in
+    the plan — and never over the seen side."""
+    from cex_crawler_spark.operators.seen import build_cuckoo
+
     frontier = spark.range(2000).select(F.xxhash64("id").alias("url_hash"))
     seen = spark.range(500, 1200).select(F.xxhash64("id").alias("url_hash"))
-    bf = build_bloom(seen, "url_hash", 1000) if kind else None
+    build = {None: lambda *a: None, "bloom": build_bloom,
+             "cuckoo": build_cuckoo}[kind]
+    bf = build(seen, "url_hash", 1000)
     plan = anti_join_seen(frontier, seen, bloom=bf)._jdf.queryExecution() \
         .optimizedPlan()
     anti = [n for n in _plan_nodes(plan)
@@ -292,6 +303,8 @@ def test_anti_join_seen_does_not_aggregate_seen(spark, kind):
     seen_side = {n.getClass().getSimpleName()
                  for n in _plan_nodes(anti[0].right())}
     assert "Aggregate" not in seen_side, seen_side
+    assert _python_udfs(plan) == (0 if kind is None else 1)
+    assert _python_udfs(anti[0].right()) == 0
 
 
 class TestRobots:

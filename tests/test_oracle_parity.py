@@ -2,11 +2,14 @@
 the in-repo twin of the driver's correctness gate."""
 
 import math
+import os
+import re
 
 import duckdb
 import pytest
 
 import __spark_entry__ as entry_mod
+from cex_crawler_spark.sources.corpus import REFERENCE_ROOT
 
 SF_DIR = "/root/testdata/sf0.001"
 TABLES = [
@@ -42,13 +45,20 @@ def con():
 
 ORACLES = entry_mod.oracle_sql()
 QUERIES = entry_mod.queries()
+# the reference_* queries read the reference's shipped snapshot
+REFERENCE_QUERIES = [n for n in sorted(ORACLES) if n.startswith("reference_")]
+REFERENCE_OUTPUT = os.path.join(REFERENCE_ROOT, "output")
 
 
 def test_every_oracle_has_a_query():
     assert set(ORACLES) <= set(QUERIES)
 
 
-@pytest.mark.parametrize("name", sorted(ORACLES))
+@pytest.mark.parametrize("name", [
+    pytest.param(n, marks=pytest.mark.reference_snapshot)
+    if n in REFERENCE_QUERIES else n
+    for n in sorted(ORACLES)
+])
 def test_query_matches_oracle(spark, con, name):
     sdf = QUERIES[name](spark, SF_DIR).toPandas()
     odf = con.sql(ORACLES[name]).df()
@@ -57,6 +67,14 @@ def test_query_matches_oracle(spark, con, name):
     assert scols == ocols
     assert len(srows) == len(orows)
     assert srows == orows
+
+
+@pytest.mark.skipif(os.path.isdir(REFERENCE_OUTPUT),
+                    reason="reference snapshot present")
+@pytest.mark.parametrize("name", REFERENCE_QUERIES)
+def test_reference_query_names_missing_snapshot(spark, name):
+    with pytest.raises(FileNotFoundError, match=re.escape(REFERENCE_OUTPUT)):
+        QUERIES[name](spark, SF_DIR)
 
 
 @pytest.mark.parametrize("name", sorted(set(QUERIES) - set(ORACLES)))

@@ -27,6 +27,8 @@ from cex_crawler_spark.operators.aggregate import (
 )
 from cex_crawler_spark.sources.corpus import read_announcement_corpus
 
+pytestmark = pytest.mark.reference_snapshot
+
 # the run date of the shipped CSVs, recovered from the data itself: every
 # 待确定 row in announcements.csv carries time == 2025-09-02 (main.py:54-60
 # stamps "today" into null/short times)

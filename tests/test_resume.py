@@ -211,14 +211,59 @@ def test_round_job_count_bounded(spark, tmp_path):
     crawl(spark, cat, gen_host_policy(spark), "2025-08-29 00:00:00",
           max_rounds=1)
     jobs = set(tracker.getJobIdsForGroup("round-0")) - before
-    # measured 49 with AQE on (every adaptive query stage is its own
-    # job; 5 actions x their stage chains) — and unlike r2's 48, this
-    # count now INCLUDES the four InheritableThread table writes that
-    # previously escaped the job group, plus the narrow-verdict plan
-    # dropped the wide status join and the metrics re-read job.  The
-    # bound catches a refactor that silently multiplies per-round
-    # actions.
-    assert 0 < len(jobs) <= 54, f"round-0 launched {len(jobs)} jobs"
+    # measured 35-37 with AQE on (every adaptive query stage is its
+    # own job), including the four InheritableThread table writes.
+    # Before the round inputs were checkpointed it measured 46-49: a
+    # persisted narrow projection became one query stage job per
+    # consumer, and persisted decisions took three concurrent jobs.  The
+    # bound (measured maximum + 2) catches a refactor that silently
+    # multiplies per-round actions.
+    assert 0 < len(jobs) <= 39, f"round-0 launched {len(jobs)} jobs"
+
+
+def test_drained_frontier_commits_in_one_job(spark, tmp_path, monkeypatch):
+    """A round that defers nothing writes its empty next frontier in
+    one job: a zero-row partitioned write leaves no file, so writing it
+    partitioned first paid a second, flat write for the schema."""
+    cat = SnapshotCatalog(tmp_path / "drained")
+    bootstrap(cat, gen_frontier(spark, 120, n_payloads=20), WATERMARK)
+    rounds = []
+    real = SnapshotCatalog.commit
+
+    def spy(self, round_id, writes, *args, **kwargs):
+        rounds.append(writes)
+        return real(self, round_id, writes, *args, **kwargs)
+
+    monkeypatch.setattr(SnapshotCatalog, "commit", spy)
+    policy = gen_host_policy(spark).withColumn("budget_per_round", F.lit(10_000))
+    stats = crawl(spark, cat, policy, WATERMARK, max_rounds=1,
+                  filter_kind=None)
+    assert stats[0]["deferred"] == 0
+    frontier = rounds[-1]["frontier"]  # the round's own write, lazily built
+
+    sc = spark.sparkContext
+    sc.setJobGroup("drained-frontier", "drained frontier commit", False)
+    tracker = sc.statusTracker()
+    before = set(tracker.getJobIdsForGroup("drained-frontier"))
+    real(cat, 1, {"frontier": frontier},
+         partition_by={"frontier": ["host_bucket"]})
+    jobs = set(tracker.getJobIdsForGroup("drained-frontier")) - before
+    assert len(jobs) == 1, f"empty frontier commit ran {len(jobs)} jobs"
+    out = cat.read(spark, "frontier")
+    assert out.count() == 0 and "host_bucket" in out.columns
+
+
+def test_crawl_releases_round_materializations(spark, tmp_path):
+    """Every round's cached and checkpointed inputs are released when
+    the round ends: a multi-round crawl leaves no persisted RDD behind."""
+    jsc = spark.sparkContext._jsc
+    before = jsc.getPersistentRDDs().size()
+    cat = SnapshotCatalog(tmp_path / "release")
+    bootstrap(cat, gen_frontier(spark, 250, n_payloads=60), WATERMARK)
+    policy = gen_host_policy(spark).withColumn("budget_per_round", F.lit(15))
+    stats = crawl(spark, cat, policy, WATERMARK, max_rounds=4)
+    assert len(stats) == 4
+    assert jsc.getPersistentRDDs().size() == before
 
 
 def test_requeue_refetches_invalidated_urls(spark, tmp_path):
