@@ -1,8 +1,8 @@
 """Snapshot catalog — atomic multi-table commits on parquet + manifest JSON.
 
 Plays the role Iceberg snapshots play in the production design (SURVEY §4):
-every crawl round commits frontier', seen-delta, results, metrics and
-lineage ATOMICALLY — either the whole round is visible or none of it —
+every crawl round commits frontier', seen-delta, results and metrics
+ATOMICALLY — either the whole round is visible or none of it —
 so a killed run resumes bit-identically from the last committed round.
 The reference has no such guarantee (a crash can half-write a JSON file,
 /root/reference/exchange/base_scraper.py:184-196).
@@ -17,7 +17,7 @@ Protocol:
   concurrency).  The current state is the highest-numbered manifest;
   orphan data dirs from a crash or a lost race are unreferenced and
   harmless (vacuumable).
-- append tables (``seen``, ``results``, ``lineage``, ``metrics``) list
+- append tables (``seen``, ``results``, ``metrics``) list
   ALL their data paths in the manifest; overwrite tables (``frontier``)
   list only the newest.
 

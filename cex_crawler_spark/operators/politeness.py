@@ -15,7 +15,7 @@ only priority is section order) ahead of the reference's section/list
 order — rank order IS crawl order, so the
 per-host sequence is deterministic and matches the reference replay.
 Delays become declarative budgets; ``min_delay_ms`` is recorded in
-lineage, never slept.
+the round's metrics table, never slept.
 
 Skew at scale: one host can hold 50%+ of a 10^10-row frontier, and
 ``row_number() OVER (PARTITION BY host)`` would funnel it into a single
@@ -222,7 +222,7 @@ def schedule_round(
     seconds of broadcast construction (PLANS.md has the measured
     ladder).  The narrow frame is self-sufficient for the fetch stage
     (image_id + freshness columns ride along); only the next-round
-    frontier write joins back to the wide candidates (plans/round.py).
+    frontier write joins back to the wide frontier rows (plans/round.py).
     """
     if "priority" not in candidates.columns:
         # pre-priority frontiers (and fixtures): one level, reference order

@@ -21,9 +21,10 @@ Engine design (north rule: bloom/cuckoo URL-seen at 10^10 scale):
 - One build (:func:`build_filter`): small filters add Arrow-collected
   keys on the driver; large ones build one filter per partition (numpy
   ops over int64 arrays, no per-row Python) and merge them on the
-  driver — the treeAggregate pattern.  Per-round DELTAS are merged the
-  same way, so the filter is maintained incrementally instead of
-  rebuilt (SURVEY §2.11: the one custom aggregate the engine needs).
+  driver — the treeAggregate pattern.  Per-round DELTAS are added the
+  same way, straight into the live filter, so it is maintained
+  incrementally instead of rebuilt (SURVEY §2.11: the one custom
+  aggregate the engine needs).
 
 The north rule names a CUCKOO-FILTER FALLBACK FOR DELETES: the one
 crawl operation Bloom cannot express is *un-seeing* a URL — freshness
@@ -285,10 +286,12 @@ _DRIVER_BUILD_MAX = 64_000_000
 
 def build_filter(
     df: DataFrame, key_col: str, n_expected: int,
-    empty: BloomFilter64 | CuckooFilter64,
+    filt: BloomFilter64 | CuckooFilter64,
 ) -> BloomFilter64 | CuckooFilter64:
-    """Add every ``key_col`` value of ``df`` to ``empty`` — a fresh
-    filter sized for ``n_expected`` keys, of either kind — and return it.
+    """Add every ``key_col`` value of ``df`` to ``filt`` — a filter of
+    either kind sized for ``n_expected`` keys, empty or already holding
+    keys (a round adds its seen delta to the live filter) — and return
+    it.
 
     Up to ``_DRIVER_BUILD_MAX`` expected keys, the keys are collected
     over Arrow and added on the driver.  Above it, each partition fills
@@ -300,11 +303,11 @@ def build_filter(
     if n_expected <= _DRIVER_BUILD_MAX:
         keys = df.select(key_col).toPandas()[key_col].to_numpy(dtype=np.int64)
         if keys.size:
-            empty.add_many(keys)
-        return empty
-    # the tasks get the class and byte size, not the (large) empty
-    # filter: all-zero bytes deserialize to an empty filter
-    cls, n_bytes = type(empty), len(empty.to_bytes())
+            filt.add_many(keys)
+        return filt
+    # the tasks get the class and byte size, not the (large) filter:
+    # all-zero bytes deserialize to an empty filter
+    cls, n_bytes = type(filt), len(filt.to_bytes())
 
     def partition_filter(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         part = cls.from_bytes(bytes(n_bytes), n_expected)
@@ -326,8 +329,8 @@ def build_filter(
         .collect()
     )
     for row in parts:
-        empty.merge(cls.from_bytes(row["filter"], n_expected))
-    return empty
+        filt.merge(cls.from_bytes(row["filter"], n_expected))
+    return filt
 
 
 def build_bloom(

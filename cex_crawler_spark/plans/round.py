@@ -7,9 +7,9 @@ declarative DataFrame plan per round:
     frontier ──anti-join seen (Bloom-prefiltered)──► candidates
              ──politeness window rank──► {robots, stale, dup, scheduled, deferred}
     scheduled ──mapInPandas fetch──► payloads ──validate──► fetched/stale
-    commit: frontier' (deferred), seen+Δ, results+Δ, metrics+Δ, lineage+Δ
+    commit: frontier' (deferred), seen+Δ, results+Δ, metrics+Δ
 
-All five tables commit atomically via the SnapshotCatalog manifest, so a
+All four tables commit atomically via the SnapshotCatalog manifest, so a
 kill at any point resumes from the previous round bit-identically.
 """
 
@@ -138,8 +138,8 @@ def run_round(
     """Execute one round against catalog state; returns round stats.
 
     When the seen filter ``bloom`` (either kind) is given, this round's
-    seen delta is merged into it in place as part of the round, and the
-    merged filter is persisted as the version's sidecar.
+    seen delta is added to it in place as part of the round, and the
+    updated filter is persisted as the version's sidecar.
 
     Every Spark job the round launches is tagged with job group
     ``round-<id>`` so the per-round job count is observable via the
@@ -151,7 +151,7 @@ def run_round(
     frontier = catalog.read(spark, "frontier")
     if "priority" not in frontier.columns:
         # catalogs persisted before the priority column existed resume at
-        # the default level; without this, candidates.select(*FRONTIER_COLS)
+        # the default level; without this, frontier.select(*FRONTIER_COLS)
         # below (the next-round frontier rewrite) raises AnalysisException —
         # the scheduler-side fallback alone only patched its local copy
         # (ADVICE r4 medium)
@@ -161,8 +161,8 @@ def run_round(
     # NOTE: schedule_round computes its narrow projection of the
     # candidates (the seen check included) once, as a local checkpoint
     # every scheduling branch reads.  The wide rows are not
-    # materialized: only the next-frontier write below re-reads them,
-    # pruned at the scan, which is cheaper than a wide cache of
+    # materialized: the next-frontier write below re-reads them from
+    # the frontier scan, which is cheaper than a wide cache of
     # candidates (measured: +9s/round at 1M rows with a persist here).
     candidates = anti_join_seen(frontier, seen, "url_hash", bloom)
     round_caches: list = []
@@ -271,15 +271,17 @@ def run_round(
         .distinct()
     )
 
-    # deferred rows keep their wide frontier columns via an ANTI-join
-    # against the (small) non-deferred id set — the deferred majority
-    # never shuffles; candidates re-scan with pruning + a broadcast probe
-    non_deferred_ids = decisions.filter(
-        F.col("status") != STATUS_DEFERRED
+    # deferred rows get their wide frontier columns back by a semi-join
+    # of the raw frontier on the checkpoint's deferred seed_ids (the row
+    # key dup detection relies on).  Re-reading `candidates` instead
+    # would rerun the seen check — filter probe, seen scan and
+    # broadcast — a second time in every non-final round.
+    deferred_ids = decisions.filter(
+        F.col("status") == STATUS_DEFERRED
     ).select("seed_id")
-    new_frontier = candidates.select(*FRONTIER_COLS).join(
-        non_deferred_ids, "seed_id", "left_anti"
-    ).select(*FRONTIER_COLS)
+    new_frontier = frontier.select(*FRONTIER_COLS).join(
+        deferred_ids, "seed_id", "left_semi"
+    )
     if expand:
         # S8 link discovery: fetched seed pages emit child URLs into the
         # next round's frontier; the seen anti-join dedups rediscoveries
@@ -302,45 +304,30 @@ def run_round(
             return frontier_write.limit(0)
         return frontier_write
 
-    # metrics + lineage share ONE pre-aggregation over the decisions
-    # checkpoint — (host, part, status) is a superset key of both, so each
-    # table is a re-group of the tiny grain rows (hosts × partitions ×
-    # statuses) instead of its own full shuffle over the cache (r6; the
-    # emitted rows are identical: counts sum, budget/min_delay are
-    # host-constant from the policy join, url_hash min/max compose).
-    grain = (
+    # per-round metrics and per-partition lineage in one table at the
+    # (round, host, part, status) grain, one aggregation over the
+    # decisions checkpoint; `part` is the checkpoint partition that
+    # carried the rows.  Per-host metrics are this table regrouped by
+    # (round, host, status) — n sums, budget_per_round and min_delay_ms
+    # are host constants from the policy join — and per-partition
+    # lineage is it regrouped by (round, part, status), url_hash min/max
+    # composing.  Nothing in the engine reads it back.
+    metrics_delta = (
         decisions.withColumn("part", F.spark_partition_id())
-        .groupBy("host", "part", "status")
+        .groupBy(F.lit(round_id).alias("round"), "host", "part", "status")
         .agg(
-            F.count("*").alias("__n"),
-            F.min("url_hash").alias("__min_uh"),
-            F.max("url_hash").alias("__max_uh"),
-            F.first("budget_per_round").alias("__budget"),
-            F.first("min_delay_ms").alias("__delay"),
+            F.count("*").alias("n"),
+            F.min("url_hash").alias("min_url_hash"),
+            F.max("url_hash").alias("max_url_hash"),
+            F.first("budget_per_round").alias("budget_per_round"),
+            F.first("min_delay_ms").alias("min_delay_ms"),
         )
-        .persist()
-    )
-    round_caches.append(grain)
-    metrics_delta = grain.groupBy(
-        F.lit(round_id).alias("round"), "host", "status"
-    ).agg(
-        F.sum("__n").alias("n"),
-        F.first("__budget").alias("budget_per_round"),
-        F.first("__delay").alias("min_delay_ms"),
-    )
-    # per-partition lineage: which executor partition carried which rows
-    lineage_delta = grain.groupBy(
-        F.lit(round_id).alias("round"), "part", "status"
-    ).agg(
-        F.sum("__n").alias("rows"),
-        F.min("__min_uh").alias("min_url_hash"),
-        F.max("__max_uh").alias("max_url_hash"),
     )
 
     # two pre-commit actions, the checkpoints of the narrow rows and of
     # the decisions; the results write then drives fetch → union
     # (filling the results cache AND the observe() stat counters), and
-    # the other four writes overlap in threads over those stored rows —
+    # the other three writes overlap in threads over those stored rows —
     # r1 paid a full extra barrier collecting metrics before the fetch
     # could start
     version = catalog.commit(
@@ -350,7 +337,6 @@ def run_round(
             "frontier": (frontier_plan, OVERWRITE),
             "seen": (seen_delta, APPEND),
             "metrics": (metrics_delta, APPEND),
-            "lineage": (lineage_delta, APPEND),
         },
         extra={"watermark": watermark},
         partition_by={"frontier": ["host_bucket"]},
@@ -380,13 +366,10 @@ def run_round(
         # would miss this round's keys (filter ⊇ seen broken)
         delta_path = catalog.manifest(version)["tables"]["seen"]["paths"][-1]
         delta_keys = spark.read.parquet(delta_path)
-        # the delta filter takes the live filter's kind and geometry
-        # (both sized from bloom_expected); persisting the merged filter
+        # the keys go straight into the live filter; persisting it
         # against this round's manifest lets a resume load it instead of
         # re-scanning the whole seen table
-        bloom.merge(build_filter(
-            delta_keys, "url_hash", bloom_expected, type(bloom)(bloom_expected)
-        ))
+        build_filter(delta_keys, "url_hash", bloom_expected, bloom)
         save_bloom_sidecar(catalog, version, bloom, bloom_expected)
     for cached in (decisions, results_delta, *round_caches):
         _release(cached)

@@ -791,7 +791,7 @@ class TestCrawlDelay:
         frontier = ingest_seeds(gen_frontier(spark, 300, n_payloads=50))
         d = schedule_round(frontier, eff, "2025-08-29 00:00:00")
         h0_rows = d.filter(F.col("host") == h0)
-        # every decision for h0 carries the lifted budget into lineage
+        # every decision for h0 carries the lifted delay into metrics
         assert h0_rows.filter(F.col("min_delay_ms") != 30_000).count() == 0
         assert h0_rows.count() > 0
         # the body-added prefix blocks alongside the configured /private

@@ -2,6 +2,8 @@
 the bit-identical final state of an uninterrupted run (the manifest commit
 is the checkpoint — SURVEY §2.12 exactly-once semantics)."""
 
+from collections import Counter
+
 from pyspark.sql import functions as F
 
 from cex_crawler_spark.catalog import SnapshotCatalog
@@ -140,7 +142,7 @@ def test_task_failure_retry_exactly_once(spark, tmp_path, monkeypatch):
 def test_resume_pre_priority_catalog(spark, tmp_path):
     """ADVICE r4 (medium): a catalog persisted BEFORE the priority
     column existed must resume — both the scheduler and the next-round
-    frontier rewrite (candidates.select(*FRONTIER_COLS)) need the
+    frontier rewrite (frontier.select(*FRONTIER_COLS)) need the
     default-level guard, and the drain must finish bit-identical to an
     uninterrupted run (gen_frontier seeds are all priority 0, so legacy
     default-0 semantics are exactly the modern plan's)."""
@@ -211,14 +213,15 @@ def test_round_job_count_bounded(spark, tmp_path):
     crawl(spark, cat, gen_host_policy(spark), "2025-08-29 00:00:00",
           max_rounds=1)
     jobs = set(tracker.getJobIdsForGroup("round-0")) - before
-    # measured 35-37 with AQE on (every adaptive query stage is its
-    # own job), including the four InheritableThread table writes.
+    # measured 30-32 with AQE on (every adaptive query stage is its
+    # own job), including the three InheritableThread table writes.
     # Before the round inputs were checkpointed it measured 46-49: a
     # persisted narrow projection became one query stage job per
-    # consumer, and persisted decisions took three concurrent jobs.  The
-    # bound (measured maximum + 2) catches a refactor that silently
-    # multiplies per-round actions.
-    assert 0 < len(jobs) <= 39, f"round-0 launched {len(jobs)} jobs"
+    # consumer, and persisted decisions took three concurrent jobs.
+    # Separate metrics and lineage writes over a persisted
+    # pre-aggregation measured 35-37.  The bound (measured maximum + 2)
+    # catches a refactor that silently multiplies per-round actions.
+    assert 0 < len(jobs) <= 34, f"round-0 launched {len(jobs)} jobs"
 
 
 def test_drained_frontier_commits_in_one_job(spark, tmp_path, monkeypatch):
@@ -251,6 +254,79 @@ def test_drained_frontier_commits_in_one_job(spark, tmp_path, monkeypatch):
     assert len(jobs) == 1, f"empty frontier commit ran {len(jobs)} jobs"
     out = cat.read(spark, "frontier")
     assert out.count() == 0 and "host_bucket" in out.columns
+
+
+def test_next_frontier_skips_seen_check(spark, tmp_path, monkeypatch):
+    """A round that defers rows builds the next frontier from the raw
+    frontier and the decisions checkpoint: the write neither reruns the
+    filter probe nor reads the seen table a second time."""
+    cat = SnapshotCatalog(tmp_path / "deferring")
+    bootstrap(cat, gen_frontier(spark, 200, n_payloads=40), WATERMARK)
+    plans = {}
+    real = SnapshotCatalog.commit
+
+    def spy(self, round_id, writes, *args, **kwargs):
+        version = real(self, round_id, writes, *args, **kwargs)
+        # resolved as the commit did, before the round releases its inputs
+        plans[round_id] = writes["frontier"][0]()
+        return version
+
+    monkeypatch.setattr(SnapshotCatalog, "commit", spy)
+    policy = gen_host_policy(spark).withColumn("budget_per_round", F.lit(15))
+    stats = crawl(spark, cat, policy, WATERMARK, max_rounds=2)
+    assert stats[1]["deferred"] > 0
+    frontier_write = plans[1]
+    plan = frontier_write._jdf.queryExecution().optimizedPlan().toString()
+    assert "ArrowEvalPython" not in plan
+    seen_dir = str(cat.root / "seen")
+    assert not [f for f in frontier_write.inputFiles() if seen_dir in f]
+    assert cat.read(spark, "frontier").count() == stats[1]["deferred"]
+
+
+def test_metrics_table_matches_decisions(spark, tmp_path):
+    """A round commits four tables; its metrics table holds the round's
+    decisions at the (round, host, part, status) grain."""
+    cat = SnapshotCatalog(tmp_path / "metrics")
+    bootstrap(cat, gen_frontier(spark, 250, n_payloads=60), WATERMARK)
+    policy = gen_host_policy(spark).withColumn("budget_per_round", F.lit(15))
+    crawl(spark, cat, policy, WATERMARK, max_rounds=2, filter_kind=None)
+    assert set(cat.manifest()["tables"]) == {
+        "results", "frontier", "seen", "metrics"}
+    metrics = cat.read(spark, "metrics")
+    assert set(metrics.columns) == {
+        "round", "host", "part", "status", "n", "min_url_hash",
+        "max_url_hash", "budget_per_round", "min_delay_ms"}
+    rows = metrics.collect()
+    assert rows and all(r["min_url_hash"] <= r["max_url_hash"] for r in rows)
+    host_policy = {r["host"]: (r["budget_per_round"], r["min_delay_ms"])
+                   for r in policy.collect()}
+    assert all((r["budget_per_round"], r["min_delay_ms"])
+               == host_policy[r["host"]] for r in rows)
+
+    by_status, by_host = Counter(), Counter()
+    for r in rows:
+        by_status[r["round"], r["status"]] += r["n"]
+        by_host[r["round"], r["host"], r["status"]] += r["n"]
+
+    manifests = [cat.manifest(v) for v in range(1, cat.current_version() + 1)]
+    stats = {(m["round"], s): n for m in manifests
+             for s, n in m.get("stats", {}).items() if n}
+    assert dict(by_status) == stats
+
+    # the terminal decisions and the fetched ones, as results records
+    # them: a fetched row carries its host_seq, a decided-stale one none
+    decided = Counter(
+        (r["round"], r["host"],
+         "scheduled" if r["host_seq"] is not None else r["status"])
+        for r in cat.read(spark, "results").collect())
+    # a round's deferred rows are the next frontier: the next round's
+    # decisions, or the frontier the crawl stopped at
+    decided.update((1, r["host"], "deferred")
+                   for r in cat.read(spark, "frontier").collect())
+    for (rnd, host, _), n in by_host.items():
+        if rnd == 1:
+            decided[0, host, "deferred"] += n
+    assert by_host == decided
 
 
 def test_crawl_releases_round_materializations(spark, tmp_path):
