@@ -138,7 +138,7 @@ def drain(n_urls: int | None = None) -> None:
             round_mod.fetch_and_validate = orig
 
     one_drain("full", stub_fetch=False)
-    one_drain("stub_fetch", stub_fetch=False)  # warm second run, real fetch
+    one_drain("full_warm", stub_fetch=False)  # warm second run, real fetch
     one_drain("no_fetch", stub_fetch=True)
     print(json.dumps(report))
 

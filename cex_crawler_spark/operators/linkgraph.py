@@ -5,8 +5,9 @@ The reference crawls a fixed hand-picked URL list per exchange
 URLs; an open-web frontier at the north rule's 10^10-URL scale does.
 The classic priority signal is link analysis (Page et al. 1998; Cho,
 Garcia-Molina & Page, WWW'98 showed PageRank-ordered crawling finds
-important pages first).  The scheduler's ``priority`` column
-(operators/politeness.py, lower = sooner) consumes the inverted rank.
+important pages first).  Mapping ranks onto the scheduler's
+``priority`` column (operators/politeness.py, lower = sooner) is not
+built.
 
 Scale notes (100 TB / 10^10 edges):
 - ``extract_links`` is scan-side codegen (regexp over the fetched
@@ -643,36 +644,6 @@ def relative_spam_mass(
                 >= F.lit(suspect_threshold)
             ).alias("spam_suspect"),
         )
-    )
-
-
-def rank_priority(ranks: DataFrame, levels: int = 10) -> DataFrame:
-    """Map ranks to the scheduler's ``priority`` column (lower = sooner):
-    quantile-bucket by rank so the top slice crawls first.
-
-    NOT a global ntile window — that funnels the whole node table
-    through one partition.  Thresholds come from one approx_percentile
-    aggregate (a mergeable sketch, one tiny array to the driver); the
-    bucketing itself is a scan-side expression, so the op stays
-    embarrassingly parallel at 10^10 nodes.  Ties at a threshold land
-    in the better bucket — stable because thresholds are data-derived
-    constants, not row positions.
-    """
-    qs = [i / levels for i in range(1, levels)]
-    thresholds = ranks.agg(
-        F.percentile_approx("rank", qs, 10_000).alias("t")
-    ).collect()[0]["t"]
-    # priority = number of thresholds the rank is >= … counted from the
-    # top: high rank clears many thresholds → low priority value
-    t_arr = F.array(*[F.lit(float(t)) for t in thresholds])
-    return ranks.select(
-        "id",
-        (
-            F.lit(len(thresholds))
-            - F.size(F.filter(t_arr, lambda t: F.col("rank") >= t))
-        )
-        .cast("long")
-        .alias("priority"),
     )
 
 

@@ -30,9 +30,9 @@ is how much of the SMALLER host is redundant.
 
 Clustering reuses the engine's path-halving connected components
 (operators/dedup.py) — min-label over host strings gives each mirror
-group a deterministic canonical host; the scheduler then demotes or
-rewrites non-canonical members (same broadcast feedback join as the
-trap screen, operators/traps.py:demote_trapped).
+group a deterministic canonical host.  Feeding the clusters back into
+the scheduler's priority (a broadcast join like the trap screen's,
+operators/traps.py:demote_trapped) is not built.
 
 Reference analog: none — /root/reference crawls 14 hand-picked hosts
 and cannot meet a mirror; at 10^10 URLs mirrors are a double-digit
@@ -115,39 +115,4 @@ def mirror_clusters(pairs: DataFrame) -> DataFrame:
     edges = pairs.filter(F.col("is_mirror")).select("host_a", "host_b")
     return connected_components(edges, "host_a", "host_b").select(
         F.col("id").alias("host"), F.col("component").alias("canonical_host")
-    )
-
-
-def demote_mirrors(
-    frontier: DataFrame,
-    clusters: DataFrame,
-    penalty: int = 100,
-    host_col: str = "host",
-) -> DataFrame:
-    """Scheduler feedback: sink every NON-canonical mirror member's URLs
-    by ``penalty`` priority levels (canonical hosts crawl normally; the
-    aliases crawl last, so novel pages on an imperfect mirror are still
-    reachable — demote, never drop, the trap-screen discipline).
-    Broadcast map join, no shuffle."""
-    if "priority" not in frontier.columns:
-        frontier = frontier.withColumn("priority", F.lit(0).cast("long"))
-    demoted = (
-        clusters.filter(F.col("host") != F.col("canonical_host"))
-        .select(F.col("host").alias("__mirror_host"))
-        .distinct()
-    )
-    return (
-        frontier.join(
-            F.broadcast(demoted),
-            frontier[host_col] == demoted["__mirror_host"],
-            "left",
-        )
-        .withColumn(
-            "priority",
-            F.when(
-                F.col("__mirror_host").isNotNull(),
-                F.col("priority") + F.lit(penalty),
-            ).otherwise(F.col("priority")),
-        )
-        .drop("__mirror_host")
     )

@@ -113,15 +113,6 @@ def pack_documents(
     ).drop("__csum")
 
 
-def pack_stats(packed: DataFrame) -> DataFrame:
-    """Per-pack fill stats: docs, tokens, and fill ratio vs ``budget``
-    must be computed by the caller (budget isn't carried per-row)."""
-    return packed.groupBy("pack_id").agg(
-        F.count("*").alias("n_docs"),
-        F.sum("n_tokens").alias("n_tokens"),
-    )
-
-
 def sliding_chunks(
     df: DataFrame,
     text_col: str,

@@ -40,7 +40,10 @@ time filter before existence check, binance.py:240-255):
   among SCHEDULABLE rows (the reference's second ``os.path.exists``
   hit).  Robots/stale rows never claim first occurrence — a fetchable
   row sharing a stale placeholder's hash is fetched, not dup-skipped,
-  exactly as the replayer oracle's sequential pass behaves.
+  exactly as the replayer oracle's sequential pass behaves.  One
+  ``row_number`` window partitioned by (url_hash, robots/stale verdict)
+  finds them: fetchable rows all carry no verdict, so they share one
+  group per hash, across hosts as well.
 - ``scheduled``: rank ≤ budget; ``host_seq`` = rank (the crawl order).
 - ``deferred``: schedulable but over budget — stays in the frontier.
 """
@@ -212,17 +215,14 @@ def schedule_round(
 
     Returns a NARROW decisions frame — ``_NARROW_COLS`` + (status,
     host_seq) — never the wide frontier payload (title/url/
-    duplicate_of).  Statuses are a JOIN-FREE 3-leg union over the
-    cached narrow rows (terminal / dup / ranked): every schedulable row
-    keeps its global rank, so scheduled-vs-deferred is a row-local
-    comparison.  r2 instead joined a 3-leg verdict union full-width
-    back to the frontier (a sort of both 1M-row sides); an r3
-    intermediate assembled statuses with two id-set LEFT joins, whose
-    "small" build sides are O(frontier) on drain rounds and cost
-    seconds of broadcast construction (PLANS.md has the measured
-    ladder).  The narrow frame is self-sufficient for the fetch stage
-    (image_id + freshness columns ride along); only the next-round
-    frontier write joins back to the wide frontier rows (plans/round.py).
+    duplicate_of).  One first-occurrence window over the narrow rows
+    marks duplicates; statuses are then a JOIN-FREE 2-leg union over the
+    windowed rows: the terminal leg (robots, stale, dup) and the ranked
+    leg, where every first-occurrence fetchable row keeps its global
+    rank, so scheduled-vs-deferred is a row-local comparison.  The
+    narrow frame is self-sufficient for the fetch stage (image_id +
+    freshness columns ride along); only the next-round frontier write
+    reads the wide frontier rows again (plans/round.py).
     """
     if "priority" not in candidates.columns:
         # pre-priority frontiers (and fixtures): one level, reference order
@@ -294,59 +294,36 @@ def schedule_round(
         # each rerunning the seen check's probe — per reference below
         narrow = narrow.localCheckpoint(eager=True)
         caches.append(narrow)
-    fetchable = narrow.filter(F.col("__pre").isNull()).drop("__pre")
 
-    # dup detection in two steps sized to reality (most hashes are unique):
-    # 1. hashes appearing >1× — a map-side-combinable 16 B/row count agg
-    #    whose output (only the colliding hashes) is a tiny broadcast;
-    # 2. an exact first-occurrence window over ONLY those collided rows.
-    # This keeps the full frontier out of a window sort: only (url_hash,
-    # count) partials shuffle for dup detection, plus the (small)
-    # collided subset through the window.
-    collided = (
-        fetchable.groupBy("url_hash")
-        .count()
-        .filter(F.col("count") > 1)
-        .select("url_hash")
-    )
-    # no broadcast hints: AQE broadcasts these when they are small (the
-    # common case) and falls back to shuffle joins under adversarial
-    # all-duplicate inputs instead of OOMing a forced broadcast
-    in_collision = fetchable.join(collided, "url_hash", "left_semi")
-    w_dup = Window.partitionBy("url_hash").orderBy(
+    # dup detection: one first-occurrence window per (url_hash, __pre).
+    # Every fetchable row has a NULL __pre, so all fetchable rows of a
+    # hash share one group — across hosts too, as the replayer's global
+    # first-occurrence set does — while robots/stale rows sit in groups
+    # of their own and never claim first occurrence.
+    w_dup = Window.partitionBy("url_hash", "__pre").orderBy(
         "priority", "section_rank", "seq", "seed_id"
     )
-    dup_rows = (
-        in_collision.withColumn("__dup_rn", F.row_number().over(w_dup))
-        .filter(F.col("__dup_rn") > 1)
-        .drop("__dup_rn")
-    )
-    schedulable = fetchable.join(
-        dup_rows.select("seed_id"), "seed_id", "left_anti"
-    )
+    numbered = narrow.select("*", F.row_number().over(w_dup).alias("__dup_rn"))
+    first_fetchable = F.col("__pre").isNull() & (F.col("__dup_rn") == 1)
 
     # exact per-host rank, PARALLEL within a host: one shuffle splits
     # each host's order into contiguous chunks, ranks locally per (host,
     # chunk), then adds per-chunk offsets (a tiny map-side broadcast
     # join).  A plain `row_number() OVER (PARTITION BY host)` would sort
     # a 50%-skew host in one task regardless of cluster size.
-    ranked = _ranked_per_host(schedulable)
+    ranked = _ranked_per_host(numbered.filter(first_fetchable))
 
-    # verdict assembly: a 3-leg UNION over the cached narrow rows — NO
-    # joins, NO broadcast builds (r3.0 assembled statuses with two
-    # id-set joins; on a full-drain round the "small" build sides are
-    # O(frontier) and the broadcast construction alone cost seconds).
-    # Every schedulable row carries its rank, so scheduled-vs-deferred
-    # is a row-local comparison; precedence mirrors the reference loop
-    # order (robots → stale → dup → budget).
+    # verdict assembly: a 2-leg UNION over the windowed narrow rows — no
+    # joins.  Every schedulable row carries its rank, so
+    # scheduled-vs-deferred is a row-local comparison; precedence mirrors
+    # the reference loop order (robots → stale → dup → budget).
     no_seq = F.lit(None).cast("long").alias("host_seq")
     return (
-        narrow.filter(F.col("__pre").isNotNull())
-        .select(*_NARROW_COLS, F.col("__pre").alias("status"), no_seq)
-        .unionByName(
-            dup_rows.select(
-                *_NARROW_COLS, F.lit(STATUS_DUP).alias("status"), no_seq
-            )
+        numbered.filter(~first_fetchable)
+        .select(
+            *_NARROW_COLS,
+            F.coalesce(F.col("__pre"), F.lit(STATUS_DUP)).alias("status"),
+            no_seq,
         )
         .unionByName(
             ranked.select(
@@ -538,16 +515,6 @@ def dispatch_timeline(
         )
         .withColumn("host_rank", F.col("__rank"))
         .drop("__one", "__rank")
-    )
-
-
-def round_makespan(timeline: DataFrame, host_col: str = "host") -> DataFrame:
-    """Per-host finish-time rollup over a dispatch timeline — the max is
-    the round's politeness-bound makespan; hosts finishing early are the
-    slack the allocator can reassign.  Map-combinable aggregate."""
-    return timeline.groupBy(host_col).agg(
-        F.count("*").alias("n_urls"),
-        F.max("dispatch_ms").alias("host_finish_ms"),
     )
 
 

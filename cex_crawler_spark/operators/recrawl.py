@@ -170,9 +170,9 @@ def adaptive_host_delay(
     map-combinable aggregates — one narrow shuffle on host, nothing
     else.
 
-    Composes dim-side: ``greatest(policy.min_delay_ms, adaptive
-    .delay_ms)`` on the broadcast host-policy dim (see
-    apply_adaptive_delay) — the scheduler's hot path is untouched.
+    Composes dim-side: a caller folds it into the broadcast host-policy
+    dim as ``greatest(policy.min_delay_ms, adaptive.delay_ms)``, which
+    can only slow a host down — the scheduler's hot path is untouched.
     The reference sleeps a FIXED random 1-3 s per request regardless of
     server health (/root/reference/exchange/base_scraper.py:160-181);
     deterministic budgets that ADAPT to measured latency are both
@@ -205,27 +205,6 @@ def adaptive_host_delay(
         "n_attempts",
         delay.alias("delay_ms"),
     )
-
-
-def apply_adaptive_delay(
-    host_policy: DataFrame, adaptive: DataFrame
-) -> DataFrame:
-    """Fold :func:`adaptive_host_delay` output into the host-policy dim:
-    ``min_delay_ms' = greatest(configured, adaptive)`` — the adaptive
-    signal can only slow a host down, never override a configured or
-    robots Crawl-delay floor.  Hosts with no attempt history keep their
-    policy unchanged.  A dim×dim broadcast-sized join, re-broadcast by
-    the scheduler as usual."""
-    joined = host_policy.join(
-        adaptive.select("host", "delay_ms"), "host", "left"
-    )
-    return joined.withColumn(
-        "min_delay_ms",
-        F.greatest(
-            F.col("min_delay_ms"),
-            F.coalesce(F.col("delay_ms"), F.lit(0).cast("long")),
-        ),
-    ).drop("delay_ms")
 
 
 def conditional_fetch_plan(

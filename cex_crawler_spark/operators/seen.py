@@ -40,9 +40,10 @@ crawl's delete path (plans/driver.requeue) removes keys from the exact
 seen TABLE and the filter together, so a fingerprint collision between
 a deleted and a kept key costs one extra key comparison (possible false
 positive), never a duplicate fetch.  At 10^10 keys either filter is
-tens of GB — too big for one broadcast — so the scale path shards the
-filter by the frontier's ``host_bucket`` partitioning (each task loads
-only its shard); the single-filter form below is the per-shard unit.
+tens of GB — too big for one broadcast.  Sharding the filter (and the
+seen table) by bucket, so each task loads only its shard, is not built:
+the crawl keeps one filter for the whole seen set and broadcasts it to
+every probing task.
 """
 
 from __future__ import annotations

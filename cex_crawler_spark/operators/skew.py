@@ -100,33 +100,6 @@ def salted_topk(
     )
 
 
-def salted_collect_set(
-    df: DataFrame,
-    keys: list[str],
-    col: str,
-    salt_buckets: int = _DEFAULT_BUCKETS,
-    sort: bool = True,
-) -> DataFrame:
-    """Per-group distinct values as a sorted array, skew-safely.
-
-    ``collect_set`` buffers every (duplicated) row of a group in one
-    task.  Salting ON THE VALUE dedups each value inside exactly one
-    bucket (same value → same salt), so phase 2 merges disjoint sets
-    with ``flatten`` — no re-dedup, no cross-bucket duplicates — and a
-    hot group's build parallelism is ``salt_buckets``.  Output column:
-    ``<col>_set`` (sorted for determinism unless ``sort=False``).
-    """
-    salted = df.withColumn("__salt", _salt(F.col(col), salt_buckets))
-    part = salted.groupBy(*keys, "__salt").agg(
-        F.collect_set(col).alias("__vals")
-    )
-    merged = part.groupBy(*keys).agg(
-        F.flatten(F.collect_list("__vals")).alias("__all")
-    )
-    arr = F.sort_array(F.col("__all")) if sort else F.col("__all")
-    return merged.select(*keys, arr.alias(f"{col}_set"))
-
-
 def salted_distinct_count(
     df: DataFrame,
     keys: list[str],
@@ -135,10 +108,10 @@ def salted_distinct_count(
 ) -> DataFrame:
     """Exact per-group ``COUNT(DISTINCT col)`` with bounded per-task
     state: each (group, value-salt) bucket counts its OWN distinct
-    values (disjoint across buckets, same argument as
-    :func:`salted_collect_set`), phase 2 sums ``buckets`` small counts.
-    Unlike the set variant nothing is materialized — both phases are
-    algebraic aggregates.  Output column: ``<col>_distinct``.
+    values — salting ON THE VALUE puts each value in exactly one bucket,
+    so the per-bucket counts are disjoint — and phase 2 sums ``buckets``
+    small counts.  Both phases are algebraic aggregates; nothing is
+    materialized.  Output column: ``<col>_distinct``.
     """
     salted = df.withColumn("__salt", _salt(F.col(col), salt_buckets))
     part = salted.groupBy(*keys, "__salt").agg(

@@ -117,38 +117,6 @@ def asof_join(
     )
 
 
-def suggest_bucket_width(
-    intervals: DataFrame,
-    start_col: str,
-    end_col: str,
-    quantile: float = 0.95,
-    max_fanout: int = 64,
-) -> int:
-    """Derive a :func:`range_join` ``bucket_width`` from the interval-
-    length distribution with one tiny aggregate (VERDICT r4 item 8).
-
-    A caller-picked width mis-sized for a long-tailed length
-    distribution explodes the bucket fan-out (a single year-long
-    interval at width=1 emits 3×10⁷ bucket rows).  This helper takes
-    the ``quantile`` length — so the typical interval lands in O(1)
-    buckets — then raises it if needed so even the LONGEST interval
-    explodes into at most ``max_fanout`` buckets.  A wider bucket never
-    breaks correctness (the exact range filter still applies); it only
-    trades candidate-pair volume for fan-out, which is the right trade
-    against pathological tails.
-    """
-    import math
-
-    length = F.col(end_col) - F.col(start_col) + F.lit(1)
-    row = intervals.select(
-        F.percentile_approx(length, quantile).alias("q"),
-        F.max(length).alias("mx"),
-    ).first()
-    if row is None or row["q"] is None:
-        return 1
-    return max(1, int(row["q"]), math.ceil(int(row["mx"]) / max_fanout))
-
-
 def range_join(
     points: DataFrame,
     intervals: DataFrame,

@@ -170,9 +170,11 @@ def run_round(
         candidates, host_policy, watermark, caches=round_caches
     )
     # one pass, many consumers (results / frontier' / metrics) → computed
-    # once, now, as a local checkpoint.  A persist() instead left each
-    # consumer's adaptive query stages to build it: three concurrent
-    # jobs per round, each rerunning the dup and rank shuffles.
+    # once, now, as a local checkpoint: the dup window's shuffle, the
+    # rank's (host, chunk) shuffle and its broadcast offsets run here, a
+    # few adaptive query stages each its own job.  A persist() instead
+    # left each consumer's adaptive query stages to build it: three
+    # concurrent jobs per round, each rerunning those shuffles.
     # decisions is NARROW (politeness.py): wide frontier columns are
     # joined back below only for the rows that need them — the scheduled
     # minority (fetch needs image_id) and the deferred remainder (the

@@ -813,10 +813,7 @@ class TestPacking:
         from pyspark.sql import functions as F
         from pyspark.sql.window import Window
 
-        from cex_crawler_spark.operators.packing import (
-            pack_documents,
-            pack_stats,
-        )
+        from cex_crawler_spark.operators.packing import pack_documents
 
         # sparse, non-contiguous ids; deterministic pseudo-random lengths
         df = spark.range(2000).select(
@@ -848,7 +845,10 @@ class TestPacking:
         assert got == want
 
         max_len = df.agg(F.max("len")).first()[0]
-        for r in pack_stats(packed).collect():
+        per_pack = packed.groupBy("pack_id").agg(
+            F.sum("n_tokens").alias("n_tokens")
+        )
+        for r in per_pack.collect():
             assert r["n_tokens"] <= budget + max_len - 1
         # packs are contiguous: sorted doc ids have non-decreasing packs
         ordered = [p for _, p in sorted(got.items())]

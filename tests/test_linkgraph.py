@@ -1,4 +1,4 @@
-"""Link-graph operators: extraction, PageRank, priority feed."""
+"""Link-graph operators: extraction, PageRank, trap demotion."""
 
 import numpy as np
 import pytest
@@ -10,7 +10,6 @@ from cex_crawler_spark.operators.linkgraph import (
     hits,
     page_links,
     pagerank,
-    rank_priority,
     resolve_redirects,
 )
 from cex_crawler_spark.operators.traps import demote_trapped
@@ -53,18 +52,6 @@ def test_pagerank_hub_outranks_leaf(spark):
     edges = [(i, 0) for i in range(1, 8)]
     got = {r["id"]: r["rank"] for r in pagerank(spark.createDataFrame(edges, ["src", "dst"])).collect()}
     assert got[0] > 3 * got[1]
-
-
-def test_rank_priority_monotone(spark):
-    edges = [(i, 0) for i in range(1, 8)] + [(0, 1), (1, 2)]
-    ranks = pagerank(spark.createDataFrame(edges, ["src", "dst"]))
-    pri = {r["id"]: r["priority"] for r in rank_priority(ranks, levels=4).collect()}
-    rk = {r["id"]: r["rank"] for r in ranks.collect()}
-    for a in rk:
-        for b in rk:
-            if rk[a] > rk[b]:
-                assert pri[a] <= pri[b], (a, b)
-    assert pri[0] == 0  # the hub crawls first
 
 
 def test_extract_links_href_and_decoys(spark):

@@ -3,7 +3,6 @@
 from pyspark.sql import functions as F
 
 from cex_crawler_spark.operators.mirrors import (
-    demote_mirrors,
     mirror_clusters,
     mirror_host_pairs,
 )
@@ -60,38 +59,15 @@ def test_clusters_pick_min_canonical(spark):
     assert got == {"m00": "m00", "m01": "m00", "m02": "m00"}
 
 
-def test_demote_mirrors_sinks_aliases_only(spark):
-    clusters = spark.createDataFrame(
-        [("m00", "m00"), ("m01", "m00"), ("m02", "m00")],
-        "host string, canonical_host string",
-    )
-    frontier = spark.createDataFrame(
-        [("m00", "u0", 1), ("m01", "u1", 1), ("m09", "u9", 2)],
-        "host string, url string, priority long",
-    )
-    got = {r["host"]: r["priority"] for r in demote_mirrors(frontier, clusters).collect()}
-    assert got == {"m00": 1, "m01": 101, "m09": 2}
-    # frontier without a priority column gets level 0 first
-    bare = frontier.drop("priority")
-    got0 = {r["host"]: r["priority"] for r in demote_mirrors(bare, clusters).collect()}
-    assert got0 == {"m00": 0, "m01": 100, "m09": 0}
-
-
 def test_composition_full_alias_stack(spark):
-    """End-to-end composition: DUST strip collapses param aliases,
-    mirror clusters fold clone hosts, demote_mirrors sinks the alias
-    hosts' remaining URLs behind every healthy priority level — the
-    frontier a scheduler then consumes has (a) canonical URLs, (b)
-    canonical hosts first."""
+    """End-to-end composition: DUST strip collapses param aliases, then
+    mirror clusters fold the clone host onto its canonical member — the
+    frontier a scheduler then consumes has canonical URLs and knows
+    which hosts are aliases."""
     import __spark_entry__ as e
     from cex_crawler_spark.operators.dust import (
         param_significance,
         strip_learned_params,
-    )
-    from cex_crawler_spark.operators.mirrors import (
-        demote_mirrors,
-        mirror_clusters,
-        mirror_host_pairs,
     )
 
     log = e.gen_sim_alias_log(spark)
@@ -106,18 +82,10 @@ def test_composition_full_alias_stack(spark):
     frontier = stripped.select(
         "host", F.col("canonical_url").alias("url")
     ).distinct()
-    out = demote_mirrors(frontier, clusters, penalty=100)
-    by_host = {
-        r["host"]: r["priority"]
-        for r in out.groupBy("host").agg(
-            F.max("priority").alias("priority")
-        ).collect()
-    }
-    # canonical mirror member + the unmirrored host stay at level 0;
-    # the clone host sinks
-    assert by_host["w0.site.com"] == 0
-    assert by_host["unique.org"] == 0
-    assert by_host["w1.site.com"] == 100
+    # the clone host folds onto the canonical member; the unmirrored
+    # host is in no cluster
+    got = {r["host"]: r["canonical_host"] for r in clusters.collect()}
+    assert got == {"w0.site.com": "w0.site.com", "w1.site.com": "w0.site.com"}
     # and the stripped frontier is already collapsed to true pages/host
     counts = {
         r["host"]: r["n"]

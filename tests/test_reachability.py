@@ -53,16 +53,8 @@ TEST_ONLY = {
     "py_simhash64": "pure-Python twin of simhash64",
     "decode_frontcoded": "inverse of the front-coded key encoding",
     "decompress_adjacency": "inverse of compress_adjacency",
-    # scheduler feedback and diagnostics with no caller yet
-    "apply_adaptive_delay": "writes adaptive_host_delay back into the "
-                            "host policy",
-    "demote_mirrors": "writes mirror clusters back into frontier priority",
-    "rank_priority": "writes link ranks into frontier priority",
-    "round_makespan": "per-host finish times of a dispatch timeline",
-    "pack_stats": "per-pack fill of the sequence packer",
-    "hll_distinct": "one-shot HLL distinct beside the mergeable sketches",
-    "salted_collect_set": "skew-safe collect_set beside salted counts",
-    "suggest_bucket_width": "derives range_join's bucket_width",
+    "hll_distinct": "one-shot HLL distinct the merged sketches are "
+                    "compared with",
     # methods
     "CuckooFilter64.delete_many": "the cuckoo un-see path requeue uses, "
                                   "the delete the cuckoo filter exists for",

@@ -224,36 +224,6 @@ def test_adaptive_host_delay_math_and_clamps(spark):
     assert got["fast"]["n_attempts"] == 20
 
 
-def test_apply_adaptive_delay_only_slows_never_speeds(spark):
-    """greatest(configured, adaptive): the adaptive signal can raise a
-    host's floor but never lower a configured/robots Crawl-delay one;
-    hosts without attempt history keep their policy row unchanged."""
-    from cex_crawler_spark.operators.recrawl import (
-        adaptive_host_delay,
-        apply_adaptive_delay,
-    )
-
-    policy = spark.createDataFrame(
-        [("a", 1000, 5), ("b", 100, 5), ("c", 700, 2)],
-        ["host", "min_delay_ms", "max_concurrency"],
-    )
-    attempts = spark.createDataFrame(
-        # a: healthy+fast → adaptive 200 < configured 1000 (keeps 1000)
-        # b: slow p95 1000 → adaptive 3000 > configured 100 (slows)
-        # c: no attempts at all (keeps 700)
-        [("a", 50, True)] * 10 + [("b", 1000, True)] * 10,
-        ["host", "latency_ms", "ok"],
-    )
-    out = apply_adaptive_delay(policy, adaptive_host_delay(attempts))
-    got = {r["host"]: r for r in out.collect()}
-    assert got["a"]["min_delay_ms"] == 1000
-    assert got["b"]["min_delay_ms"] == 3000
-    assert got["c"]["min_delay_ms"] == 700
-    # the dim keeps its full shape: other policy columns ride through
-    assert got["b"]["max_concurrency"] == 5
-    assert set(out.columns) == {"host", "min_delay_ms", "max_concurrency"}
-
-
 class TestConditionalPlan:
     def test_kinds_and_byte_expectations(self, spark):
         from cex_crawler_spark.operators.recrawl import conditional_fetch_plan

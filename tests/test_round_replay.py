@@ -170,7 +170,9 @@ def test_stale_row_does_not_dup_skip_fresh_twin(spark):
     """ADVICE r1 parity edge: a stale-prefetch row and a FRESH row sharing
     a url_hash.  The replayer's first-occurrence set only registers
     schedulable rows, so the fresh twin must be SCHEDULED (not
-    dup_skipped) while the stale one placeholds."""
+    dup_skipped) while the stale one placeholds.  The same holds for a
+    robots-blocked row; and the set is global, so a hash that recurs on
+    a second host is dup_skipped there."""
     from datetime import datetime
 
     from pyspark.sql import types as T
@@ -202,10 +204,18 @@ def test_stale_row_does_not_dup_skip_fresh_twin(spark):
         # a plain same-hash fresh pair: second must be dup_skipped
         (u + "b", u + "b", 8, "h", "spot", 2, 102, "t", new, "img", True, None),
         (u + "b", u + "b", 8, "h", "spot", 3, 103, "t", new, "img", True, None),
+        # a robots-blocked row first, then a fetchable row with its hash
+        (u + "/blocked", u + "/blocked", 9, "h", "spot", 4, 104, "t", new,
+         "img", True, None),
+        (u + "c", u + "c", 9, "h", "spot", 5, 105, "t", new, "img", True, None),
+        # one hash on two hosts: the later row in crawl order is a dup
+        ("https://g/d", "https://g/d", 10, "g", "spot", 0, 106, "t", new,
+         "img", True, None),
+        (u + "d", u + "d", 10, "h", "spot", 6, 107, "t", new, "img", True, None),
     ]
     frontier = spark.createDataFrame(rows, schema)
     policy = spark.createDataFrame(
-        [("h", 10, 0, [], 8)],
+        [("h", 10, 0, ["/a/blocked"], 8), ("g", 10, 0, [], 8)],
         "host string, budget_per_round int, min_delay_ms long, "
         "robots_disallow array<string>, list_page_size int",
     )
@@ -219,4 +229,8 @@ def test_stale_row_does_not_dup_skip_fresh_twin(spark):
                                # claimed first occurrence
         102: "scheduled",
         103: "dup_skipped",
+        104: "robots_blocked",
+        105: "scheduled",      # the robots row never claimed the hash
+        106: "scheduled",
+        107: "dup_skipped",    # first occurrence was on host g
     }

@@ -6,7 +6,6 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from cex_crawler_spark.operators.skew import (
-    salted_collect_set,
     salted_distinct_count,
     salted_topk,
 )
@@ -69,16 +68,6 @@ def test_salted_topk_plan_has_no_window(spark, skewed):
         skewed, ["key"], ["score", "id"], 5
     )._jdf.queryExecution().executedPlan().toString()
     assert "Window" not in plan
-
-
-def test_salted_collect_set_equals_naive(spark, skewed):
-    got = salted_collect_set(skewed, ["key"], "val", salt_buckets=8)
-    want = skewed.groupBy("key").agg(
-        F.sort_array(F.collect_set("val")).alias("val_set")
-    )
-    assert sorted(map(tuple, got.collect())) == sorted(
-        map(tuple, want.collect())
-    )
 
 
 def test_salted_distinct_count_equals_naive(spark, skewed):

@@ -173,45 +173,6 @@ def test_asof_duplicate_right_rows_enforced(spark):
     assert a[0]["px"] is not None
 
 
-def test_suggest_bucket_width_pathological_tail(spark):
-    """VERDICT r4 item 8: width derivation must keep the bucket fan-out
-    bounded even when one interval is 10⁵× longer than the typical one
-    (quantile alone would pick width≈1 and explode the tail into 10⁶
-    bucket rows)."""
-    from cex_crawler_spark.operators.temporal import (
-        range_join,
-        suggest_bucket_width,
-    )
-
-    iv_rows = [(i, i * 10, i * 10 + 1) for i in range(999)]
-    iv_rows.append((999, 0, 1_000_000))  # the pathological tail
-    iv = spark.createDataFrame(iv_rows, "iv_id long, s long, e long")
-
-    w = suggest_bucket_width(iv, "s", "e", max_fanout=64)
-    # every interval explodes into at most max_fanout+1 buckets
-    fanout = iv.select(
-        F.max(F.floor(F.col("e") / w) - F.floor(F.col("s") / w) + 1).alias("f")
-    ).first()["f"]
-    assert fanout <= 65
-    # and the join stays correct with the derived width
-    pts = spark.createDataFrame([(5,), (9_990,), (500_000,)], "p long")
-    got = {
-        (r["iv_id"], r["p"])
-        for r in range_join(pts, iv, "p", "s", "e", bucket_width=w).collect()
-    }
-    naive = {
-        (r["iv_id"], r["p"])
-        for r in pts.join(
-            iv, (F.col("p") >= F.col("s")) & (F.col("p") <= F.col("e"))
-        ).collect()
-    }
-    assert got == naive and len(got) >= 3
-
-    # empty intervals → sane default
-    empty = spark.createDataFrame([], "iv_id long, s long, e long")
-    assert suggest_bucket_width(empty, "s", "e") == 1
-
-
 def test_range_join_matches_naive_inequality_join(spark):
     """Bucketization must be invisible: same rows as the naive
     inequality join, for intervals that span 0, 1, and many buckets —

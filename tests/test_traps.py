@@ -293,12 +293,9 @@ class TestNoveltyYield:
 class TestDispatchTimeline:
     def test_gaps_equal_delay_and_makespan(self, spark):
         """Per-host consecutive dispatch offsets differ by exactly the
-        host's delay; round_makespan reports the politeness-bound finish
-        time per host."""
-        from cex_crawler_spark.operators.politeness import (
-            dispatch_timeline,
-            round_makespan,
-        )
+        host's delay; the last offset per host is its politeness-bound
+        finish time (the round's makespan)."""
+        from cex_crawler_spark.operators.politeness import dispatch_timeline
 
         cand = spark.createDataFrame(
             [(i, f"h{i % 2}") for i in range(20)], "okey long, host string"
@@ -313,7 +310,7 @@ class TestDispatchTimeline:
         for host, delay in [("h0", 200), ("h1", 500)]:
             offs = [d for h, _, d in rows if h == host]
             assert offs == [k * delay for k in range(10)]
-        ms = {r["host"]: r["host_finish_ms"] for r in round_makespan(tl).collect()}
+        ms = {h: max(d for g, _, d in rows if g == h) for h in ("h0", "h1")}
         assert ms == {"h0": 9 * 200, "h1": 9 * 500}
 
     def test_chunked_rank_crosses_chunk_boundaries(self, spark):
