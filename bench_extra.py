@@ -74,6 +74,7 @@ def time_query(name: str, reps: int = 3, noop: bool = False,
 
 def drain(n_urls: int | None = None) -> None:
     from pyspark.sql import functions as F
+    from pyspark.sql import types as T
 
     from cex_crawler_spark.catalog import SnapshotCatalog
     from cex_crawler_spark.plans import round as round_mod
@@ -100,23 +101,22 @@ def drain(n_urls: int | None = None) -> None:
 
             import pandas as pd
 
-            def stub(scheduled, fault_latch=None):
-                src = scheduled.select("url_hash", "image_id")
+            def stub(scheduled, fault_latch=None, n_rows=None):
+                verdict = {
+                    "w": 16, "h": 16, "fmt": "png", "caption": "c",
+                    "fetch_ok": True, "pixels_ok": True, "caption_ok": True,
+                    "psnr_db": 99.0, "valid": True,
+                }
+                schema = T.StructType(
+                    scheduled.schema.fields
+                    + fetch_mod.FETCH_VERDICT_SCHEMA.fields
+                )
 
                 def run(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
                     for pdf in it:
-                        n = len(pdf)
-                        yield pd.DataFrame({
-                            "url_hash": pdf["url_hash"],
-                            "image_id": pdf["image_id"],
-                            "w": [16] * n, "h": [16] * n,
-                            "fmt": ["png"] * n, "caption": ["c"] * n,
-                            "fetch_ok": [True] * n,
-                            "pixels_ok": [True] * n, "caption_ok": [True] * n,
-                            "psnr_db": [99.0] * n, "valid": [True] * n,
-                        })
+                        yield pdf.assign(**verdict)
 
-                return src.mapInPandas(run, schema=fetch_mod.FETCH_VERDICT_SCHEMA)
+                return scheduled.mapInPandas(run, schema=schema)
 
             round_mod.fetch_and_validate = stub
         try:

@@ -20,6 +20,14 @@ Protocol:
 - append tables (``seen``, ``results``, ``metrics``) list
   ALL their data paths in the manifest; overwrite tables (``frontier``)
   list only the newest.
+- each table entry also records ``schema`` (the table's schema as a
+  read sees it: partition columns last, every field nullable, as
+  ``StructType.json()``) and ``rows`` (its row count, counted by an
+  ``observe()`` on the write).  A read hands the schema to the parquet
+  reader, so it runs no schema-inference job, and the crawl tests its
+  frontier for emptiness from ``rows``.  An append whose schema differs
+  from the recorded one drops ``schema``; an entry without a key (a
+  catalog written before they existed) reads and counts as before.
 
 The API is what the crawl needs and what an Iceberg swap would map
 (read with time travel / commit / amend / compact / vacuum / current
@@ -35,7 +43,9 @@ import os
 from collections.abc import Callable
 from pathlib import Path
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 OVERWRITE = "overwrite"
 APPEND = "append"
@@ -43,6 +53,30 @@ APPEND = "append"
 # filter kinds (``kind`` of operators/seen.BloomFilter64 / CuckooFilter64),
 # written by plans/round.save_bloom_sidecar
 SIDECAR_KEYS = ("bloom", "cuckoo")
+
+
+def _as_read(dt: T.DataType) -> T.DataType:
+    """``dt`` with every field, element and value nullable, as a parquet
+    read reports it whatever the writer declared."""
+    if isinstance(dt, T.StructType):
+        return T.StructType([
+            T.StructField(f.name, _as_read(f.dataType), True, f.metadata)
+            for f in dt.fields
+        ])
+    if isinstance(dt, T.ArrayType):
+        return T.ArrayType(_as_read(dt.elementType), True)
+    if isinstance(dt, T.MapType):
+        return T.MapType(_as_read(dt.keyType), _as_read(dt.valueType), True)
+    return dt
+
+
+def _read_schema(schema: T.StructType, partition_cols: list[str]) -> dict:
+    """The manifest's ``schema`` entry for a write of ``schema``: the
+    partition columns move last, in directory order, as a read
+    appends them."""
+    fields = [f for f in schema.fields if f.name not in partition_cols]
+    fields += [schema[c] for c in partition_cols]
+    return json.loads(_as_read(T.StructType(fields)).json())
 
 
 class CommitConflictError(RuntimeError):
@@ -100,7 +134,20 @@ class SnapshotCatalog:
                 "catalog no longer applies: reading its data files alone "
                 "would return the deleted rows"
             )
-        return spark.read.parquet(*entry["paths"])
+        reader = spark.read
+        if "schema" in entry:
+            # the recorded schema spares the reader the job that infers
+            # it from a parquet footer
+            reader = reader.schema(T.StructType.fromJson(entry["schema"]))
+        return reader.parquet(*entry["paths"])
+
+    def rows(self, table: str) -> int | None:
+        """The current row count of ``table`` as its commits recorded
+        it, or ``None`` when a commit did not record one."""
+        entry = self.manifest()["tables"].get(table)
+        if entry is None:
+            raise KeyError(f"table {table!r} not in catalog")
+        return entry.get("rows")
 
     # ---------------------------------------------------------------- commit
 
@@ -156,24 +203,28 @@ class SnapshotCatalog:
             except Exception:
                 return False
 
-        def write_one(table: str) -> str:
+        def write_one(table: str) -> tuple[str, dict, int]:
+            """Write ``table``; returns its data path, the schema a read
+            of it sees and its row count."""
             df, _mode = writes[table]
             if callable(df):
                 # lazily-built plan: resolved at write time, AFTER the
-                # serial_first writes — lets a caller swap in a cheaper
-                # plan based on what those writes observed (e.g. an
-                # empty-frontier write when the round deferred nothing)
+                # serial_first writes
                 df = df()
             path = str(self.root / table / f"v{version:06d}-{attempt}")
-            cols = (partition_by or {}).get(table)
+            cols = (partition_by or {}).get(table) or []
             if cols and _is_local_empty(df):
                 # skip the dynamic-partition attempt entirely: a
                 # zero-row partitioned write produces no data file and
                 # the fallback below rewrites flat anyway — paying the
                 # ~0.5 s fixed write-path cost twice per drained round
                 df.write.mode("overwrite").parquet(path)
-                return path
-            writer = df.write.mode("overwrite")
+                return path, _read_schema(df.schema, []), 0
+            # the row count rides the write itself: no counting job
+            obs = Observation()
+            writer = df.observe(
+                obs, F.count(F.lit(1)).alias("rows")
+            ).write.mode("overwrite")
             if cols:
                 writer = writer.partitionBy(*cols)
             writer.parquet(path)
@@ -186,11 +237,12 @@ class SnapshotCatalog:
                 # drain's empty-frontier write re-ran a full-frontier
                 # anti-join just to write nothing)
                 df.limit(0).write.mode("overwrite").parquet(path)
-            return path
+                cols = []  # written flat: the partition columns are data
+            return path, _read_schema(df.schema, cols), int(obs.get["rows"])
 
         serial = [t for t in (serial_first or []) if t in writes]
         rest = [t for t in writes if t not in serial]
-        paths = {t: write_one(t) for t in serial}
+        written = {t: write_one(t) for t in serial}
         if len(rest) > 1:
             # InheritableThread, not ThreadPoolExecutor: Spark local
             # properties (job group/description) are per-thread under
@@ -204,7 +256,7 @@ class SnapshotCatalog:
 
             def run(table: str) -> None:
                 try:
-                    paths[table] = write_one(table)
+                    written[table] = write_one(table)
                 except BaseException as e:  # re-raised on the caller
                     errors[table] = e
 
@@ -225,21 +277,28 @@ class SnapshotCatalog:
                 )
         else:
             for t in rest:
-                paths[t] = write_one(t)
+                written[t] = write_one(t)
 
         # built from the version read BEFORE the writes: a writer that
         # committed meanwhile took this version number, so the link below
         # raises instead of publishing a manifest merged over its commit
         tables = dict(m["tables"])
         for table, (_df, mode) in writes.items():
+            path, schema, rows = written[table]
             if mode == APPEND and table in tables:
                 # keep what an older catalog wrote beside the paths: read()
                 # refuses an entry that still lists delete files
                 e = dict(tables[table])
-                e["paths"] = e["paths"] + [paths[table]]
+                e["paths"] = e["paths"] + [path]
+                if e.get("schema") != schema:
+                    # files of two schemas: a read infers one, as before
+                    e.pop("schema", None)
+                if "rows" in e:
+                    e["rows"] += rows
                 tables[table] = e
             else:
-                tables[table] = {"paths": [paths[table]]}
+                tables[table] = {"paths": [path], "schema": schema,
+                                 "rows": rows}
         new_manifest = {
             "version": version,
             "round": round_id,

@@ -2,10 +2,10 @@
 
 The reference fetches one URL at a time inside a Playwright browser with
 2-5 s sleeps (/root/reference/exchange/base_scraper.py:78-164).  The
-engine's fetch is a ``mapInPandas`` stage over the scheduled batch:
-each Arrow batch of frontier rows yields one verdict row per URL
-(metadata + caption + validation verdict; the bytes stay in the
-worker).  In production this function body would issue concurrent HTTP
+engine's fetch is a ``mapInArrow`` stage over the scheduled batch:
+each Arrow batch of scheduled rows comes back with the verdict columns
+appended (metadata + caption + validation verdict; the bytes stay in
+the worker).  In production this function body would issue concurrent HTTP
 requests per batch; in the sandbox it calls the deterministic page
 synthesizer (payload.page_for) — same plumbing, no network.
 
@@ -22,17 +22,13 @@ Scale notes:
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 from pyspark.sql import functions as F
 
+# the columns the fetch stage appends to every row it is given
 FETCH_VERDICT_SCHEMA = T.StructType(
     [
-        T.StructField("url_hash", T.LongType()),
-        T.StructField("image_id", T.StringType()),
         T.StructField("w", T.IntegerType()),
         T.StructField("h", T.IntegerType()),
         T.StructField("fmt", T.StringType()),
@@ -67,14 +63,22 @@ def _trip_fault_latch(path: str) -> bool:
 def fetch_and_validate(
     scheduled: DataFrame,
     fault_latch: str | None = None,
+    n_rows: int | None = None,
 ) -> DataFrame:
     """Fused fetch→decode→validate in ONE Python stage.
 
     The raw image bytes never cross the JVM↔Python Arrow boundary:
     fetching, decoding, the PSNR check and caption check all happen
-    inside the same worker, and only the 60-byte verdict row returns.
+    inside the same worker, and only the verdict columns
+    (``FETCH_VERDICT_SCHEMA``) come back, appended to each input row.
     Splitting fetch and validate into two stages would ship every
     payload across Arrow twice — measured 2× slower at 1M URLs.
+
+    Every column of ``scheduled`` passes through the stage unchanged, as
+    Arrow buffers the worker never converts: the caller gets the
+    verdicts on its own rows, with no join back by key (the CIDR'22
+    Python-UDF paper's advice to carry columns through the Python
+    operator rather than rejoin its output).
 
     The fetch is :func:`payload.page_for` — what a GET returns — and the
     stage computes nothing the round does not store: the payload
@@ -82,17 +86,24 @@ def fetch_and_validate(
     outputs cannot be pruned by Spark, so an unused column costs its
     full per-row compute).
 
+    ``n_rows``: the number of rows in ``scheduled``, when the caller
+    knows it; it sizes the fan-out (see below).
+
     ``fault_latch``: path for :func:`_trip_fault_latch` — when set, the
     first task attempt to finish a batch crashes AFTER yielding its
     output, exercising Spark's discard-and-retry of partial task output.
     """
-    src = scheduled.select("url_hash", "image_id")
-    # 2 tasks per core: slack partitions still smooth per-row payload
-    # variance, but every extra task is also one more output file in
-    # the results write and one more partition in every downstream
-    # scan of the round's caches — measured on the 200k drain, 4×
-    # cost ~3 s over 2× with no tail benefit (r6)
-    parallelism = 2 * scheduled.sparkSession.sparkContext.defaultParallelism
+    spark = scheduled.sparkSession
+    # one task per Arrow batch of rows, at most 2 per core.  Spare tasks
+    # smooth per-row payload variance, but each is also one more output
+    # file in the results write and one more partition in every
+    # downstream scan of the round's caches (4 per core cost the 200k
+    # drain ~3 s over 2 per core, with no tail benefit); a round that
+    # fetches a few hundred URLs fills one batch, so it runs one task
+    parallelism = 2 * spark.sparkContext.defaultParallelism
+    if n_rows is not None:
+        batch = int(spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch"))
+        parallelism = max(1, min(parallelism, -(-n_rows // batch)))
     # image_id partitioning (not url_hash): the verdict is a pure function
     # of the resource, so landing every row of a payload in one task lets
     # the per-task memo fetch+validate each distinct resource ONCE and
@@ -100,10 +111,15 @@ def fetch_and_validate(
     # small key, move the decision to the heavy rows" applied to fetch.
     # Distribution stays hash-even over cores; with unique-per-URL
     # resources (the production shape) the memo simply never hits.
-    src = src.repartition(parallelism, F.col("image_id"))
+    src = scheduled.repartition(parallelism, F.col("image_id"))
+    out_schema = T.StructType(
+        scheduled.schema.fields + FETCH_VERDICT_SCHEMA.fields
+    )
 
-    def run(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def run(it):
         import numpy as np
+        import pandas as pd
+        import pyarrow as pa
 
         from ..functions.imaging import decode_image, psnr
         from ..payload import caption_for, page_for, reference_decode
@@ -135,28 +151,29 @@ def fetch_and_validate(
                 memo[image_id] = v
             return v
 
-        val_cols = [f.name for f in FETCH_VERDICT_SCHEMA][2:]
-        for pdf in it:
+        val_types = [
+            pa.int32(), pa.int32(), pa.string(), pa.string(), pa.bool_(),
+            pa.bool_(), pa.bool_(), pa.float64(), pa.bool_(),
+        ]
+        names = out_schema.names
+        for rb in it:
             # factorize → one verdict per DISTINCT id in the batch (memo
-            # carries across batches); column-wise assembly via np.take
-            # replaces the old dict-per-row DataFrame build (~10× less
-            # Python-side work per row even without memo hits).
+            # carries across batches); column-wise assembly via np.take.
             # use_na_sentinel=False keeps a null image_id as its own
             # "unique" (verdict_for then yields the fetch-failed row)
             # instead of code −1, which np.take would silently alias to
             # the LAST unique's verdict
             codes, uniques = pd.factorize(
-                pdf["image_id"], use_na_sentinel=False
+                rb.column("image_id").to_pandas(), use_na_sentinel=False
             )
             verdicts = [verdict_for(i) for i in uniques]
-            out = {"url_hash": pdf["url_hash"].astype("int64"),
-                   "image_id": pdf["image_id"]}
-            for ci, name in enumerate(val_cols):
+            cols = list(rb.columns)
+            for ci, typ in enumerate(val_types):
                 col = np.empty(len(uniques), dtype=object)
                 for ui, v in enumerate(verdicts):
                     col[ui] = v[ci]
-                out[name] = col.take(codes) if len(uniques) else col
-            yield pd.DataFrame(out)
+                cols.append(pa.array(col.take(codes), type=typ))
+            yield pa.RecordBatch.from_arrays(cols, names=names)
             if fault_latch is not None and _trip_fault_latch(fault_latch):
                 # crash AFTER partial output left this attempt: Spark must
                 # discard it and replay the whole partition on retry
@@ -164,4 +181,4 @@ def fetch_and_validate(
                     "injected one-time task fault (fetch_and_validate)"
                 )
 
-    return src.mapInPandas(run, schema=FETCH_VERDICT_SCHEMA)
+    return src.mapInArrow(run, schema=out_schema)

@@ -21,11 +21,10 @@ Skew at scale: one host can hold 50%+ of a 10^10-row frontier, and
 ``row_number() OVER (PARTITION BY host)`` would funnel it into a single
 task.  Ranking instead splits each host's crawl order into contiguous
 chunks keyed by the sort columns themselves (``(priority, section_rank,
-seq div 8192)``), ranks locally per (host, chunk) in ONE shuffle whose
-partitioning the chunk-count aggregate then reuses, prunes local ranks
-past the host budget, and adds broadcast per-chunk offsets — so a
-10^10-row host ranks with 10^10/8192 parallel tasks and the rows that
-can never be scheduled never reach the offset join.
+seq div 8192)``), ranks locally per (host, chunk) in one shuffle,
+counts each chunk with a partial aggregate of its own (a shuffle of one
+row per task and chunk), and adds broadcast per-chunk offsets — so a
+10^10-row host ranks with 10^10/8192 parallel tasks.
 
 Statuses decided here (precedence mirrors the reference loop order —
 time filter before existence check, binance.py:240-255):
@@ -148,34 +147,38 @@ def _ranked_per_host(df: DataFrame) -> DataFrame:
     sort columns themselves — ``(priority, section_rank, seq div W)`` is
     order-aligned by construction (no range-sampling pass needed):
 
-    1. row_number within (host, chunk) — parallelism = #chunks — in ONE
-       shuffle; the chunk-count aggregate reuses that same partitioning
-       (Catalyst adds no second exchange for groupBy(host, chunk));
-    2. global rank = local rank + total count of earlier chunks of the
-       same host (chunk counts are a tiny broadcast, and the offset
-       join is map-side).
+    1. row_number within (host, chunk) — parallelism = #chunks — in one
+       shuffle of the rows;
+    2. the chunk counts come from a partial aggregate over the same
+       input rows, not over the ranked ones: its shuffle carries one row
+       per (task, chunk), and it does not rerun the rank's shuffle (a
+       count over the ranked rows would, since column pruning gives it
+       an exchange child of its own that Spark does not reuse);
+    3. global rank = local rank + total count of earlier chunks of the
+       same host (a window over the tiny counts, then a broadcast
+       map-side join).
 
     EVERY input row comes back with its ``__rank`` — over-budget rows
-    are the DEFERRED verdict, so "pruning" them here (r2) only forced a
-    join later to find them again; the offset join is map-side, so
-    ranking them costs one hash-lookup + add per row.
+    are the DEFERRED verdict, so ranking them costs one hash lookup and
+    an add per row, where pruning them would need a join to find them
+    again.
 
     Each chunk holds ≤ W rows, so a 10^10-row host ranks with 10^10/W
-    parallel tasks.  This replaces r1's separate salted pre-prune
-    window — a second full-frontier shuffle that bought nothing.
+    parallel tasks.
     """
     chunk = F.struct(
         F.col("priority").alias("p"),
         F.col("section_rank").alias("s"),
         F.floor(F.col("seq") / F.lit(_CHUNK_WIDTH)).alias("c"),
     )
-    local = df.withColumn("__chunk", chunk).withColumn(
+    keyed = df.withColumn("__chunk", chunk)
+    local = keyed.withColumn(
         "__lrn",
         F.row_number().over(
             Window.partitionBy("host", "__chunk").orderBy(*_ORDER_COLS)
         ),
     )
-    counts = local.groupBy("host", "__chunk").agg(F.count("*").alias("__cnt"))
+    counts = keyed.groupBy("host", "__chunk").agg(F.count("*").alias("__cnt"))
     w_off = (
         Window.partitionBy("host")
         .orderBy("__chunk")
@@ -206,12 +209,19 @@ def schedule_round(
     ``caches``: optional registry the caller owns.  When given, the
     NARROW projection (~130 B/row — not the wide frontier rows, whose
     cache was measured slower than pruned re-scans in r1) is computed
-    once, eagerly, as a local checkpoint and appended to it; the verdict
-    DAG fans out into several consumer branches, and without it each
-    branch re-executes the scan→seen-check→policy-join→regex subtree.
-    This is the one Spark job ``schedule_round`` runs itself.  The caller
-    releases the checkpoint after the round's writes (plans/round.py) —
-    no session-lifetime leak.
+    once, eagerly, as a local checkpoint and appended to it, together
+    with its first-occurrence window: the verdict DAG reads it from two
+    union legs and the rank's two inputs, and without it each would
+    re-execute the scan→seen-check→policy-join→regex subtree and the
+    dup shuffle.  This is the one action ``schedule_round`` runs itself.
+    The caller releases the checkpoint after the round's writes
+    (plans/round.py) — no session-lifetime leak.
+
+    The scheduler derives ``section_rank`` and ``path`` itself and reads
+    every policy column from ``host_policy``: input columns that would
+    come out of its joins and projections twice — a ``section_rank`` or
+    ``path`` in either input, a policy column in ``candidates`` — are
+    dropped first.
 
     Returns a NARROW decisions frame — ``_NARROW_COLS`` + (status,
     host_seq) — never the wide frontier payload (title/url/
@@ -224,6 +234,10 @@ def schedule_round(
     freshness columns ride along); only the next-round frontier write
     reads the wide frontier rows again (plans/round.py).
     """
+    host_policy = host_policy.drop("section_rank", "path")
+    candidates = candidates.drop(
+        "section_rank", "path", *[c for c in host_policy.columns if c != "host"]
+    )
     if "priority" not in candidates.columns:
         # pre-priority frontiers (and fixtures): one level, reference order
         candidates = candidates.withColumn("priority", F.lit(0).cast("long"))
@@ -272,28 +286,18 @@ def schedule_round(
     # frontier carries urls/titles that would otherwise ride through
     # every window shuffle.  canonical_url + min_delay_ms ride along so
     # downstream results/metrics never need the wide rows.
-    narrow = c.select(
-        *_NARROW_COLS,
-        F.coalesce(robots_hit, F.lit(False)).alias("__robots"),
-        stale_prefetch.alias("__stale"),
-    )
-
-    # robots/stale disposition first; dup detection then runs over the
-    # REMAINING (schedulable) rows only — matching the replayer oracle,
-    # where a stale placeholder never claims first-occurrence (a non-stale
-    # row sharing its hash is fetchable, not dup_skipped;
+    #
+    # robots/stale disposition first (precedence mirrors the reference
+    # loop order); dup detection then runs over the REMAINING
+    # (schedulable) rows only — matching the replayer oracle, where a
+    # stale placeholder never claims first-occurrence (a non-stale row
+    # sharing its hash is fetchable, not dup_skipped;
     # replayer.py:105-123).
     pre_terminal = (
-        F.when(F.col("__robots"), STATUS_ROBOTS)
-        .when(F.col("__stale"), STATUS_STALE)
+        F.when(F.coalesce(robots_hit, F.lit(False)), STATUS_ROBOTS)
+        .when(stale_prefetch, STATUS_STALE)
     )
-    narrow = narrow.select("*", pre_terminal.alias("__pre"))
-    if caches is not None:
-        # computed here, in one job, before any consumer runs: a
-        # persist() instead became one adaptive query stage — one job,
-        # each rerunning the seen check's probe — per reference below
-        narrow = narrow.localCheckpoint(eager=True)
-        caches.append(narrow)
+    narrow = c.select(*_NARROW_COLS, pre_terminal.alias("__pre"))
 
     # dup detection: one first-occurrence window per (url_hash, __pre).
     # Every fetchable row has a NULL __pre, so all fetchable rows of a
@@ -303,15 +307,26 @@ def schedule_round(
     w_dup = Window.partitionBy("url_hash", "__pre").orderBy(
         "priority", "section_rank", "seq", "seed_id"
     )
-    numbered = narrow.select("*", F.row_number().over(w_dup).alias("__dup_rn"))
-    first_fetchable = F.col("__pre").isNull() & (F.col("__dup_rn") == 1)
+    narrow = narrow.select(
+        "*",
+        (F.col("__pre").isNull() & (F.row_number().over(w_dup) == 1)).alias(
+            "__first"
+        ),
+    )
+    if caches is not None:
+        # computed here, in one action, before any consumer runs: the
+        # dup window's shuffle runs once, inside it.  A persist()
+        # instead became one adaptive query stage — one job, each
+        # rerunning the seen check's probe — per reference below
+        narrow = narrow.localCheckpoint(eager=True)
+        caches.append(narrow)
 
     # exact per-host rank, PARALLEL within a host: one shuffle splits
     # each host's order into contiguous chunks, ranks locally per (host,
     # chunk), then adds per-chunk offsets (a tiny map-side broadcast
     # join).  A plain `row_number() OVER (PARTITION BY host)` would sort
     # a 50%-skew host in one task regardless of cluster size.
-    ranked = _ranked_per_host(numbered.filter(first_fetchable))
+    ranked = _ranked_per_host(narrow.filter(F.col("__first")))
 
     # verdict assembly: a 2-leg UNION over the windowed narrow rows — no
     # joins.  Every schedulable row carries its rank, so
@@ -319,7 +334,7 @@ def schedule_round(
     # the reference loop order (robots → stale → dup → budget).
     no_seq = F.lit(None).cast("long").alias("host_seq")
     return (
-        numbered.filter(~first_fetchable)
+        narrow.filter(~F.col("__first"))
         .select(
             *_NARROW_COLS,
             F.coalesce(F.col("__pre"), F.lit(STATUS_DUP)).alias("status"),

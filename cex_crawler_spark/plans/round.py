@@ -6,7 +6,7 @@ declarative DataFrame plan per round:
 
     frontier ──anti-join seen (Bloom-prefiltered)──► candidates
              ──politeness window rank──► {robots, stale, dup, scheduled, deferred}
-    scheduled ──mapInPandas fetch──► payloads ──validate──► fetched/stale
+    scheduled ──mapInArrow fetch+validate──► fetched/stale
     commit: frontier' (deferred), seen+Δ, results+Δ, metrics+Δ
 
 All four tables commit atomically via the SnapshotCatalog manifest, so a
@@ -159,65 +159,55 @@ def run_round(
     seen = catalog.read(spark, "seen") if catalog.has_table("seen") else None
 
     # NOTE: schedule_round computes its narrow projection of the
-    # candidates (the seen check included) once, as a local checkpoint
-    # every scheduling branch reads.  The wide rows are not
-    # materialized: the next-frontier write below re-reads them from
-    # the frontier scan, which is cheaper than a wide cache of
+    # candidates (the seen check and the dup window included) once, as
+    # a local checkpoint every scheduling branch reads.  The wide rows
+    # are not materialized: the next-frontier write below re-reads them
+    # from the frontier scan, which is cheaper than a wide cache of
     # candidates (measured: +9s/round at 1M rows with a persist here).
     candidates = anti_join_seen(frontier, seen, "url_hash", bloom)
     round_caches: list = []
     decisions = schedule_round(
         candidates, host_policy, watermark, caches=round_caches
     )
-    # one pass, many consumers (results / frontier' / metrics) → computed
-    # once, now, as a local checkpoint: the dup window's shuffle, the
-    # rank's (host, chunk) shuffle and its broadcast offsets run here, a
-    # few adaptive query stages each its own job.  A persist() instead
-    # left each consumer's adaptive query stages to build it: three
-    # concurrent jobs per round, each rerunning those shuffles.
-    # decisions is NARROW (politeness.py): wide frontier columns are
-    # joined back below only for the rows that need them — the scheduled
-    # minority (fetch needs image_id) and the deferred remainder (the
-    # next-round frontier).  r2 instead joined every verdict to the wide
-    # rows up front: a full-width shuffle of both sides that the 8→32
-    # scaling profile identified as pure fixed-stage latency.
-    decisions = decisions.localCheckpoint(eager=True)
-
-    # one observe() pass piggy-backed on the results write replaces the
-    # r2 post-commit metrics-parquet re-read job (VERDICT r2 items 1/7)
+    # the round's status counts: an observe() on the decisions, filled
+    # by the checkpoint's own job below, so they are known before the
+    # fetch starts and cost no job.  Unnamed → auto-unique; a resumed
+    # round re-using an id in the same session must not collide on the
+    # listener name
     from pyspark.sql import Observation
 
-    # unnamed → auto-unique; a resumed round re-using an id in the same
-    # session must not collide on the listener name
     obs = Observation()
     all_statuses = [
         STATUS_ROBOTS, STATUS_STALE, STATUS_DUP, STATUS_SCHEDULED,
         STATUS_DEFERRED,
     ]
-    observed = decisions.observe(
+    # one pass, many consumers (fetch / results / frontier' / metrics) →
+    # computed once, now, as a local checkpoint of the verdicts: the
+    # rank's (host, chunk) shuffle, the chunk-count aggregate and the
+    # broadcast offsets run here, a few adaptive query stages each its
+    # own job.  A persist() instead left each consumer's adaptive query
+    # stages to build it: three concurrent jobs per round, each
+    # rerunning those shuffles.  decisions is NARROW (politeness.py):
+    # wide frontier columns come back only for the deferred remainder
+    # (the next-round frontier, below).
+    decisions = decisions.observe(
         obs, *[F.count_if(F.col("status") == s).alias(s) for s in all_statuses]
-    )
+    ).localCheckpoint(eager=True)
+    counts = obs.get
 
     # the fetch input comes STRAIGHT from the decisions checkpoint — the
     # narrow projection carries image_id + the post-fetch freshness
-    # columns precisely so no join back to the wide frontier is needed
-    # here (r3.0 joined a sched_ids set against the frontier lineage;
-    # on a drain round that meant an extra full scan + a six-figure-row
-    # broadcast build)
-    scheduled = decisions.filter(F.col("status") == STATUS_SCHEDULED)
-    # fused fetch→decode→validate: bytes never leave the Python worker,
-    # and results persist captions + verdicts, never raw payloads
-    # (matching the reference, which stores extracted records only —
-    # /root/reference/deepseek_analyzer.py:225-242)
-    validated = fetch_and_validate(scheduled)
-    verdicts = validated.select(
-        F.col("url_hash").alias("uh"), "caption", "valid", "psnr_db"
-    )
-
+    # columns, and the fetch stage hands every input column back beside
+    # its verdict, so nothing joins back to the frontier or to the
+    # scheduled rows.  Fused fetch→decode→validate: bytes never leave
+    # the Python worker, and results persist captions + verdicts, never
+    # raw payloads (matching the reference, which stores extracted
+    # records only — /root/reference/deepseek_analyzer.py:225-242)
     fetched = (
-        scheduled
-        .join(verdicts, F.col("url_hash") == F.col("uh"))
-        .drop("uh")
+        fetch_and_validate(
+            decisions.filter(F.col("status") == STATUS_SCHEDULED),
+            n_rows=counts.get(STATUS_SCHEDULED, 0),
+        )
         # post-fetch freshness (weex/bitunix/blofin semantics): budget was
         # consumed, but stale rows are placeholdered, caption dropped
         .withColumn(
@@ -245,11 +235,7 @@ def run_round(
         "valid",
         "psnr_db",
     ).unionByName(
-        # `observed` (not `decisions`): the terminal-status filter sits
-        # ABOVE the CollectMetrics node, so this leg's scan inside the
-        # results write streams every decision row through the observe()
-        # counters — the round stats cost zero extra jobs
-        observed.filter(
+        decisions.filter(
             ~F.col("status").isin(STATUS_SCHEDULED, STATUS_DEFERRED)
         ).select(
             F.lit(round_id).alias("round"),
@@ -294,17 +280,14 @@ def run_round(
 
     frontier_write = with_host_bucket(new_frontier)
 
-    def frontier_plan() -> DataFrame:
-        # resolved AFTER the serial results write: when the observe()
-        # counters show nothing deferred (and expansion can't add
-        # children), the next frontier is empty BY CONSTRUCTION — write
-        # it from the schema instead of re-scanning the whole frontier
-        # through the anti-join just to emit zero rows (the final round
-        # of every drain hits this).  limit(0) optimizes to an empty
-        # LocalRelation, which the commit writes flat in one job.
-        if not expand and obs.get.get(STATUS_DEFERRED, 0) == 0:
-            return frontier_write.limit(0)
-        return frontier_write
+    if not expand and counts.get(STATUS_DEFERRED, 0) == 0:
+        # nothing deferred (and expansion can't add children): the next
+        # frontier is empty BY CONSTRUCTION — write it from the schema
+        # instead of re-scanning the whole frontier through the semi-join
+        # just to emit zero rows (the final round of every drain hits
+        # this).  limit(0) optimizes to an empty LocalRelation, which the
+        # commit writes flat in one job.
+        frontier_write = frontier_write.limit(0)
 
     # per-round metrics and per-partition lineage in one table at the
     # (round, host, part, status) grain, one aggregation over the
@@ -326,17 +309,16 @@ def run_round(
         )
     )
 
-    # two pre-commit actions, the checkpoints of the narrow rows and of
-    # the decisions; the results write then drives fetch → union
-    # (filling the results cache AND the observe() stat counters), and
-    # the other three writes overlap in threads over those stored rows —
-    # r1 paid a full extra barrier collecting metrics before the fetch
-    # could start
+    # two pre-commit actions, the checkpoints of the narrow rows (with
+    # their dup window) and of the decisions (filling the status
+    # counters); the results write then drives fetch → union (filling
+    # the results cache), and the other three writes overlap in threads
+    # over those stored rows
     version = catalog.commit(
         round_id,
         {
             "results": (results_delta, APPEND),
-            "frontier": (frontier_plan, OVERWRITE),
+            "frontier": (frontier_write, OVERWRITE),
             "seen": (seen_delta, APPEND),
             "metrics": (metrics_delta, APPEND),
         },
@@ -346,12 +328,9 @@ def run_round(
         # results cache the parallel writes then scan
         serial_first=["results"],
     )
-    # the observe() counters filled during the results write ARE the
-    # round stats — no metrics re-read, no extra collect job (r2 paid a
-    # parquet read job per round here)
-    stats: dict[str, int] = {
-        s: int(n) for s, n in obs.get.items() if n
-    }
+    # the observe() counters filled by the decisions checkpoint ARE the
+    # round stats — no metrics re-read, no extra collect job
+    stats: dict[str, int] = {s: int(n) for s, n in counts.items() if n}
     stats.setdefault("deferred", 0)
     catalog.amend(version, {"stats": stats})
     if bloom is not None:
@@ -367,7 +346,8 @@ def run_round(
         # this read would otherwise hand us ITS delta, and the filter
         # would miss this round's keys (filter ⊇ seen broken)
         delta_path = catalog.manifest(version)["tables"]["seen"]["paths"][-1]
-        delta_keys = spark.read.parquet(delta_path)
+        # read with the schema it was written with: no inference job
+        delta_keys = spark.read.schema(seen_delta.schema).parquet(delta_path)
         # the keys go straight into the live filter; persisting it
         # against this round's manifest lets a resume load it instead of
         # re-scanning the whole seen table

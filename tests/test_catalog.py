@@ -253,3 +253,127 @@ def test_read_refuses_entry_with_delete_files(spark, cat):
     # the versions before the delete, and the other tables, still read
     assert cat.read(spark, "seen", version=3).count() == 4
     assert cat.read(spark, "log").count() == 5
+
+
+def _inferred(spark, cat, table):
+    """The table read as a catalog without recorded schemas reads it."""
+    return spark.read.parquet(*cat.manifest()["tables"][table]["paths"])
+
+
+def test_recorded_schema_reads_like_inference(spark, tmp_path):
+    """Each commit records the schema a read of the table sees and its
+    row count: the partitioned frontier (rows and drained) and the
+    append tables after several rounds read back with the same names,
+    order and types as parquet inference gives them."""
+    from pyspark.sql import functions as F
+
+    from cex_crawler_spark.plans.driver import bootstrap, crawl
+    from cex_crawler_spark.synth import gen_frontier, gen_host_policy
+
+    wm = "2025-08-29 00:00:00"
+    cat = SnapshotCatalog(tmp_path / "cat")
+    bootstrap(cat, gen_frontier(spark, 200, n_payloads=40), wm)
+    frontier = cat.read(spark, "frontier")
+    inferred = _inferred(spark, cat, "frontier")
+    assert frontier.schema == inferred.schema
+    assert frontier.columns[-1] == "host_bucket"
+    assert sorted(frontier.collect()) == sorted(inferred.collect())
+    assert cat.rows("frontier") == inferred.count() == 200
+
+    policy = gen_host_policy(spark).withColumn("budget_per_round", F.lit(15))
+    stats = crawl(spark, cat, policy, wm, max_rounds=3)
+    assert len(stats) == 3 and stats[-1]["deferred"] > 0
+    # a drained frontier is written flat: host_bucket is a data column
+    crawl(spark, cat, policy.withColumn("budget_per_round", F.lit(1000)), wm)
+    assert cat.rows("frontier") == 0
+    for table in ("frontier", "results", "seen", "metrics"):
+        entry = cat.manifest()["tables"][table]
+        assert "schema" in entry, table
+        inferred = _inferred(spark, cat, table)
+        assert cat.read(spark, table).schema == inferred.schema, table
+        assert cat.rows(table) == inferred.count(), table
+    assert len(cat.manifest()["tables"]["results"]["paths"]) == 4
+
+
+def test_manifest_without_schema_or_rows_reads(spark, cat, tmp_path):
+    """A manifest written before entries recorded ``schema`` and
+    ``rows`` still reads, counts and crawls as before."""
+    from cex_crawler_spark.plans.driver import _frontier_empty, bootstrap
+    from cex_crawler_spark.plans.driver import crawl
+    from cex_crawler_spark.synth import gen_frontier, gen_host_policy
+
+    def strip(c):
+        m = c.manifest()
+        for entry in m["tables"].values():
+            entry.pop("schema")
+            entry.pop("rows")
+        m["version"] += 1
+        c._link_manifest(m["version"], m, "legacy")
+
+    strip(cat)
+    assert cat.rows("t") is None
+    assert cat.read(spark, "t").count() == 7
+    assert cat.read(spark, "log").count() == 5
+    cat.commit(2, {"log": (spark.range(4), APPEND)})
+    entry = cat.manifest()["tables"]["log"]
+    assert "schema" not in entry and "rows" not in entry
+    assert cat.read(spark, "log").count() == 9
+
+    wm = "2025-08-29 00:00:00"
+    old = SnapshotCatalog(tmp_path / "old")
+    bootstrap(old, gen_frontier(spark, 60, n_payloads=20), wm)
+    strip(old)
+    assert not _frontier_empty(spark, old)
+    stats = crawl(spark, old, gen_host_policy(spark), wm, max_rounds=1,
+                  filter_kind=None)
+    assert len(stats) == 1
+    empty = SnapshotCatalog(tmp_path / "empty")
+    empty.commit(-1, {"frontier": (old.read(spark, "frontier").limit(0),
+                                   OVERWRITE)})
+    strip(empty)
+    assert _frontier_empty(spark, empty)
+
+
+def test_append_with_other_schema_falls_back_to_inference(spark, cat):
+    """An append whose schema differs from the recorded one drops the
+    entry's schema, so reads infer it as they did before; the row count
+    still adds up."""
+    from pyspark.sql import functions as F
+
+    assert cat.manifest()["tables"]["log"]["schema"]
+    cat.commit(2, {"log": (spark.range(3).withColumn("x", F.lit(1)), APPEND)})
+    entry = cat.manifest()["tables"]["log"]
+    assert "schema" not in entry
+    assert entry["rows"] == 8
+    assert cat.read(spark, "log").schema == _inferred(spark, cat, "log").schema
+    assert cat.read(spark, "log").count() == 8
+    # a later append of the first schema does not bring it back
+    cat.commit(3, {"log": (spark.range(1), APPEND)})
+    assert "schema" not in cat.manifest()["tables"]["log"]
+    assert cat.rows("log") == 9
+
+
+def test_read_and_emptiness_probe_run_no_jobs(spark, tmp_path):
+    """Reading a table with a recorded schema, and the crawl's test for
+    an empty frontier, launch no Spark job."""
+    from pyspark.sql import functions as F
+
+    from cex_crawler_spark.plans.driver import _frontier_empty, bootstrap
+    from cex_crawler_spark.plans.driver import crawl
+    from cex_crawler_spark.synth import gen_frontier, gen_host_policy
+
+    wm = "2025-08-29 00:00:00"
+    cat = SnapshotCatalog(tmp_path / "cat")
+    bootstrap(cat, gen_frontier(spark, 80, n_payloads=20), wm)
+    policy = gen_host_policy(spark).withColumn("budget_per_round", F.lit(1000))
+    crawl(spark, cat, policy, wm, max_rounds=1)  # drains
+
+    sc = spark.sparkContext
+    sc.setJobGroup("no-jobs", "catalog reads", False)
+    tracker = sc.statusTracker()
+    before = set(tracker.getJobIdsForGroup("no-jobs"))
+    for table in ("frontier", "results", "seen", "metrics"):
+        cat.read(spark, table)
+    assert _frontier_empty(spark, cat)
+    assert crawl(spark, cat, policy, wm) == []
+    assert set(tracker.getJobIdsForGroup("no-jobs")) == before

@@ -234,3 +234,82 @@ def test_stale_row_does_not_dup_skip_fresh_twin(spark):
         106: "scheduled",
         107: "dup_skipped",    # first occurrence was on host g
     }
+
+
+def test_scheduler_ignores_clashing_input_columns(spark):
+    """The scheduler derives section_rank and path and reads the policy
+    columns from the policy: inputs that already carry such columns
+    (a re-fed decisions frame, a URL-path column, a per-row budget)
+    schedule exactly as inputs without them."""
+    from cex_crawler_spark.operators.politeness import schedule_round
+    from cex_crawler_spark.plans.round import ingest_seeds
+
+    wm = "2025-08-29 00:00:00"
+    frontier = ingest_seeds(gen_frontier(spark, 300, n_payloads=50))
+    policy = gen_host_policy(spark).withColumn("budget_per_round", F.lit(5))
+
+    def decided(cands, pol):
+        return sorted(
+            tuple(r) for r in schedule_round(cands, pol, wm).collect()
+        )
+
+    want = decided(frontier, policy)
+    clashing = frontier.select(
+        "*",
+        F.lit(99).alias("section_rank"),
+        F.lit("/private/x").alias("path"),
+        F.lit(0).alias("budget_per_round"),
+        F.array().cast("array<string>").alias("robots_disallow"),
+    )
+    assert decided(clashing, policy) == want
+    assert decided(
+        frontier,
+        policy.withColumn("path", F.lit("/")).withColumn(
+            "section_rank", F.lit(-1)),
+    ) == want
+
+
+def test_hot_host_ranks_across_tasks(spark):
+    """A host holding half the frontier is ranked by more than one task
+    (one per (host, chunk) group, not one per host), and its ranks are
+    the exact crawl order a single per-host window gives."""
+    from pyspark.sql.window import Window
+
+    from cex_crawler_spark.operators.politeness import (
+        _CHUNK_WIDTH,
+        _ranked_per_host,
+    )
+
+    n = 6 * _CHUNK_WIDTH
+    rows = spark.range(n).select(
+        F.when(F.col("id") % 2 == 0, F.lit("hot"))
+        .otherwise(F.concat(F.lit("h"), (F.col("id") % 40).cast("string")))
+        .alias("host"),
+        F.lit(0).cast("long").alias("priority"),
+        (F.col("id") % 3).cast("int").alias("section_rank"),
+        F.col("id").alias("seq"),
+        F.xxhash64("id").alias("url_hash"),
+    )
+    key = "spark.sql.adaptive.coalescePartitions.enabled"
+    prev = spark.conf.get(key)
+    # at this size adaptive coalescing would pack every shuffle partition
+    # into one task; a cluster-sized frontier has no such option
+    spark.conf.set(key, "false")
+    try:
+        ranked = _ranked_per_host(rows).select(
+            "host", "seq", "__rank", F.spark_partition_id().alias("task")
+        ).collect()
+    finally:
+        spark.conf.set(key, prev)
+    hot = [r for r in ranked if r["host"] == "hot"]
+    assert len(hot) == n // 2
+    assert len({r["task"] for r in hot}) > 1
+    naive = rows.select(
+        "host", "seq",
+        F.row_number().over(
+            Window.partitionBy("host").orderBy(
+                "priority", "section_rank", "seq", "url_hash")
+        ).alias("rank"),
+    )
+    want = {(r["host"], r["seq"]): r["rank"] for r in naive.collect()}
+    assert {(r["host"], r["seq"]): r["__rank"] for r in ranked} == want
