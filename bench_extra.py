@@ -101,7 +101,7 @@ def drain(n_urls: int | None = None) -> None:
 
             import pandas as pd
 
-            def stub(scheduled, fault_latch=None, n_rows=None):
+            def stub(scheduled, fault_latch=None):
                 verdict = {
                     "w": 16, "h": 16, "fmt": "png", "caption": "c",
                     "fetch_ok": True, "pixels_ok": True, "caption_ok": True,

@@ -21,9 +21,9 @@ Protocol:
   ALL their data paths in the manifest; overwrite tables (``frontier``)
   list only the newest.
 - each table entry also records ``schema`` (the table's schema as a
-  read sees it: partition columns last, every field nullable, as
-  ``StructType.json()``) and ``rows`` (its row count, counted by an
-  ``observe()`` on the write).  A read hands the schema to the parquet
+  read sees it, as DDL text: partition columns last, every field
+  nullable, no field metadata) and ``rows`` (its row count, counted by
+  an ``observe()`` on the write).  A read hands the schema to the parquet
   reader, so it runs no schema-inference job, and the crawl tests its
   frontier for emptiness from ``rows``.  An append whose schema differs
   from the recorded one drops ``schema``; an entry without a key (a
@@ -40,7 +40,6 @@ from __future__ import annotations
 
 import json
 import os
-from collections.abc import Callable
 from pathlib import Path
 
 from pyspark.sql import DataFrame, Observation, SparkSession
@@ -55,28 +54,33 @@ APPEND = "append"
 SIDECAR_KEYS = ("bloom", "cuckoo")
 
 
-def _as_read(dt: T.DataType) -> T.DataType:
-    """``dt`` with every field, element and value nullable, as a parquet
-    read reports it whatever the writer declared."""
+def _ddl_name(name: str) -> str:
+    return "`" + name.replace("`", "``") + "`"
+
+
+def _ddl_type(dt: T.DataType) -> str:
+    """``dt`` as Spark SQL type text, every nested field name quoted."""
     if isinstance(dt, T.StructType):
-        return T.StructType([
-            T.StructField(f.name, _as_read(f.dataType), True, f.metadata)
-            for f in dt.fields
-        ])
+        return "struct<" + ",".join(
+            f"{_ddl_name(f.name)}:{_ddl_type(f.dataType)}" for f in dt.fields
+        ) + ">"
     if isinstance(dt, T.ArrayType):
-        return T.ArrayType(_as_read(dt.elementType), True)
+        return f"array<{_ddl_type(dt.elementType)}>"
     if isinstance(dt, T.MapType):
-        return T.MapType(_as_read(dt.keyType), _as_read(dt.valueType), True)
-    return dt
+        return f"map<{_ddl_type(dt.keyType)},{_ddl_type(dt.valueType)}>"
+    return dt.simpleString()
 
 
-def _read_schema(schema: T.StructType, partition_cols: list[str]) -> dict:
-    """The manifest's ``schema`` entry for a write of ``schema``: the
-    partition columns move last, in directory order, as a read
-    appends them."""
+def _read_schema(schema: T.StructType, partition_cols: list[str]) -> str:
+    """The manifest's ``schema`` entry for a write of ``schema``: DDL
+    with the partition columns last, in directory order, as a read
+    appends them.  DDL declares no nullability, so the reader parses it
+    with every field nullable, as a parquet read reports them."""
     fields = [f for f in schema.fields if f.name not in partition_cols]
     fields += [schema[c] for c in partition_cols]
-    return json.loads(_as_read(T.StructType(fields)).json())
+    return ", ".join(
+        f"{_ddl_name(f.name)} {_ddl_type(f.dataType)}" for f in fields
+    )
 
 
 class CommitConflictError(RuntimeError):
@@ -124,6 +128,18 @@ class SnapshotCatalog:
     ) -> DataFrame:
         """Read a table — optionally AS OF an earlier manifest version
         (snapshot time travel, the Iceberg `VERSION AS OF` analog)."""
+        entry = self._entry(table, version)
+        return self._reader(spark, entry).parquet(*entry["paths"])
+
+    def read_newest(
+        self, spark: SparkSession, table: str, version: int
+    ) -> DataFrame:
+        """Read only the data the newest commit of ``table`` up to
+        ``version`` wrote — for an append table, that commit's delta."""
+        entry = self._entry(table, version)
+        return self._reader(spark, entry).parquet(entry["paths"][-1])
+
+    def _entry(self, table: str, version: int | None) -> dict:
         entry = self.manifest(version)["tables"].get(table)
         if entry is None or not entry["paths"]:
             raise KeyError(f"table {table!r} not in catalog")
@@ -134,17 +150,21 @@ class SnapshotCatalog:
                 "catalog no longer applies: reading its data files alone "
                 "would return the deleted rows"
             )
-        reader = spark.read
-        if "schema" in entry:
-            # the recorded schema spares the reader the job that infers
-            # it from a parquet footer
-            reader = reader.schema(T.StructType.fromJson(entry["schema"]))
-        return reader.parquet(*entry["paths"])
+        return entry
 
-    def rows(self, table: str) -> int | None:
-        """The current row count of ``table`` as its commits recorded
-        it, or ``None`` when a commit did not record one."""
-        entry = self.manifest()["tables"].get(table)
+    @staticmethod
+    def _reader(spark: SparkSession, entry: dict):
+        if "schema" not in entry:
+            return spark.read
+        # the recorded schema spares the reader the job that infers it
+        # from a parquet footer
+        return spark.read.schema(entry["schema"])
+
+    def rows(self, table: str, version: int | None = None) -> int | None:
+        """The row count of ``table`` (optionally AS OF ``version``) as
+        its commits recorded it, or ``None`` when a commit did not
+        record one."""
+        entry = self.manifest(version)["tables"].get(table)
         if entry is None:
             raise KeyError(f"table {table!r} not in catalog")
         return entry.get("rows")
@@ -154,7 +174,7 @@ class SnapshotCatalog:
     def commit(
         self,
         round_id: int,
-        writes: dict[str, tuple[DataFrame | Callable[[], DataFrame], str]],
+        writes: dict[str, tuple[DataFrame, str]],
         extra: dict | None = None,
         partition_by: dict[str, list[str]] | None = None,
         serial_first: list[str] | None = None,
@@ -203,14 +223,10 @@ class SnapshotCatalog:
             except Exception:
                 return False
 
-        def write_one(table: str) -> tuple[str, dict, int]:
+        def write_one(table: str) -> tuple[str, str, int]:
             """Write ``table``; returns its data path, the schema a read
             of it sees and its row count."""
             df, _mode = writes[table]
-            if callable(df):
-                # lazily-built plan: resolved at write time, AFTER the
-                # serial_first writes
-                df = df()
             path = str(self.root / table / f"v{version:06d}-{attempt}")
             cols = (partition_by or {}).get(table) or []
             if cols and _is_local_empty(df):

@@ -63,7 +63,6 @@ def _trip_fault_latch(path: str) -> bool:
 def fetch_and_validate(
     scheduled: DataFrame,
     fault_latch: str | None = None,
-    n_rows: int | None = None,
 ) -> DataFrame:
     """Fused fetch→decode→validate in ONE Python stage.
 
@@ -86,24 +85,16 @@ def fetch_and_validate(
     outputs cannot be pruned by Spark, so an unused column costs its
     full per-row compute).
 
-    ``n_rows``: the number of rows in ``scheduled``, when the caller
-    knows it; it sizes the fan-out (see below).
-
     ``fault_latch``: path for :func:`_trip_fault_latch` — when set, the
     first task attempt to finish a batch crashes AFTER yielding its
     output, exercising Spark's discard-and-retry of partial task output.
     """
-    spark = scheduled.sparkSession
-    # one task per Arrow batch of rows, at most 2 per core.  Spare tasks
-    # smooth per-row payload variance, but each is also one more output
-    # file in the results write and one more partition in every
-    # downstream scan of the round's caches (4 per core cost the 200k
-    # drain ~3 s over 2 per core, with no tail benefit); a round that
-    # fetches a few hundred URLs fills one batch, so it runs one task
-    parallelism = 2 * spark.sparkContext.defaultParallelism
-    if n_rows is not None:
-        batch = int(spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch"))
-        parallelism = max(1, min(parallelism, -(-n_rows // batch)))
+    # 2 tasks per core: slack partitions still smooth per-row payload
+    # variance, but every extra task is also one more output file in
+    # the results write and one more partition in every downstream
+    # scan of the round's caches — measured on the 200k drain, 4×
+    # cost ~3 s over 2× with no tail benefit (r6)
+    parallelism = 2 * scheduled.sparkSession.sparkContext.defaultParallelism
     # image_id partitioning (not url_hash): the verdict is a pure function
     # of the resource, so landing every row of a payload in one task lets
     # the per-task memo fetch+validate each distinct resource ONCE and
@@ -120,6 +111,7 @@ def fetch_and_validate(
         import numpy as np
         import pandas as pd
         import pyarrow as pa
+        from pyspark.sql.pandas.types import to_arrow_type
 
         from ..functions.imaging import decode_image, psnr
         from ..payload import caption_for, page_for, reference_decode
@@ -151,10 +143,7 @@ def fetch_and_validate(
                 memo[image_id] = v
             return v
 
-        val_types = [
-            pa.int32(), pa.int32(), pa.string(), pa.string(), pa.bool_(),
-            pa.bool_(), pa.bool_(), pa.float64(), pa.bool_(),
-        ]
+        val_types = [to_arrow_type(f.dataType) for f in FETCH_VERDICT_SCHEMA]
         names = out_schema.names
         for rb in it:
             # factorize → one verdict per DISTINCT id in the batch (memo

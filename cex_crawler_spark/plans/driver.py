@@ -213,10 +213,7 @@ def requeue(
         extra={"requeue": True},
         partition_by={"frontier": ["host_bucket"]},
     )
-    n_requeued = (
-        catalog.manifest(version)["tables"]["frontier"]["rows"]
-        - n_frontier_before
-    )
+    n_requeued = catalog.rows("frontier", version) - n_frontier_before
     unseen = int(obs_s.get["unseen"]) if obs_s is not None else 0
     if cuckoo is not None:
         cuckoo.delete_many(

@@ -170,8 +170,8 @@ def run_round(
         candidates, host_policy, watermark, caches=round_caches
     )
     # the round's status counts: an observe() on the decisions, filled
-    # by the checkpoint's own job below, so they are known before the
-    # fetch starts and cost no job.  Unnamed → auto-unique; a resumed
+    # by the checkpoint's own job below, so they cost no job and are
+    # known before the commit (the next-frontier write reads them).  Unnamed → auto-unique; a resumed
     # round re-using an id in the same session must not collide on the
     # listener name
     from pyspark.sql import Observation
@@ -205,8 +205,7 @@ def run_round(
     # records only — /root/reference/deepseek_analyzer.py:225-242)
     fetched = (
         fetch_and_validate(
-            decisions.filter(F.col("status") == STATUS_SCHEDULED),
-            n_rows=counts.get(STATUS_SCHEDULED, 0),
+            decisions.filter(F.col("status") == STATUS_SCHEDULED)
         )
         # post-fetch freshness (weex/bitunix/blofin semantics): budget was
         # consumed, but stale rows are placeholdered, caption dropped
@@ -345,9 +344,7 @@ def run_round(
         # ``version``, not the head: a commit landing between ours and
         # this read would otherwise hand us ITS delta, and the filter
         # would miss this round's keys (filter ⊇ seen broken)
-        delta_path = catalog.manifest(version)["tables"]["seen"]["paths"][-1]
-        # read with the schema it was written with: no inference job
-        delta_keys = spark.read.schema(seen_delta.schema).parquet(delta_path)
+        delta_keys = catalog.read_newest(spark, "seen", version)
         # the keys go straight into the live filter; persisting it
         # against this round's manifest lets a resume load it instead of
         # re-scanning the whole seen table

@@ -1,8 +1,10 @@
 """Catalog unit tests: atomicity, time travel, vacuum."""
 
 import json
+from pathlib import Path
 
 import pytest
+from pyspark.sql import DataFrameWriter
 
 from cex_crawler_spark.catalog import (
     APPEND,
@@ -113,42 +115,51 @@ def test_commit_conflict_overwrite_never_retries(spark, cat):
     assert other.read(spark, "t").count() == 4  # winner's state intact
 
 
-def test_commit_mid_write_is_a_conflict(spark, cat):
+def test_commit_mid_write_is_a_conflict(spark, cat, monkeypatch):
     """A writer that commits while another commit is writing its data
     files wins the version: the other commit raises CommitConflictError
     instead of publishing a manifest merged over the winner's (an
     OVERWRITE would otherwise replace the winner's version silently)."""
     other = SnapshotCatalog(cat.root)
+    real = DataFrameWriter.parquet
+    raced = []
 
-    def racing_write():
-        other.commit(5, {"t": (spark.range(4), OVERWRITE)})
-        return spark.range(1)
+    def racing_write(self, path, *args, **kwargs):
+        if not raced:  # the other writer commits before our data lands
+            raced.append(path)
+            other.commit(5, {"t": (spark.range(4), OVERWRITE)})
+        return real(self, path, *args, **kwargs)
 
+    monkeypatch.setattr(DataFrameWriter, "parquet", racing_write)
     with pytest.raises(CommitConflictError):
-        cat.commit(6, {"t": (racing_write, OVERWRITE)})
+        cat.commit(6, {"t": (spark.range(1), OVERWRITE)})
     assert cat.current_version() == 3
     assert cat.current_round() == 5
     assert cat.read(spark, "t").count() == 4  # the winner's rows
 
 
-def test_parallel_write_failures_all_surface(spark, cat):
+def test_parallel_write_failures_all_surface(spark, cat, monkeypatch):
     """ADVICE r3: when several parallel table writes fail, every root
     cause must surface (ExceptionGroup), not one arbitrary exception —
     and no manifest may flip."""
 
-    def boom_a():
-        raise ValueError("write A failed")
+    real = DataFrameWriter.parquet
+    failures = {"bad_a": ValueError, "bad_b": KeyError}
 
-    def boom_b():
-        raise KeyError("write B failed")
+    def failing_write(self, path, *args, **kwargs):
+        table = Path(path).parent.name
+        if table in failures:
+            raise failures[table](f"write {table} failed")
+        return real(self, path, *args, **kwargs)
 
+    monkeypatch.setattr(DataFrameWriter, "parquet", failing_write)
     before = cat.current_version()
     with pytest.raises(ExceptionGroup) as ei:
         cat.commit(
             2,
             {
-                "bad_a": (boom_a, OVERWRITE),
-                "bad_b": (boom_b, OVERWRITE),
+                "bad_a": (spark.range(1), OVERWRITE),
+                "bad_b": (spark.range(2), OVERWRITE),
                 "ok": (spark.range(3), OVERWRITE),
             },
         )
@@ -293,6 +304,29 @@ def test_recorded_schema_reads_like_inference(spark, tmp_path):
         assert cat.read(spark, table).schema == inferred.schema, table
         assert cat.rows(table) == inferred.count(), table
     assert len(cat.manifest()["tables"]["results"]["paths"]) == 4
+
+
+def test_recorded_schema_quotes_names_and_nests(spark, cat):
+    """The recorded DDL survives keyword and backtick column names and
+    nested types, and reads back as inference does: every field,
+    element and value nullable."""
+    from pyspark.sql import types as T
+
+    schema = T.StructType([
+        T.StructField("order", T.IntegerType(), False),
+        T.StructField("a b`c", T.TimestampType()),
+        T.StructField("d", T.DecimalType(12, 3)),
+        T.StructField("arr", T.ArrayType(T.StructType([
+            T.StructField("from", T.LongType(), False)]), False)),
+        T.StructField("m", T.MapType(
+            T.StringType(), T.ArrayType(T.BinaryType()), False)),
+    ])
+    df = spark.createDataFrame([(1, None, None, [(2,)], {"k": [b"x"]})],
+                               schema)
+    cat.commit(2, {"nested": (df, OVERWRITE)})
+    read = cat.read(spark, "nested")
+    assert read.schema == _inferred(spark, cat, "nested").schema
+    assert read.collect() == df.collect()
 
 
 def test_manifest_without_schema_or_rows_reads(spark, cat, tmp_path):
